@@ -59,6 +59,7 @@ def connected_components(
     ).localCheckpoint()
     edges = (
         edges.union(edges.select(F.col("d").alias("s"), F.col("s").alias("d")))
+        .where(F.col("s").isNotNull())  # a null endpoint is no vertex
         .distinct()
         .localCheckpoint()
     )
@@ -117,6 +118,8 @@ def _driver_components(edges: DataFrame) -> DataFrame:
         a, b = r["s"], r["d"]
         if a not in parent:
             parent[a] = a
+        if b is None:  # a null endpoint: `a` stays labelled, no union
+            continue
         if b not in parent:
             parent[b] = b
         ra, rb = find(a), find(b)

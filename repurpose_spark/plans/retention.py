@@ -88,5 +88,7 @@ def expire_tier(
         "n_kept": n_keep,
         "n_dropped": n_total - n_keep,
     }
-    wh._commit(table, "expire", metrics)
+    # the rewrite replaced every file: its manifest must ride the commit
+    # (as compact_table's does), or the newest manifest names deleted files
+    wh._commit(table, "expire", {**metrics, **wh._snapshot_state(table)})
     return metrics

@@ -6,6 +6,10 @@ The reference appends per-cell netCDF files with busy-retry loops
 Iceberg gives optimistic-commit append snapshots, the Parquet twin gives
 ``partitionBy('cell_id')`` dynamic-partition appends.  All engine code
 talks to this class only, so swapping the backend is a config change.
+
+A current-state read of the Parquet twin is pinned to the table's last
+commit, as a catalog caches a table relation until ``REFRESH TABLE``:
+files changed behind the Warehouse API are not seen until the next commit.
 """
 
 from __future__ import annotations
@@ -51,6 +55,8 @@ class Warehouse:
         self.root = root
         self.catalog = catalog
         self.use_iceberg = bool(catalog) and _iceberg_available(spark)
+        # parquet twin: table -> (sidecar stat, current-state DataFrame)
+        self._pinned: dict = {}
         os.makedirs(root, exist_ok=True)
 
     def _ident(self, table: str) -> str:
@@ -247,14 +253,31 @@ class Warehouse:
         live at commit time (the sidecar is the manifest), so a snapshot
         read scans exactly those files; ``basePath`` keeps hive
         partition columns.  Iceberg: native ``snapshot-id`` read
-        (cluster-only; no runtime jar in this sandbox)."""
+        (cluster-only; no runtime jar in this sandbox).
+
+        Parquet twin, current state: the planned DataFrame (file listing
+        and schema) is pinned to the table's last commit, keyed on the
+        sidecar's inode, size and mtime, and reused until the next commit
+        changes it — a stream of per-cell reads plans the table once.
+        Files changed behind the Warehouse API are not seen until the
+        next commit; a table without a sidecar is re-planned every read."""
         if self.use_iceberg:
             r = self.spark.read
             if snapshot_id is not None:
                 r = r.option("snapshot-id", str(snapshot_id))
             return r.table(self._ident(table))
         if snapshot_id is None:
-            return self.spark.read.parquet(self.path(table))
+            try:
+                st = os.stat(self._meta(table))
+            except FileNotFoundError:
+                self._pinned.pop(table, None)
+                return self.spark.read.parquet(self.path(table))
+            key = (st.st_ino, st.st_size, st.st_mtime_ns)
+            hit = self._pinned.get(table)
+            if hit is None or hit[0] != key:
+                hit = (key, self.spark.read.parquet(self.path(table)))
+                self._pinned[table] = hit
+            return hit[1]
         # reconstruct the file state AS OF the target commit by replaying
         # manifests in commit order: full manifests (write/append/compact)
         # reset the state, batch DELTA manifests replace their own
@@ -588,6 +611,7 @@ class Warehouse:
         os.makedirs(os.path.dirname(self._meta(table)), exist_ok=True)
         with open(self._meta(table), "a") as f:
             f.write(buf)
+        self._pinned.pop(table, None)
 
     def snapshots(self, table: str) -> list:
         p = self._meta(table)

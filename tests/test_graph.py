@@ -35,6 +35,24 @@ def test_components_merges_two_clusters_via_bridge(spark):
     assert set(got.values()) == {1}
 
 
+def test_components_null_endpoint_paths_agree(spark):
+    """A null endpoint is no vertex: the driver union-find and the
+    distributed loop (forced by small_graph_max_edges=0) label the same
+    vertex set, and the edge's non-null end stays a singleton."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (5, None), (None, 6), (7, 8)],
+        "doc_a long, doc_b long",
+    )
+
+    def comps(**kw):
+        out = connected_components(pairs, **kw).collect()
+        return sorted((r["doc_id"], r["component"]) for r in out)
+
+    expect = [(1, 1), (2, 1), (3, 1), (5, 5), (6, 6), (7, 7), (8, 7)]
+    assert comps() == expect
+    assert comps(small_graph_max_edges=0) == expect
+
+
 def test_components_match_union_find_property(spark):
     """Randomized cross-check: Spark min-label propagation equals a
     pure-python union-find on the same edge list (12 seeded graphs)."""

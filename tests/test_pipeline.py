@@ -116,6 +116,25 @@ def test_apply_retention_policy(spark, seqs, tmp_path):
     assert wh.read(pipe.daily_table()).count() == n_daily
 
 
+def test_retention_commits_its_manifest(spark, seqs, tmp_path):
+    """Retention rewrites every file of the tier, so its commit must
+    carry the new manifest: after compact + retention, and again after
+    expire_snapshots, the newest snapshot reads back as the current state
+    and names no file that retention deleted."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    pipe = TierPipeline(spark, wh, CFG, job_id="t")
+    pipe.run(seqs, n_batches=2, pack=False)
+    pipe.compact()
+    pipe.apply_retention({"hourly": "2020-01-01 02:00:00"})
+    t = pipe.hourly_table()
+    for _ in range(2):
+        cur = wh.read(t)
+        snap = wh.read(t, snapshot_id=wh.snapshot_ids(t)[-1]).select(*cur.columns)
+        assert snap.exceptAll(cur).count() == 0
+        assert cur.exceptAll(snap).count() == 0
+        wh.expire_snapshots(t, keep_last=2)
+
+
 def test_retention_preserves_partition_layout_and_appends(spark, seqs, tmp_path):
     """expire_tier must rewrite with the live table's hive layout
     (batch_id=/cell_id=), so later batch appends land in a consistent
