@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from repurpose_spark.plans import cache
+
 __all__ = ["bigram_lift", "token_entropy", "trending_terms"]
 
 _WS = r"\s+"
@@ -83,14 +85,11 @@ def bigram_lift(
     # vocab-sized and consumed three times (two count joins + the
     # corpus total); persisted so the corpus is scanned exactly TWICE
     # (one bigram pass + one unigram pass) — unpersisted it re-derives
-    # per consumer (4+ scans, .explain-verified).  Same pattern as the
-    # curation survivor set; results should be materialized before
-    # long-lived reuse of the session frees the cache.
-    uni = (
+    # per consumer (4+ scans, .explain-verified).
+    uni = cache.persist(
         df.select(F.explode(_tokens(df, text_col)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
     )
     cb = (
         bigrams.groupBy("w1", "w2")

@@ -45,6 +45,7 @@ from repurpose_spark.functions.text import (
     quality_score,
 )
 from repurpose_spark.operators.dedup import dedup_minhash_lsh
+from repurpose_spark.plans import cache
 from repurpose_spark.plans.parallelism import ensure_parallelism
 
 
@@ -142,7 +143,7 @@ def curate_documents(
         # annotate→filter→dedup chain isn't recomputed per consumer —
         # the in-session analog of writing curated survivors to a table
         # between pipeline stages, which is what a 100 TB run would do.
-        exact = exact.persist()
+        exact = cache.persist(exact)
         pairs = dedup_minhash_lsh(
             exact,
             id_col=id_col,

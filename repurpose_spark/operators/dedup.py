@@ -26,6 +26,7 @@ from repurpose_spark.functions.text import (
     minhash_signature,
     simhash64,
 )
+from repurpose_spark.plans import cache
 from repurpose_spark.plans.parallelism import ensure_parallelism
 
 
@@ -293,50 +294,6 @@ def _write_dedup_index(
     ).parquet(path + "/shingles")
 
 
-# Bounded persist registry for probe candidate frames (same lifecycle
-# discipline as similarity._SIG_CACHE after the ADVICE r4 fix: keep the
-# last few generations so lazily-held results stay cached, bound the
-# leak from long-lived drivers).
-_CAND_CACHE: list = []
-_CAND_CACHE_LOCK = __import__("threading").Lock()
-_CAND_KEEP = 4  # 2 frames per probe call × 2 generations
-
-
-def _retire_cand_caches() -> None:
-    with _CAND_CACHE_LOCK:
-        doomed, _CAND_CACHE[:] = (
-            _CAND_CACHE[:-_CAND_KEEP],
-            _CAND_CACHE[-_CAND_KEEP:],
-        )
-    for df in doomed:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
-def _persist_lsh_front(base, banded, with_base: bool = True):
-    """Persist the LSH front end for the duration of one self-join query
-    (guide §2.4: remove recomputation outright).  Without this the
-    shingle+signature pipeline runs once per band-join side and the
-    shingle projection twice more for the verify legs — four corpus
-    passes where one suffices.  MEMORY_AND_DISK (the persist default)
-    spills at scale; the retire registry bounds long-lived drivers.
-    ``banded``'s plan contains ``base``'s subtree, so caching both means
-    signatures are computed once from the cached shingles.
-    ``with_base=False`` skips the shingle cache for callers that verify
-    on raw text instead of shingle arrays (edit_distance_pairs)."""
-    _retire_cand_caches()
-    if with_base:
-        base = base.persist()
-    banded = banded.persist()
-    with _CAND_CACHE_LOCK:
-        if with_base:
-            _CAND_CACHE.append(base)
-        _CAND_CACHE.append(banded)
-    return base, banded
-
-
 def _band_self_join(banded):
     """Candidate ids from the banded frame: (band, bucket) equi-self-join,
     ordered ids, deduped — carries ONLY (id, band, bucket).
@@ -405,14 +362,14 @@ def minhash_probe_indexed(
 
     k/bands/shingle_n/step/use_md5 MUST match the index build — the
     shared ``_minhash_base_bands`` front end guarantees byte-identical
-    keys when they do.  The candidates frame is persisted (it feeds both
-    the idb collect and the verify join); the registry keeps the last
-    ``_CAND_KEEP`` generations, mirroring similarity's cache fix."""
+    keys when they do.  The batch bands and the candidates frame are
+    persisted: each feeds a collect and the returned verify join."""
     base_n, band_n = _minhash_base_bands(
         new_docs, id_col, text_col, k, bands, shingle_n, step, use_md5
     )
-    band_n = band_n.withColumn("bprefix", _bucket_prefix(n_prefix))
-    band_n = band_n.persist()
+    band_n = cache.persist(
+        band_n.withColumn("bprefix", _bucket_prefix(n_prefix))
+    )
     probe_keys = [
         f"{r['band']}#{r['bprefix']}"
         for r in band_n.select("band", "bprefix").distinct().collect()
@@ -425,7 +382,7 @@ def minhash_probe_indexed(
         .where(part_key.isin(probe_keys))
     )
     n_side = F.broadcast(band_n) if broadcast_batch else band_n
-    cand_ids = (
+    cand_ids = cache.persist(
         n_side.alias("n")
         .join(
             idx_bands.alias("i"),
@@ -437,7 +394,6 @@ def minhash_probe_indexed(
             F.col("i.id").alias("index_id"),
         )
         .dropDuplicates(["new_id", "index_id"])
-        .persist()
     )
     idbs = [
         r[0]
@@ -447,9 +403,6 @@ def minhash_probe_indexed(
         .distinct()
         .collect()
     ]
-    with _CAND_CACHE_LOCK:
-        _CAND_CACHE.extend([band_n, cand_ids])
-    _retire_cand_caches()
     idx_sh = (
         spark.read.parquet(index_path + "/shingles")
         .where(F.col("idb").isin(idbs))
@@ -501,7 +454,9 @@ def dedup_minhash_lsh(
     base, banded = _minhash_base_bands(
         docs, id_col, text_col, k, bands, shingle_n, step, use_md5
     )
-    base, banded = _persist_lsh_front(base, banded, with_base=False)
+    # persisted: both band self-join sides read the signatures, which
+    # would otherwise be recomputed per side (guide §2.4)
+    banded = cache.persist(banded)
     cand_ids = _band_self_join(banded)
     cands = cand_ids.join(
         base.select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a")),
@@ -785,7 +740,7 @@ def edit_distance_pairs(
     base, banded = _minhash_base_bands(
         docs, id_col, text_col, k, bands, shingle_n, step, use_md5
     )
-    _, banded = _persist_lsh_front(base, banded, with_base=False)
+    banded = cache.persist(banded)
     cand_ids = _band_self_join(banded)
     texts = ensure_parallelism(docs).select(
         F.col(id_col).alias("id"), F.col(text_col).alias("txt")
@@ -957,7 +912,7 @@ def overlap_coeff_pairs(
     base, banded = _minhash_base_bands(
         docs, id_col, text_col, k, bands, shingle_n, step, use_md5
     )
-    base, banded = _persist_lsh_front(base, banded, with_base=False)
+    banded = cache.persist(banded)
     cand_ids = _band_self_join(banded)
     cands = cand_ids.join(
         base.select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a")),

@@ -76,74 +76,76 @@ def ingest_with_dedup(
         index_path = os.path.join(wh.root, f"{table}__dedup_index")
 
     n_in = new_docs.count()
-
-    # 1. within-batch exact dedup (min-id copy per fingerprint)
-    fp = new_docs.withColumn("__fp", fingerprint64(text_col))
-    exact = (
-        fp.withColumn(
-            "__keep", F.min(id_col).over(Window.partitionBy("__fp"))
+    exact = within = accepted = None
+    try:
+        # 1. within-batch exact dedup (min-id copy per fingerprint)
+        fp = new_docs.withColumn("__fp", fingerprint64(text_col))
+        exact = (
+            fp.withColumn(
+                "__keep", F.min(id_col).over(Window.partitionBy("__fp"))
+            )
+            .where(F.col(id_col) == F.col("__keep"))
+            .drop("__fp", "__keep")
+            .persist()
         )
-        .where(F.col(id_col) == F.col("__keep"))
-        .drop("__fp", "__keep")
-        .persist()
-    )
-    n_exact = exact.count()
+        n_exact = exact.count()
 
-    # 2. within-batch near dedup (greedy keep-first over verified pairs)
-    pairs = dedup_minhash_lsh(
-        exact, id_col=id_col, text_col=text_col, threshold=threshold, **mh
-    )
-    losers = pairs.select(F.col("doc_b").alias(id_col)).distinct()
-    within = exact.join(losers, id_col, "left_anti").persist()
-    n_within = within.count()
-
-    bootstrap = not wh.exists(table)
-    if bootstrap:
-        accepted, n_accepted = within, n_within
-    else:
-        # 3. probe the materialized history index (pruned scan, batch
-        # side broadcast; exact re-deliveries surface as jaccard 1.0)
-        hits = minhash_probe_indexed(
-            wh.spark,
-            index_path,
-            within,
-            id_col=id_col,
-            text_col=text_col,
-            threshold=threshold,
-            **mh,
+        # 2. within-batch near dedup (greedy keep-first over verified pairs)
+        pairs = dedup_minhash_lsh(
+            exact, id_col=id_col, text_col=text_col, threshold=threshold, **mh
         )
-        dup_ids = hits.select(F.col("new_id").alias(id_col)).distinct()
-        accepted = within.join(dup_ids, id_col, "left_anti").persist()
-        n_accepted = accepted.count()
-    metrics = {
-        "n_in": n_in,
-        "n_exact_dropped": n_in - n_exact,
-        "n_within_near_dropped": n_exact - n_within,
-        "n_history_near_dropped": n_within - n_accepted,
-        "n_accepted": n_accepted,
-    }
+        losers = pairs.select(F.col("doc_b").alias(id_col)).distinct()
+        within = exact.join(losers, id_col, "left_anti").persist()
+        n_within = within.count()
 
-    # 4. + 5. append accepted docs and their index rows (bootstrap
-    # creates both).  The table write commits the metrics as snapshot
-    # lineage; the index write uses the identical LSH family so the
-    # extended index equals a fresh build over the grown corpus.
-    if n_accepted:
+        bootstrap = not wh.exists(table)
         if bootstrap:
-            wh.write(accepted, table, mode="overwrite", metrics=metrics)
-            materialize_dedup_index(
-                accepted, index_path, id_col=id_col, text_col=text_col, **mh
-            )
+            accepted, n_accepted = within, n_within
         else:
-            wh.append(accepted, table, metrics=metrics)
-            append_dedup_index(
-                accepted, index_path, id_col=id_col, text_col=text_col, **mh
+            # 3. probe the materialized history index (pruned scan, batch
+            # side broadcast; exact re-deliveries surface as jaccard 1.0)
+            hits = minhash_probe_indexed(
+                wh.spark,
+                index_path,
+                within,
+                id_col=id_col,
+                text_col=text_col,
+                threshold=threshold,
+                **mh,
             )
-    elif wh.exists(table):
-        # all-duplicate batch: record the rejected ingest as lineage
-        wh._commit(table, "noop-ingest", metrics)
-    for df in (exact, within):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+            dup_ids = hits.select(F.col("new_id").alias(id_col)).distinct()
+            accepted = within.join(dup_ids, id_col, "left_anti").persist()
+            n_accepted = accepted.count()
+        metrics = {
+            "n_in": n_in,
+            "n_exact_dropped": n_in - n_exact,
+            "n_within_near_dropped": n_exact - n_within,
+            "n_history_near_dropped": n_within - n_accepted,
+            "n_accepted": n_accepted,
+        }
+
+        # 4. + 5. append accepted docs and their index rows (bootstrap
+        # creates both).  The table write commits the metrics as snapshot
+        # lineage; the index write uses the identical LSH family so the
+        # extended index equals a fresh build over the grown corpus.
+        if n_accepted:
+            if bootstrap:
+                wh.write(accepted, table, mode="overwrite", metrics=metrics)
+                materialize_dedup_index(
+                    accepted, index_path, id_col=id_col, text_col=text_col,
+                    **mh,
+                )
+            else:
+                wh.append(accepted, table, metrics=metrics)
+                append_dedup_index(
+                    accepted, index_path, id_col=id_col, text_col=text_col,
+                    **mh,
+                )
+        elif wh.exists(table):
+            # all-duplicate batch: record the rejected ingest as lineage
+            wh._commit(table, "noop-ingest", metrics)
+    finally:
+        for df in (exact, within, accepted):
+            if df is not None:
+                df.unpersist()
     return metrics

@@ -158,15 +158,19 @@ def interval_point_counts(
     on = list(on)
     id_cols = list(id_cols or [])
     s = F.col(sum_col) if sum_col is not None else F.lit(0)
+    # _n counts non-null sum values, so an interval whose values are all
+    # NULL sums to NULL, as the join's sum() does
     pts = points.groupBy(
         *on, F.col(ts_col).alias("_t")
     ).agg(
-        F.count(F.lit(1)).alias("_c"), F.sum(s).alias("_s")
+        F.count(F.lit(1)).alias("_c"), F.count(s).alias("_n"),
+        F.sum(s).alias("_s"),
     ).select(
         *on,
         "_t",
         F.lit(1).alias("_pr"),
         "_c",
+        "_n",
         "_s",
         F.lit(0).alias("_sign"),
         *[F.lit(None).cast(intervals.schema[c].dataType).alias(c)
@@ -180,6 +184,7 @@ def interval_point_counts(
             F.col(col).alias("_t"),
             F.lit(0).alias("_pr"),
             F.lit(0).cast("long").alias("_c"),
+            F.lit(0).cast("long").alias("_n"),
             F.lit(0).cast("long").alias("_s"),
             F.lit(sign).alias("_sign"),
             *id_cols,
@@ -201,6 +206,7 @@ def interval_point_counts(
         "_sign",
         "_pr",
         (F.col("_sign") * F.sum("_c").over(w)).alias("_dc"),
+        (F.col("_sign") * F.sum("_n").over(w)).alias("_dn"),
         (F.col("_sign") * F.sum("_s").over(w)).alias("_ds"),
     ).where(F.col("_pr") == 0)
     out = (
@@ -209,7 +215,7 @@ def interval_point_counts(
             F.coalesce(F.sum("_dc"), F.lit(0).cast("long")).alias(
                 count_alias
             ),
-            F.sum("_ds").alias(sum_alias),
+            F.when(F.sum("_dn") > 0, F.sum("_ds")).alias(sum_alias),
         )
         .where(F.col(count_alias) > 0)
     )

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from repurpose_spark.operators.cooccur import _tokens
+from repurpose_spark.plans import cache
 
 __all__ = ["bm25_scores"]
 
@@ -73,10 +74,8 @@ def bm25_scores(
     # from it) would otherwise each re-run the corpus scan — plan-
     # audited, this is what holds the query at TWO text scans total
     # (tf + the stats aggregate), the bigram_lift discipline
-    tf = (
-        hits.groupBy(id_col, "dl", "term")
-        .agg(F.count("*").alias("tf"))
-        .persist()
+    tf = cache.persist(
+        hits.groupBy(id_col, "dl", "term").agg(F.count("*").alias("tf"))
     )
 
     stats = docs.select(

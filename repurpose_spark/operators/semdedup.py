@@ -52,9 +52,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from repurpose_spark.plans import cache
+
 from .sampling import sample_hash_expr
-from .similarity import _SIG_CACHE, _SIG_CACHE_LOCK, _dot, _norm
-from .similarity import _retire_sig_caches
+from .similarity import _dot, _norm
 
 
 def seed_medoids(
@@ -196,15 +197,10 @@ def semantic_dedup(
     if lloyd_iters:
         seeds = refine_seeds(emb, seeds, lloyd_iters, id_col, vec_col)
     # the assignment frame feeds three plan legs (both self-join sides
-    # and the output); persist it and bound its lifetime through the
-    # similarity module's generation cache (ADVICE r4 low: a module
-    # cache must not strand / prematurely kill lazily-held results)
-    asg = assign_to_seeds(
-        emb.select(id_col, vec_col), seeds, id_col, vec_col
-    ).persist()
-    with _SIG_CACHE_LOCK:
-        _SIG_CACHE.append(asg)
-    _retire_sig_caches()
+    # and the output)
+    asg = cache.persist(
+        assign_to_seeds(emb.select(id_col, vec_col), seeds, id_col, vec_col)
+    )
     a = asg.select(
         F.col(id_col).alias("_aid"),
         F.col(vec_col).alias("_avec"),

@@ -17,6 +17,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from repurpose_spark.plans import cache
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -91,37 +93,6 @@ def _lsh_signature_range(vec_col: str, dim: int, lo: int, hi: int, seed: int):
     return sig
 
 
-_SIG_CACHE: list = []  # persisted signature frames from prior calls
-_SIG_CACHE_LOCK = __import__("threading").Lock()
-# How many prior calls' signature frames stay persisted.  1 would
-# unpersist the frame backing the PREVIOUS call's returned-but-not-yet-
-# executed DataFrame (silent recompute of its LSH probe work — ADVICE r4
-# low); keeping a couple of generations makes the common
-# build-then-materialize-later pattern safe while still bounding the
-# leak from long-lived drivers issuing many similarity calls.  Callers
-# interleaving >_SIG_KEEP similarity builds before materializing should
-# materialize (or .persist() themselves) first.
-_SIG_KEEP = 2
-
-
-def _retire_sig_caches() -> None:
-    """Unpersist signature frames persisted by OLDER near-dup / label-
-    vote calls (ADVICE r3 low #4: repeated calls leaked cached RDDs),
-    keeping the most recent ``_SIG_KEEP`` generations so lazily-held
-    results from recent calls don't lose their cache (ADVICE r4 low).
-    Lock-guarded: concurrent jobs on one driver mutate the list safely."""
-    with _SIG_CACHE_LOCK:
-        doomed, _SIG_CACHE[:] = (
-            _SIG_CACHE[:-_SIG_KEEP],
-            _SIG_CACHE[-_SIG_KEEP:],
-        )
-    for df in doomed:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
 def bound_lsh_buckets(
     sig_df: DataFrame,
     cap: int | None,
@@ -151,8 +122,9 @@ def bound_lsh_buckets(
     by the caller so the probe and the join sides share one computation.
     Each refinement round persists ITS refined frame and unpersists the
     predecessor once the new cache is seeded, so repeated rounds never
-    accumulate cached RDDs (ADVICE r3 low #4); the final frame is left
-    persisted for the caller's self-join.
+    accumulate cached RDDs (ADVICE r3 low #4); a refined final frame is
+    left persisted for the caller's self-join, registered with
+    :func:`repurpose_spark.plans.cache.persist`.
     """
     if cap is None:
         return sig_df
@@ -199,7 +171,7 @@ def bound_lsh_buckets(
         # cache before dropping the predecessor it derives from
         sig_df.count()
         prev.unpersist()
-    return sig_df
+    return sig_df if bits == n_planes else cache.persist(sig_df)
 
 
 def ivf_centroids(
@@ -329,12 +301,9 @@ def embedding_near_dup_pairs(
         lsh_signature(vec_col, dim, n_planes, seed).alias("sig"),
     )
     if max_bucket is not None:
-        _retire_sig_caches()
-        sig = sig.persist()
         sig = bound_lsh_buckets(
-            sig, max_bucket, n_planes, dim, vec_col="v", seed=seed
+            cache.persist(sig), max_bucket, n_planes, dim, "v", seed
         )
-        _SIG_CACHE.append(sig)
     cand = (
         sig.alias("a")
         .join(
@@ -514,12 +483,9 @@ def knn_label_vote(
         lsh_signature(vec_col, dim, n_planes, seed).alias("sig"),
     )
     if max_bucket is not None:
-        _retire_sig_caches()
-        sig = sig.persist()
         sig = bound_lsh_buckets(
-            sig, max_bucket, n_planes, dim, vec_col="v", seed=seed
+            cache.persist(sig), max_bucket, n_planes, dim, "v", seed
         )
-        _SIG_CACHE.append(sig)
     cand = (
         sig.alias("a")
         .join(
@@ -589,7 +555,8 @@ def int8_quantize_embeddings(
 
     Returns (id_col, codes array<int>, sse double) — sse the summed
     squared reconstruction error per vector, the quality metric a
-    storage-tier migration reports.
+    storage-tier migration reports.  A null vector gets null codes and
+    sse; array<double> input is coded in float64, never narrowed.
     """
     v = F.col(vec_col)
     aggs = [F.min(v[i]).alias(f"_mn{i}") for i in range(dim)] + [
@@ -635,14 +602,17 @@ def int8_quantize_embeddings(
         for b in batches:
             ids, vec = b.column(0), b.column(1)
             n = len(b)
+            null = np.asarray(vec.is_null())
             off = np.asarray(vec.offsets)
-            if n and (np.diff(off) < dim_).any():
+            if n and (np.diff(off)[~null] < dim_).any():
                 raise ValueError(
                     "int8_quantize_embeddings: vector shorter than dim"
                 )
-            vals = np.asarray(vec.values, dtype=np.float32)
-            idx = off[:-1, None] + np.arange(dim_)
-            x = vals[idx.reshape(-1)].astype(np.float64).reshape(n, dim_)
+            # float32 widens exactly; float64 input keeps its precision
+            vals = np.asarray(vec.values).astype(np.float64, copy=False)
+            # a null vector's row stays 0.0; its codes and sse are null
+            x = np.zeros((n, dim_))
+            x[~null] = vals[off[:-1][~null, None] + np.arange(dim_)]
             y = ((x - mn_np) * 255.0) / safe
             c0 = np.floor(y)
             c = (c0 + (y - c0 >= 0.5)).astype(np.int32)
@@ -656,10 +626,11 @@ def int8_quantize_embeddings(
             codes = pa.ListArray.from_arrays(
                 np.arange(0, (n + 1) * dim_, dim_, dtype=np.int32),
                 pa.array(c.reshape(-1), type=pa.int32()),
+                mask=pa.array(null),
             )
+            sse = pa.array(acc, type=pa.float64(), mask=null)
             yield pa.RecordBatch.from_arrays(
-                [ids, codes, pa.array(acc, type=pa.float64())],
-                names=[id_col, "codes", "sse"],
+                [ids, codes, sse], names=[id_col, "codes", "sse"]
             )
 
     # project to just the two needed columns before the Python boundary

@@ -10,8 +10,12 @@ asserted on the executed plan text.
 import datetime as dt
 
 import pytest
+from pyspark.sql import functions as F
 
-from repurpose_spark.operators.intervals import interval_join
+from repurpose_spark.operators.intervals import (
+    interval_join,
+    interval_point_counts,
+)
 
 
 def _ts(h, m=0, s=0, us=0):
@@ -179,3 +183,62 @@ class TestIntervalUnion:
         df = spark.createDataFrame([], "start timestamp, end timestamp")
         with pytest.raises(ValueError, match="by"):
             interval_union(df, by=())
+
+
+def _sweep_and_join(pts, ivs):
+    sweep = interval_point_counts(
+        pts, ivs, on=["k"], sum_col="v", id_cols=["iid"]
+    )
+    join = (
+        interval_join(pts, ivs, on=["k"], bucket_seconds=10)
+        .groupBy("iid")
+        .agg(F.count(F.lit(1)).alias("n_in"), F.sum("v").alias("sum_v"))
+    )
+    rows = lambda df: sorted(  # noqa: E731
+        tuple(r) for r in df.select("iid", "n_in", "sum_v").collect()
+    )
+    return rows(sweep), rows(join)
+
+
+def test_point_counts_null_sum_matches_join(spark):
+    """An interval whose points all carry NULL values sums to NULL, as
+    the join's sum() does; count still counts them."""
+    pts = spark.createDataFrame(
+        [("a", _ts(0, 0, 1), None), ("a", _ts(0, 0, 2), None),
+         ("a", _ts(0, 0, 5), 7)],
+        "k string, ts timestamp, v long",
+    )
+    ivs = spark.createDataFrame(
+        [("i0", "a", _ts(0, 0, 0), _ts(0, 0, 3)),
+         ("i1", "a", _ts(0, 0, 0), _ts(0, 0, 6))],
+        "iid string, k string, start timestamp, end timestamp",
+    )
+    sweep, join = _sweep_and_join(pts, ivs)
+    assert sweep == join == [("i0", 2, None), ("i1", 3, 7)]
+
+
+def test_point_counts_match_join_random_with_nulls(spark):
+    import random
+
+    rng = random.Random(2024)
+    pts = spark.createDataFrame(
+        [
+            (rng.choice("abc"), _ts(0, 0, rng.randrange(60)),
+             None if rng.random() < 0.5 else rng.randrange(-50, 50))
+            for _ in range(80)
+        ],
+        "k string, ts timestamp, v long",
+    )
+    ivs = []
+    for i in range(30):  # short windows, some empty or inverted
+        a = rng.randrange(2, 60)
+        b = a + rng.randrange(-2, 8)
+        ivs.append(
+            (f"i{i}", rng.choice("abc"), _ts(0, 0, a), _ts(0, *divmod(b, 60)))
+        )
+    ivs = spark.createDataFrame(
+        ivs, "iid string, k string, start timestamp, end timestamp"
+    )
+    sweep, join = _sweep_and_join(pts, ivs)
+    assert sweep == join
+    assert any(r[2] is None for r in sweep)  # the input exercises NULLs

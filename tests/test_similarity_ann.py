@@ -258,3 +258,32 @@ class TestInt8Quantize:
                int8_quantize_embeddings(df, dim=1).collect()}
         assert got[0] == 0 and got[10] == 255
         assert all(0 <= c <= 255 for c in got.values())
+
+    def test_double_input_keeps_float64(self, spark):
+        from repurpose_spark.operators.similarity import (
+            int8_quantize_embeddings,
+        )
+
+        # 0.7 + 3e-9 scales to 178.5000008 in float64 (code 179); a
+        # float32 narrowing rounds it to 0.7f and codes 178
+        x = 0.7 + 3e-9
+        rows = [(0, [0.0]), (1, [1.0]), (2, [x])]
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        got = {r["vec_id"]: r for r in
+               int8_quantize_embeddings(df, dim=1).collect()}
+        assert got[2]["codes"] == [179]
+        d = x - 179 * 1.0 / 255.0
+        assert got[2]["sse"] == d * d
+
+    def test_null_vector_gets_null_codes_and_sse(self, spark):
+        from repurpose_spark.operators.similarity import (
+            int8_quantize_embeddings,
+        )
+
+        rows = [(1, [0.0, 2.0]), (2, None), (3, [1.0, 4.0])]
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        got = {r["vec_id"]: r for r in
+               int8_quantize_embeddings(df, dim=2).collect()}
+        assert got[2]["codes"] is None and got[2]["sse"] is None
+        assert got[1]["codes"] == [0, 0] and got[3]["codes"] == [255, 255]
+        assert got[1]["sse"] == 0.0 and got[3]["sse"] == 0.0
