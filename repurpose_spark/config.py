@@ -5,11 +5,17 @@ The reference's knobs (cellsize, imgbuffer, n_proc — img2ts.py:117-124,
 cells), ``batch`` boundaries (checkpoint granularity), and Spark's own
 parallelism.  ``dt_seconds`` defines the derived per-token timestamp axis
 ``ts = epoch + pos * dt`` (SURVEY.md §7.0).
+
+Only what several operators must agree on lives here.  Knobs with one
+user are that user's arguments: salting is ``TierPipeline``'s
+(``hot_cell_threshold``, ``salt_buckets``), the collocation window is
+``collocate``'s ``tolerance_seconds``, storage is the ``Warehouse`` root
+and the session's parquet codec.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime, timezone
 
 EPOCH = datetime(2020, 1, 1, tzinfo=timezone.utc)
@@ -24,19 +30,6 @@ class EngineConfig:
     # derived time axis: token at position p of a doc gets ts = epoch + p*dt
     dt_seconds: int = 60
     epoch: str = EPOCH_STR
-    # retention tiers, coarsest last; trunc unit names match date_trunc()
-    tiers: tuple = (("raw", None), ("hourly", "hour"), ("daily", "day"))
-    # skew handling: cells whose row share exceeds this fraction get salted
-    skew_threshold: float = 0.05
-    salt_buckets: int = 8
-    # collocation window override; None = max tick gap (stack.py:282-283)
-    tolerance_seconds: int | None = None
-    # storage
-    warehouse: str = "/tmp/repurpose_spark_warehouse"
-    compression: str = "zstd"
-
-    def tier_units(self) -> list:
-        return [u for _, u in self.tiers if u is not None]
 
 
 DEFAULT = EngineConfig()

@@ -9,42 +9,25 @@ Compaction is the standard maintenance job (Iceberg: rewrite_data_files;
 Delta: OPTIMIZE): rewrite the same rows into ~target-sized files,
 preserving the partition layout, committed as a snapshot.
 
-Parquet twin mechanics: stage the compacted rewrite, then the same
-crash-safe rename swap retention uses (live → __old, staged → live,
-drop __old) — at no instant is the table missing.  The file count per
-partition comes from ``repartition(n, *partition_cols)``; n is sized
-from the table's current on-disk bytes / target_file_bytes (driver-side
-walk — the twin's analog of reading Iceberg's file-size metadata).
+Parquet twin mechanics: ``Warehouse.rewrite`` — the one whole-table
+rewrite retention also uses (staged files, crash-safe rename swap, one
+full manifest).  The file count per partition comes from
+``repartition(n, *partition_chain)``; n is sized from the table's live
+bytes / target_file_bytes (``Warehouse.live_files`` — the twin's analog
+of reading Iceberg's file-size metadata).
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import functions as F
 
-from repurpose_spark.plans.retention import _infer_partition_cols
 from repurpose_spark.sources.tables import Warehouse
-
-
-def table_file_stats(wh: Warehouse, table: str) -> dict:
-    """(n_files, total_bytes) of the live parquet data."""
-    base = wh.path(table)
-    n, b = 0, 0
-    for root, _dirs, names in os.walk(base):
-        for f in names:
-            if f.endswith(".parquet"):
-                n += 1
-                b += os.path.getsize(os.path.join(root, f))
-    return {"n_files": n, "total_bytes": b}
 
 
 def compact_table(
     wh: Warehouse,
     table: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    partition_by: list | None = None,
     sort_by: list | None = None,
     transform=None,
     zorder_by: list | None = None,
@@ -78,10 +61,8 @@ def compact_table(
         wh._commit(table, "compact", {"op": "compact"})
         return {"op": "compact"}
 
-    before = table_file_stats(wh, table)
-    live_data = wh.path(table)
-    if partition_by is None:
-        partition_by = _infer_partition_cols(live_data) or None
+    before = wh.live_files(table)
+    chain = wh.partition_chain(table)
     df = wh.read(table)
     if transform is not None:
         df = transform(df)
@@ -91,39 +72,24 @@ def compact_table(
             zorder_sort_key,
         )
 
-        bounds = parquet_footer_bounds(live_data, zorder_by)
+        bounds = parquet_footer_bounds(wh.path(table), zorder_by)
         # df=df (not None): a zorder column that is hive-partitioned has
         # no footer stats — those columns alone fall back to the agg scan
         sort_by = list(sort_by or []) + [
             zorder_sort_key(df, zorder_by, bounds=bounds)
         ]
-    n_out = max(1, -(-before["total_bytes"] // target_file_bytes))
-    if partition_by:
-        # hive layout: one shuffle keyed on the partition columns; files
-        # per partition ≈ n_out · (partition's share of rows)
-        df = df.repartition(n_out, *[F.col(c) for c in partition_by])
-    else:
-        df = df.repartition(n_out)
+    n_out = max(1, -(-sum(before.values()) // target_file_bytes))
+    # hive layout: one shuffle keyed on the partition chain; files per
+    # partition ≈ n_out · (partition's share of rows)
+    df = df.repartition(n_out, *[F.col(c) for c in chain])
     if sort_by:
         df = df.sortWithinPartitions(*sort_by)
-    staged = f"{table}__compacting"
-    wh.drop(staged)
-    wh.write(df, staged, partition_by=partition_by)
-    old = live_data + "__old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(live_data, old)
-    os.rename(wh.path(staged), live_data)
-    shutil.rmtree(old)
-    shutil.rmtree(os.path.dirname(wh.path(staged)), ignore_errors=True)
-    after = table_file_stats(wh, table)
-    metrics = {
+    # the commit carries the post-compact manifest: pre-compact snapshots
+    # expire (their files are gone — Iceberg keeps them until expiry),
+    # but the POST-compact state is time-travelable
+    return wh.rewrite(df, table, "compact", lambda files: {
         "op": "compact",
-        "files_before": before["n_files"],
-        "files_after": after["n_files"],
-        "bytes": after["total_bytes"],
-    }
-    # manifest rides the compact commit like write/append/batch commits:
-    # pre-compact snapshots expire (their files are gone — Iceberg keeps
-    # them until expiry), but the POST-compact state is time-travelable
-    wh._commit(table, "compact", {**metrics, **wh._snapshot_state(table)})
-    return metrics
+        "files_before": len(before),
+        "files_after": len(files),
+        "bytes": sum(files.values()),
+    })

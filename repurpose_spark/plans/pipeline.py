@@ -522,7 +522,6 @@ class TierPipeline:
                 self.wh,
                 table,
                 target_file_bytes,
-                partition_by=["batch_id", "cell_id"],
                 sort_by=sort_by,
                 transform=lambda df: df.withColumn(
                     "batch_id", F.lit(-1)

@@ -7,6 +7,11 @@ Iceberg gives optimistic-commit append snapshots, the Parquet twin gives
 ``partitionBy('cell_id')`` dynamic-partition appends.  All engine code
 talks to this class only, so swapping the backend is a config change.
 
+The Parquet twin's file-level decisions live here: every data commit
+records the table's partition chain and a file manifest (full, or a
+partition-scoped delta), and every whole-table rewrite (compaction,
+retention) goes through ``Warehouse.rewrite`` and its rename swap.
+
 A current-state read of the Parquet twin is pinned to the table's last
 commit, as a catalog caches a table relation until ``REFRESH TABLE``:
 files changed behind the Warehouse API are not seen until the next commit.
@@ -18,8 +23,11 @@ import json
 import os
 import shutil
 import time
+from functools import reduce
+from operator import and_, or_
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -114,7 +122,7 @@ class Warehouse:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(table))
         self._commit(
-            table, mode, {**(metrics or {}), **self._snapshot_state(table)}
+            table, mode, {**(metrics or {}), **self._manifest(table, partition_by)}
         )
 
     def append(self, df: DataFrame, table: str, partition_by: list | None = None,
@@ -169,25 +177,14 @@ class Warehouse:
             .partitionBy(*partition_by)
             .parquet(self.path(table))
         )
-        if touched_partitions is not None:
-            prefixes = sorted(
-                "/".join(f"{k}={row[k]}" for k in partition_by)
-                for row in touched_partitions
-            )
-            files: list = []
-            for p in prefixes:
-                files.extend(self._dir_files(table, p))
-            state = {
-                "snapshot_id": self._next_snapshot_id(table),
-                "partitions": prefixes,
-                "partition_files": sorted(files),
-            }
-        else:
-            state = self._snapshot_state(table)
+        prefixes = None if touched_partitions is None else [
+            "/".join(f"{k}={row[k]}" for k in partition_by)
+            for row in touched_partitions
+        ]
         self._commit(
             table,
             "overwrite_partitions",
-            {**(metrics or {}), **state},
+            {**(metrics or {}), **self._manifest(table, partition_by, prefixes)},
         )
 
     def write_batch_partition(
@@ -230,20 +227,63 @@ class Warehouse:
         # every batch write is a logged snapshot (reference: every append
         # gets a 000_log dir, img2ts.py:754) — batch-built tiers get the
         # same time-travel/lineage surface as write/append tables.
-        # DELTA manifest: only this batch's own files ride the commit —
-        # a full-table manifest per batch commit would be an O(table
-        # files) walk + sidecar line count QUADRATIC in n_batches (256
-        # batches × millions of files at design scale); readers
+        # DELTA manifest scoped to the batch's own ``batch_id=<b>``
+        # directory — a full-table manifest per batch commit would be an
+        # O(table files) walk + sidecar line count QUADRATIC in n_batches
+        # (256 batches × millions of files at design scale); readers
         # reconstruct the full state by replaying deltas (Iceberg's
         # incremental-manifest move)
         self._commit(
             table, "batch",
             {
                 "batch_id": batch_id,
-                "snapshot_id": self._next_snapshot_id(table),
-                "batch_files": self._dir_files(table, f"batch_id={batch_id}"),
+                **self._manifest(
+                    table, ["batch_id", *(partition_by or [])],
+                    [f"batch_id={batch_id}"],
+                ),
             },
         )
+
+    def rewrite(
+        self, df: DataFrame, table: str, mode: str, metrics=None
+    ) -> dict:
+        """Replace every row of ``table`` with ``df`` — the one
+        whole-table rewrite (compaction, retention).  Parquet twin only:
+        the Iceberg branches call the engine's own procedures.
+
+        ``df`` is written in the table's recorded partition chain to
+        ``data__staged`` beside the live ``data`` dir, then swapped in by
+        rename: live → ``data__old``, staged → live, delete old.  A crash
+        leaves the old or the new files in place, never neither.  ONE
+        full manifest is committed, carrying the chain and ``df``'s
+        schema: a rewrite that keeps no row writes no file, and ``read``
+        then serves that schema.
+
+        ``metrics``: fn(new live files {path: bytes}) -> the commit's
+        lineage fields, called after the write (so it may read the write
+        job's Observation); its result is returned."""
+        if self.use_iceberg:
+            raise NotImplementedError("Iceberg tables rewrite natively")
+        chain = self.partition_chain(table)
+        live = self.path(table)
+        staged, old = live + "__staged", live + "__old"
+        shutil.rmtree(staged, ignore_errors=True)
+        shutil.rmtree(old, ignore_errors=True)
+        w = df.write.mode("overwrite")
+        if chain:
+            w = w.partitionBy(*chain)
+        w.parquet(staged)
+        os.rename(live, old)
+        os.rename(staged, live)
+        shutil.rmtree(old)
+        files = self.live_files(table)
+        m = metrics(files) if metrics else {}
+        self._commit(
+            table, mode,
+            {**m, **self._manifest(table, chain, files=files),
+             "schema": df.schema.jsonValue()},
+        )
+        return m
 
     def read(self, table: str, snapshot_id: int | None = None) -> DataFrame:
         """Current table state, or — with ``snapshot_id`` — the table AS
@@ -275,26 +315,11 @@ class Warehouse:
             key = (st.st_ino, st.st_size, st.st_mtime_ns)
             hit = self._pinned.get(table)
             if hit is None or hit[0] != key:
-                hit = (key, self.spark.read.parquet(self.path(table)))
+                hit = (key, self._plan(table))
                 self._pinned[table] = hit
             return hit[1]
-        # reconstruct the file state AS OF the target commit by replaying
-        # manifests in commit order: full manifests (write/append/compact)
-        # reset the state, batch DELTA manifests replace their own
-        # batch_id=<b>/ subtree only
-        state = None
-        found = False
-        snaps = sorted(
-            (s for s in self.snapshots(table) if "snapshot_id" in s),
-            key=lambda s: s["snapshot_id"],
-        )
-        for s in snaps:
-            if s["snapshot_id"] > snapshot_id:
-                break
-            state = self._apply_manifest(state, s)
-            if s["snapshot_id"] == snapshot_id:
-                found = True
-        if not found or state is None:
+        state = self._replay(self.snapshots(table), snapshot_id)
+        if state is None:
             raise ValueError(
                 f"no file-tracked snapshot {snapshot_id} for {table!r}"
             )
@@ -315,6 +340,19 @@ class Warehouse:
             )
         return self.spark.read.option("basePath", base).parquet(*files)
 
+    def _plan(self, table: str) -> DataFrame:
+        """The current state as a listed parquet scan — or, when the
+        replayed manifests hold no file (a rewrite that kept no row), an
+        empty frame of the newest recorded schema, which a scan of a
+        file-less directory cannot infer."""
+        recs = self.snapshots(table)
+        schema = self._latest(recs, "schema")
+        if schema is not None and self._replay(recs) == []:
+            return self.spark.createDataFrame(
+                [], StructType.fromJson(schema)
+            )
+        return self.spark.read.parquet(self.path(table))
+
     def snapshot_ids(self, table: str) -> list:
         """Committed snapshot ids, oldest first (parquet twin)."""
         return [
@@ -323,24 +361,33 @@ class Warehouse:
             if "snapshot_id" in s
         ]
 
+    def partition_chain(self, table: str) -> list:
+        """The hive partition columns of ``table``, outermost first, as
+        its newest data commit recorded them — the layout is manifest
+        metadata, never re-derived from directory names."""
+        chain = self._latest(self.snapshots(table), "partition_by")
+        if chain is None:
+            raise ValueError(f"{table!r} has no committed partition chain")
+        return list(chain)
+
+    @staticmethod
+    def _latest(recs: list, key: str):
+        """The newest value of ``key`` among committed records, or None."""
+        return next((s[key] for s in reversed(recs) if key in s), None)
+
     @staticmethod
     def _apply_manifest(state: list | None, s: dict) -> list | None:
         """Replay ONE committed manifest line onto a file state.
 
-        Three manifest kinds (the parquet-twin analog of Iceberg's
-        manifest list): ``files`` — a full snapshot, resets the state
-        (write/append/compact/expire-checkpoint); ``batch_files`` — a
-        batch delta, replaces its own ``batch_id=<b>/`` subtree;
+        Two manifest kinds (the parquet-twin analog of Iceberg's manifest
+        list): ``files`` — a full snapshot, resets the state
+        (write/append/rewrite/expire-checkpoint);
         ``partitions``+``partition_files`` — a partition-scoped delta
-        (incremental overwrite_partitions), replaces exactly the listed
-        hive directories.  Non-manifest lineage rows pass through."""
+        (a batch's ``batch_id=<b>`` dir, an incremental
+        overwrite_partitions), replaces exactly the listed hive
+        directories.  Non-manifest lineage rows pass through."""
         if "files" in s:
             return list(s["files"])
-        if "batch_files" in s:
-            prefix = f"batch_id={s['batch_id']}/"
-            return [
-                f for f in (state or []) if not f.startswith(prefix)
-            ] + list(s["batch_files"])
         if "partition_files" in s:
             prefixes = tuple(p + "/" for p in s["partitions"])
             return [
@@ -348,36 +395,64 @@ class Warehouse:
             ] + list(s["partition_files"])
         return state
 
-    def _dir_files(self, table: str, subdir: str) -> list:
-        """Relative parquet paths under one subdirectory — O(that dir),
-        not O(table)."""
-        base = self.path(table)
-        root_dir = os.path.join(base, subdir)
-        files = []
-        for root, _dirs, names in os.walk(root_dir):
-            for n in names:
-                if n.endswith(".parquet"):
-                    files.append(
-                        os.path.relpath(os.path.join(root, n), base)
-                    )
-        files.sort()
-        return files
+    @classmethod
+    def _replay(cls, recs: list, upto: int | None = None) -> list | None:
+        """File state AS OF snapshot ``upto`` (the newest when None): the
+        manifests among ``recs`` replayed in commit order — full ones
+        reset the state, deltas replace their own directories.  None when
+        ``upto`` was never committed or no manifest tracks files."""
+        state, found = None, upto is None
+        for s in sorted(
+            (s for s in recs if "snapshot_id" in s),
+            key=lambda s: s["snapshot_id"],
+        ):
+            if upto is not None and s["snapshot_id"] > upto:
+                break
+            state = cls._apply_manifest(state, s)
+            found = found or s["snapshot_id"] == upto
+        return state if found else None
 
-    def _snapshot_state(self, table: str) -> dict:
-        """Manifest of the data files live right now + the next snapshot
-        id.  The walk is the parquet-twin analog of an Iceberg manifest
-        write — O(files) per commit, driver-side; the Iceberg branch
-        gets this natively from the commit itself."""
+    def live_files(self, table: str, subdir: str = "") -> dict:
+        """{path relative to the data dir: bytes} of the parquet files
+        under ``subdir`` — O(that dir), not O(table).  The one walk
+        behind every manifest and compaction's file counts: the
+        parquet-twin analog of an Iceberg manifest write, driver-side;
+        the Iceberg branch gets this natively from the commit itself."""
         base = self.path(table)
-        files = []
-        for root, _dirs, names in os.walk(base):
+        out = {}
+        for root, _dirs, names in os.walk(os.path.join(base, subdir)):
             for n in names:
                 if n.endswith(".parquet"):
-                    files.append(
-                        os.path.relpath(os.path.join(root, n), base)
-                    )
-        files.sort()
-        return {"snapshot_id": self._next_snapshot_id(table), "files": files}
+                    f = os.path.join(root, n)
+                    out[os.path.relpath(f, base)] = os.path.getsize(f)
+        return out
+
+    def _manifest(
+        self,
+        table: str,
+        partition_by: list | None,
+        prefixes: list | None = None,
+        files: dict | None = None,
+    ) -> dict:
+        """The manifest fields of a data commit: the next snapshot id,
+        the partition chain, and the live files — all of them (a full
+        manifest; ``files`` when the caller already walked them) or,
+        given ``prefixes``, only those under these hive directories (a
+        partition-scoped delta)."""
+        rec = {
+            "snapshot_id": self._next_snapshot_id(table),
+            "partition_by": list(partition_by or []),
+        }
+        if prefixes is None:
+            rec["files"] = sorted(
+                self.live_files(table) if files is None else files
+            )
+        else:
+            rec["partitions"] = sorted(prefixes)
+            rec["partition_files"] = sorted(
+                f for p in prefixes for f in self.live_files(table, p)
+            )
+        return rec
 
     def _next_snapshot_id(self, table: str) -> int:
         """Monotonic, not count-based — expire_snapshots drops old
@@ -390,42 +465,37 @@ class Warehouse:
         """Bound the sidecar: collapse every manifest older than the last
         ``keep_last`` snapshots into ONE checkpoint line holding the
         replayed file state at the cutoff (Iceberg's expire_snapshots
-        analog).  Later delta manifests keep replaying on top of the
-        checkpoint, so the current state is unaffected; snapshots before
-        the cutoff stop being travel targets.  Lineage/metrics rows
-        (no snapshot_id) are kept forever.  The rewrite is atomic
+        analog), plus the newest partition chain and schema the collapsed
+        lines recorded.  Later delta manifests keep replaying on top of
+        the checkpoint, so the current state is unaffected; snapshots
+        before the cutoff stop being travel targets.  Lineage/metrics
+        rows (no snapshot_id) are kept forever.  The rewrite is atomic
         (tmp + rename)."""
         recs = self.snapshots(table)
-        manifests = sorted(
-            (s for s in recs if "snapshot_id" in s),
-            key=lambda s: s["snapshot_id"],
-        )
-        if len(manifests) <= keep_last:
-            return {"expired": 0, "kept": len(manifests)}
-        cutoff = manifests[-keep_last]["snapshot_id"]
-        state: list | None = None
-        n_expired = 0
-        for s in manifests:
-            if s["snapshot_id"] > cutoff:
-                break
-            state = self._apply_manifest(state, s)
-            if s["snapshot_id"] < cutoff:
-                n_expired += 1
+        ids = sorted(s["snapshot_id"] for s in recs if "snapshot_id" in s)
+        if len(ids) <= keep_last:
+            return {"expired": 0, "kept": len(ids)}
+        cutoff = ids[-keep_last]
+        head = [s for s in recs if s.get("snapshot_id", cutoff + 1) <= cutoff]
         checkpoint = {
             "ts": time.time(),
             "table": table,
             "mode": "expire-checkpoint",
             "snapshot_id": cutoff,
-            "files": sorted(state or []),
+            "files": sorted(self._replay(head) or []),
         }
+        for k in ("partition_by", "schema"):
+            v = self._latest(head, k)
+            if v is not None:
+                checkpoint[k] = v
         others = [s for s in recs if "snapshot_id" not in s]
-        tail = [s for s in manifests if s["snapshot_id"] > cutoff]
+        tail = [s for s in recs if s.get("snapshot_id", cutoff) > cutoff]
         tmp = self._meta(table) + ".tmp"
         with open(tmp, "w") as f:
             for rec in others + [checkpoint] + tail:
                 f.write(json.dumps(rec) + "\n")
         os.replace(tmp, self._meta(table))
-        return {"expired": n_expired, "kept": keep_last}
+        return {"expired": len(head) - 1, "kept": keep_last}
 
     def merge_into(
         self,
@@ -487,18 +557,8 @@ class Warehouse:
             # empty updates frame: a no-op merge, not a write (and the
             # stable path's partition predicate would otherwise be empty)
             return {"n_updated": 0, "n_inserted": 0, "n_partitions": 0}
-        if keys_partition_stable:
-            cur = self.read(table)
-            pred = None
-            for row in touched:
-                clause = None
-                for k in partition_by:
-                    c = F.col(k) == F.lit(row[k])
-                    clause = c if clause is None else (clause & c)
-                pred = clause if pred is None else (pred | clause)
-            cur = cur.where(pred)
-        else:
-            cur = self.read(table)
+        cur = self.read(table)
+        if not keys_partition_stable:
             touched = [
                 r.asDict()
                 for r in cur.join(
@@ -510,23 +570,18 @@ class Warehouse:
                 .collect()
             ] + touched
             touched = [dict(t) for t in {tuple(sorted(d.items())) for d in touched}]
-            # scope the rewrite to the touched partitions (ADVICE r5
-            # medium): every row carrying a merge key lives in one of
-            # them by construction (the semi-join above found it), so
-            # filtering `cur` like the stable path keeps the dynamic
-            # overwrite partition-scoped and the delta manifest
-            # accurate — unscoped, the overwrite rewrote EVERY
-            # partition while the manifest listed only the touched
-            # ones, and replaying the merge's own snapshot read
-            # deleted files ("snapshot expired" immediately after).
-            pred = None
-            for row in touched:
-                clause = None
-                for k in partition_by:
-                    c = F.col(k) == F.lit(row[k])
-                    clause = c if clause is None else (clause & c)
-                pred = clause if pred is None else (pred | clause)
-            cur = cur.where(pred)
+        # scope the rewrite to the touched partitions (ADVICE r5 medium):
+        # every row carrying a merge key lives in one of them (by the
+        # stable-key contract, or because the semi-join above found it),
+        # so the dynamic overwrite stays partition-scoped and the delta
+        # manifest accurate — unscoped, the overwrite rewrote EVERY
+        # partition while the manifest listed only the touched ones, and
+        # replaying the merge's own snapshot read deleted files
+        # ("snapshot expired" immediately after).
+        cur = cur.where(reduce(or_, (
+            reduce(and_, (F.col(k) == F.lit(row[k]) for k in partition_by))
+            for row in touched
+        )))
         # duplicate merge keys would union verbatim into duplicate rows
         # (and corrupt n_inserted) where the Iceberg branch's MERGE INTO
         # raises a cardinality error — match that contract (ADVICE r5 low)

@@ -2,12 +2,18 @@
 
 from pyspark.sql import functions as F
 
-from repurpose_spark.plans.compaction import compact_table, table_file_stats
+from repurpose_spark.plans.compaction import compact_table
+from repurpose_spark.plans.retention import expire_tier
 from repurpose_spark.sources.tables import Warehouse
 
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
+
+
+def table_file_stats(wh, table):
+    files = wh.live_files(table)
+    return {"n_files": len(files), "total_bytes": sum(files.values())}
 
 
 def test_compact_reduces_files_keeps_rows_and_layout(spark, tmp_path):
@@ -168,3 +174,35 @@ def test_compact_commits_snapshot_manifest(spark, tmp_path):
     assert snap.count() == 100
     with _pytest.raises(ValueError, match="expired"):
         wh.read(t, snapshot_id=pre_ids[-1])
+
+
+def test_rewrites_leave_no_staging_and_commit_one_manifest(spark, tmp_path):
+    """compact_table and expire_tier rewrite through one Warehouse
+    primitive: nothing staged is left under the warehouse root, and each
+    adds exactly one manifest line to the live table's sidecar."""
+    import os
+
+    wh = Warehouse(spark, str(tmp_path))
+    t = "tt"
+    wh.write(
+        spark.range(40).select(
+            F.col("id").alias("k"), (F.col("id") % 4).alias("cell_id")
+        ).repartition(4),
+        t, partition_by=["cell_id"],
+    )
+    for rewrite in (
+        lambda: compact_table(wh, t),
+        lambda: expire_tier(wh, t, 10, tick_col="k"),
+    ):
+        lines, ids = len(wh.snapshots(t)), wh.snapshot_ids(t)
+        rewrite()
+        assert len(wh.snapshots(t)) == lines + 1
+        assert wh.snapshot_ids(t) == ids + [ids[-1] + 1]
+        assert os.listdir(tmp_path) == [t]
+        assert sorted(os.listdir(tmp_path / t)) == ["_snapshots.jsonl", "data"]
+    assert sorted(r["k"] for r in wh.read(t).collect()) == list(range(10, 40))
+    # the chain outlives expire_snapshots: its checkpoint line carries it
+    wh.expire_snapshots(t, keep_last=1)
+    compact_table(wh, t)
+    parts = [d for d in os.listdir(tmp_path / t / "data") if "=" in d]
+    assert sorted(parts) == [f"cell_id={c}" for c in range(4)]

@@ -86,6 +86,18 @@ def test_every_commit_replans(spark, tmp_path):
     assert _ks(wh, b) == [1, 2]
 
 
+def test_expire_tier_runs_only_its_write(spark, tmp_path):
+    """Retention counts kept and dropped rows on its rewrite's own write
+    job: after a pinned read, expire_tier launches one Spark job."""
+    wh = Warehouse(spark, str(tmp_path))
+    wh.write(_frame(spark, [1, 2, 3]), "t", partition_by=["cell"])
+    wh.read("t")
+    m, n_jobs = _jobs(spark, lambda: expire_tier(wh, "t", 2, tick_col="k"))
+    assert (m["n_kept"], m["n_dropped"]) == (2, 1)
+    assert n_jobs == 1
+    assert _ks(wh, "t") == [2, 3]
+
+
 def test_table_without_sidecar_is_relisted(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path))
     path = wh.path("raw")

@@ -163,6 +163,28 @@ def test_retention_preserves_partition_layout_and_appends(spark, seqs, tmp_path)
     assert {c for c in ("batch_id", "cell_id")} <= set(hourly.columns)
 
 
+def test_retention_past_all_data_keeps_tier_readable(spark, tmp_path):
+    """An expiry that drops every row writes no parquet file: the tier
+    must still read (zero rows, its columns), a second expiry must keep
+    the recorded batch_id/cell_id layout, and a later batch appends."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    t = "t_hourly"
+    rows = spark.createDataFrame(
+        [(c, "2020-01-01 01:00:00", 1) for c in range(3)],
+        "cell_id int, tick string, n_points long",
+    ).withColumn("tick", F.col("tick").cast("timestamp"))
+    wh.write_batch_partition(rows, t, 0, partition_by=["cell_id"])
+    cols = wh.read(t).columns
+    for _ in range(2):
+        assert expire_tier(wh, t, "2099-01-01")["n_kept"] == 0
+        left = wh.read(t)
+        assert left.columns == cols and left.count() == 0
+    wh.write_batch_partition(rows, t, 1, partition_by=["cell_id"])
+    assert sorted(
+        (r["batch_id"], r["cell_id"]) for r in wh.read(t).collect()
+    ) == [(1, 0), (1, 1), (1, 2)]
+
+
 def test_ledger_last_attempt_wins(spark, seqs, tmp_path):
     """A batch re-run must not double-count lineage: ledger_rows keeps
     only the newest cell row per (batch_id, cell_id)."""

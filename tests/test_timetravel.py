@@ -126,9 +126,10 @@ def test_batch_manifests_are_deltas(spark, tmp_path):
     assert len(recs) == 3
     for r in recs:
         assert "files" not in r
-        assert all(
+        assert r["partitions"] == [f"batch_id={r['batch_id']}"]
+        assert r["partition_files"] and all(
             f.startswith(f"batch_id={r['batch_id']}/")
-            for f in r["batch_files"]
+            for f in r["partition_files"]
         )
     # replayed state at the last snapshot covers all three batches
     full = wh.read(t, snapshot_id=wh.snapshot_ids(t)[-1])
