@@ -1622,7 +1622,6 @@ def q_ev_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     while event_type/tick/q/n_points byte-match."""
     from repurpose_spark.operators.rollup import (
         quantile_rows,
-        rollup_qsketch_from_partials,
         rollup_quantile_sketch,
     )
 
@@ -1630,9 +1629,7 @@ def q_ev_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = rollup_quantile_sketch(
         ev, "hour", "value", key_cols=["event_type"]
     )
-    daily = rollup_qsketch_from_partials(
-        hourly, "day", key_cols=["event_type"]
-    )
+    daily = rollup_from_partials(hourly, "day", key_cols=["event_type"])
     return quantile_rows(daily).select(
         "event_type", "tick", "q", "n_points", "value_est"
     )
@@ -1680,7 +1677,6 @@ def q_ev_daily_uniques_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantees are pytest-enforced (test_rollup.py)."""
     from repurpose_spark.operators.rollup import (
         rollup_distinct_sketch,
-        rollup_sketch_from_partials,
         with_distinct_estimate,
     )
 
@@ -1689,7 +1685,7 @@ def q_ev_daily_uniques_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, "hour", "user_id", key_cols=["event_type"]
     )
     daily = with_distinct_estimate(
-        rollup_sketch_from_partials(hourly, "day", key_cols=["event_type"])
+        rollup_from_partials(hourly, "day", key_cols=["event_type"])
     )
     return daily.select(
         "event_type", "tick", "n_points", "n_distinct_est"

@@ -21,9 +21,3 @@ def pos_ts_expr(pos: str | Column = "pos", dt_seconds: int = 60,
         F.unix_timestamp(F.lit(epoch).cast("timestamp"))
         + p.cast("long") * F.lit(dt_seconds)
     )
-
-
-def tick_floor(ts: str | Column, unit: str) -> Column:
-    """Truncate a timestamp to a tier tick ('hour', 'day', ...)."""
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return F.date_trunc(unit, c)

@@ -37,8 +37,12 @@ TimescaleDB companion of the HLL and KLL tiers.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from repurpose_spark.operators.rollup import group_fold, null_safe_on
 
 
 def _mg_fold(counts: dict, items, weights, m: int) -> None:
@@ -60,15 +64,6 @@ def _mg_fold(counts: dict, items, weights, m: int) -> None:
                 del counts[it]
 
 
-def _nsafe(left: DataFrame, right: DataFrame, cols: list):
-    """Null-safe equality join condition over shared column names."""
-    cond = None
-    for c in cols:
-        piece = left[c].eqNullSafe(right[c])
-        cond = piece if cond is None else cond & piece
-    return cond
-
-
 def topk_frequent(
     items_df: DataFrame,
     item_col: str,
@@ -79,70 +74,34 @@ def topk_frequent(
     """(keys…, item) frame → exact per-group top-k with tie-break
     (count desc, item asc) and the per-group ``guaranteed`` flag.
     Output: keys…, item_col, n, rnk, guaranteed."""
-    import pandas as pd
-
     key_cols = list(key_cols)
     gcols = key_cols
     slim = items_df.select(*key_cols, F.col(item_col).alias("_it"))
-    part_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in slim.schema.fields
-        if f.name != "_it"
-    ) + f", {item_col} string, est_n long"
 
-    def partials(batches):
-        from collections import Counter
+    def partial(d, grp):
+        d = {} if d is None else d
+        batch_counts = Counter(grp["_it"])
+        _mg_fold(d, batch_counts.keys(), batch_counts.values(), m)
+        return d
 
-        acc: dict[tuple, dict] = {}
-        for pdf in batches:
-            grouped = pdf.groupby(gcols, dropna=False, sort=False)
-            for key, grp in grouped:
-                kt = key if isinstance(key, tuple) else (key,)
-                d = acc.setdefault(kt, {})
-                batch_counts = Counter(grp["_it"])
-                _mg_fold(
-                    d, batch_counts.keys(), batch_counts.values(), m
-                )
-        rows = [
-            (*kt, it, n) for kt, d in acc.items() for it, n in d.items()
-        ]
-        if rows:
-            yield pd.DataFrame(rows, columns=gcols + [item_col, "est_n"])
+    def merge(d, grp):
+        # rows per group here are bounded by O(map partitions × m), so
+        # the per-task footprint is tiny
+        d = {} if d is None else d
+        _mg_fold(d, grp[item_col], grp["est_n"], m)
+        return d
 
-    def merge_partition(batches):
-        # one Python call per SHUFFLE PARTITION, dict-merging every
-        # group it holds — groupBy().applyInPandas would invoke Python
-        # once per (keys…) group (an Arrow round-trip each), which is
-        # O(cells × ticks) calls at scale; the repartition below gives
-        # the same all-partials-of-a-key-in-one-task guarantee.  Rows
-        # per group here are bounded by O(map partitions × m), so the
-        # per-task footprint is tiny (same argument as the KLL merge,
-        # rollup.py::_merge_qsketches).
-        accs: dict[tuple, dict] = {}
-        for pdf in batches:
-            for key, grp in pdf.groupby(gcols, dropna=False, sort=False):
-                kt = key if isinstance(key, tuple) else (key,)
-                d = accs.setdefault(kt, {})
-                _mg_fold(d, grp[item_col], grp["est_n"], m)
-        rows = [
-            (*kt, it, n) for kt, d in accs.items() for it, n in d.items()
-        ]
-        if rows:
-            yield pd.DataFrame(rows, columns=gcols + [item_col, "est_n"])
-
-    cands = (
-        slim.mapInPandas(partials, part_schema)
-        .repartition(*gcols)
-        .mapInPandas(merge_partition, part_schema)
-        .select(*gcols, item_col)
-    )
+    cands = group_fold(
+        slim, gcols, f"{item_col} string, est_n long", merge, dict.items,
+        partial,
+    ).select(*gcols, item_col)
 
     # exact verify: only candidate items aggregate — map-side combined,
     # O(groups × m) rows through the exchange regardless of raw volume.
     # Joins are NULL-SAFE: a NULL group key is a real group (GROUP BY
     # keeps it; plain equi-join would silently drop it).
     raw = slim.withColumnRenamed("_it", item_col)
-    semi_cond = _nsafe(raw, cands, gcols + [item_col])
+    semi_cond = null_safe_on(raw, cands, gcols + [item_col])
     exact = (
         raw.join(F.broadcast(cands), on=semi_cond, how="leftsemi")
         .groupBy(*gcols, item_col)
@@ -159,7 +118,7 @@ def topk_frequent(
     ).where(F.col("rnk") <= k)
     ranked = ranked_base.join(
         F.broadcast(t_alias),
-        on=_nsafe(ranked_base, t_alias, gcols),
+        on=null_safe_on(ranked_base, t_alias, gcols),
     ).select(
         *[ranked_base[c] for c in gcols],
         item_col, "n", "rnk", "_total",

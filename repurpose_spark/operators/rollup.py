@@ -11,19 +11,110 @@ tests/test_ts2img.py:170-177); here it is first-class.  Two scale rules:
 2. the groupBy keys start with ``cell_id`` so the tier tables inherit the
    cell partitioning and downstream per-cell consumers shuffle nothing.
 
-All aggregates are built-in JVM expressions (hash agg + map-side combine
-via Catalyst); no UDFs anywhere on this path.
+This module is the one place that says what a tier partial is and how
+it merges: :data:`PARTIALS` lists each column's raw aggregate and merge,
+and :func:`merge_tier` is the one partials → coarser merge the calendar
+tiers, the query router and the salted rollup all call.  Every partial
+but ``q_sketch`` is a built-in JVM aggregate (hash agg + map-side
+combine via Catalyst); the KLL ``q_sketch`` is folded in Python by
+:func:`group_fold`.
 """
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from repurpose_spark.config import EPOCH_STR
+from repurpose_spark.functions.qsketch import QuantileSketch
 
-MERGEABLE = ("n_points", "sum_v", "min_v", "max_v")
+# The tier-partial rule, stated once: column → (aggregate of raw values,
+# merge of finer partials).  ``q_sketch`` is the one partial built and
+# merged in Python (KLL, see _qsketch_tier and merge_tier).
+PARTIALS = {
+    "n_points": (lambda v, lg_k: F.count(v), F.sum),
+    "sum_v": (lambda v, lg_k: F.sum(v), F.sum),
+    "min_v": (lambda v, lg_k: F.min(v), F.min),
+    "max_v": (lambda v, lg_k: F.max(v), F.max),
+    "uniq_sketch": (
+        lambda v, lg_k: F.hll_sketch_agg(v, F.lit(lg_k)),
+        lambda c: F.hll_union_agg(c, F.lit(False)),
+    ),
+}
+# the exact partials every tier carries; the sketches are optional
+MERGEABLE = tuple(c for c in PARTIALS if c != "uniq_sketch")
+
+
+def raw_partials(value_col: str, cols=MERGEABLE, lg_k: int = 12) -> list:
+    """Aggregates building the tier partials ``cols`` from raw values of
+    ``value_col`` (``lg_k`` sizes the HLL ``uniq_sketch``)."""
+    return [PARTIALS[c][0](value_col, lg_k).alias(c) for c in cols]
+
+
+def seconds_bucket(
+    seconds: Column, width: int, epoch_sec: int, name: str = "tick"
+) -> tuple:
+    """Integer bucket: group on ``b = floor(seconds / width)`` and build
+    the tick ``epoch_sec + b * width`` only after aggregation — one
+    timestamp per group instead of one per input row.  Returns the
+    ``(group, tick)`` pair that :func:`bucketed` and :func:`merge_tier`
+    take."""
+    start = F.col("__b") * width
+    if epoch_sec:
+        start = F.lit(epoch_sec) + start
+    return (
+        F.floor(seconds / width).alias("__b"),
+        F.timestamp_seconds(start).alias(name),
+    )
+
+
+def _with_tick(df: DataFrame, key_cols: list, tick: Column | None) -> DataFrame:
+    """Swap the bucket column after ``key_cols`` for ``tick`` (None: the
+    bucket already is the tick)."""
+    if tick is None:
+        return df
+    return df.select(*key_cols, tick, *df.columns[len(key_cols) + 1:])
+
+
+def bucketed(
+    df: DataFrame, key_cols: list, aggs: list, group: Column, tick
+) -> DataFrame:
+    """``aggs`` per (keys…, group), the group then replaced by ``tick``."""
+    return _with_tick(df.groupBy(*key_cols, group).agg(*aggs), key_cols, tick)
+
+
+def merge_tier(
+    tier: DataFrame, key_cols: list, group: Column, tick=None
+) -> DataFrame:
+    """The one merge of tier partials into coarser buckets.
+
+    Groups ``tier`` on ``key_cols`` + ``group`` and merges every partial
+    column it carries by its :data:`PARTIALS` rule, in the tier's column
+    order; other columns (batch ids, salts) are dropped.  ``tick`` is
+    built after aggregation (see :func:`seconds_bucket`).  A ``q_sketch``
+    merges by KLL in :func:`group_fold` and joins back on the group keys
+    NULL-safely; a tier holding only ``n_points`` + ``q_sketch`` merges
+    through the KLL fold alone — no JVM aggregate, no join."""
+    key_cols = list(key_cols)
+    jvm_cols = [c for c in tier.columns if c in PARTIALS]
+    jvm = bucketed(
+        tier, key_cols, [PARTIALS[c][1](c).alias(c) for c in jvm_cols],
+        group, tick,
+    )
+    if "q_sketch" not in tier.columns:
+        return jvm
+    rows = _with_tick(
+        tier.select(*key_cols, group, "q_sketch", "n_points"), key_cols, tick
+    )
+    gcols = rows.columns[:-2]
+    qt = group_fold(rows, gcols, _KLL_OUT, _kll_merge, _kll_emit)
+    if jvm_cols == ["n_points"]:
+        return qt
+    return _join_sketch(jvm, qt.drop("n_points"), gcols)
 
 
 def rollup(
@@ -35,15 +126,9 @@ def rollup(
 ) -> DataFrame:
     """Finest rollup from raw points: one row per (keys, date_trunc(unit, ts))."""
     key_cols = list(key_cols)
-    return (
-        points.groupBy(*key_cols, F.date_trunc(unit, F.col(ts_col)).alias("tick"))
-        .agg(
-            F.count(value_col).alias("n_points"),
-            F.sum(value_col).alias("sum_v"),
-            F.min(value_col).alias("min_v"),
-            F.max(value_col).alias("max_v"),
-        )
-    )
+    return points.groupBy(
+        *key_cols, F.date_trunc(unit, F.col(ts_col)).alias("tick")
+    ).agg(*raw_partials(value_col))
 
 
 def rollup_points(
@@ -86,48 +171,24 @@ def rollup_points(
     epoch_sec = _epoch_seconds(epoch)
     if epoch_sec % unit_seconds != 0:
         raise ValueError("epoch must be aligned to the rollup unit")
-    bucket = F.floor(
-        (F.col(pos_col).cast("long") * dt_seconds) / unit_seconds
-    ).alias("__b")
-    aggs = [
-        F.count(value_col).alias("n_points"),
-        F.sum(value_col).alias("sum_v"),
-        F.min(value_col).alias("min_v"),
-        F.max(value_col).alias("max_v"),
-    ]
-    out_cols = ["n_points", "sum_v", "min_v", "max_v"]
-    if sketch_distinct:
-        # mergeable uniques partial (see rollup_distinct_sketch): the
-        # only way a non-key column's distinct count survives the
-        # partial+final tier architecture without raw re-reads
-        aggs.append(
-            F.hll_sketch_agg(value_col, F.lit(sketch_lg_k)).alias(
-                "uniq_sketch"
-            )
-        )
-        out_cols.append("uniq_sketch")
-    jvm = (
-        points.groupBy(*key_cols, bucket)
-        .agg(*aggs)
-        .select(
-            *key_cols,
-            F.timestamp_seconds(
-                F.lit(epoch_sec) + F.col("__b") * unit_seconds
-            ).alias("tick"),
-            *out_cols,
-        )
+    group, tick = seconds_bucket(
+        F.col(pos_col).cast("long") * dt_seconds, unit_seconds, epoch_sec
+    )
+    # uniq_sketch: the only way a non-key column's distinct count
+    # survives the partial+final tiers without raw re-reads
+    cols = MERGEABLE + (("uniq_sketch",) if sketch_distinct else ())
+    jvm = bucketed(
+        points, key_cols, raw_partials(value_col, cols, sketch_lg_k),
+        group, tick,
     )
     if not sketch_quantiles:
         return jvm
-    bucket_raw = F.floor(
-        (F.col(pos_col).cast("long") * dt_seconds) / unit_seconds
-    )
-    slim = points.select(
-        *key_cols,
-        F.timestamp_seconds(
-            F.lit(epoch_sec) + bucket_raw * unit_seconds
-        ).alias("tick"),
-        F.col(value_col).cast("double").alias("_v"),
+    slim = _with_tick(
+        points.select(
+            *key_cols, group, F.col(value_col).cast("double").alias("_v")
+        ),
+        key_cols,
+        tick,
     )
     qt = _qsketch_tier(slim, key_cols + ["tick"], sketch_q_k).drop(
         "n_points"  # jvm side already carries the exact count
@@ -150,40 +211,17 @@ def rollup_from_partials(
 ) -> DataFrame:
     """Coarser tier from a finer tier's mergeable partials (exact re-agg;
     a ``uniq_sketch`` column, when present, merges via HLL union, and a
-    ``q_sketch`` column via KLL merge — joined back on the group keys
-    since the KLL merge is an applyInPandas, not a JVM aggregate)."""
-    key_cols = list(key_cols)
-    aggs = [
-        F.sum("n_points").alias("n_points"),
-        F.sum("sum_v").alias("sum_v"),
-        F.min("min_v").alias("min_v"),
-        F.max("max_v").alias("max_v"),
-    ]
-    if "uniq_sketch" in tier.columns:
-        aggs.append(
-            F.hll_union_agg("uniq_sketch", F.lit(False)).alias("uniq_sketch")
-        )
-    jvm = (
-        tier.groupBy(*key_cols, F.date_trunc(unit, F.col(tick_col)).alias("tick"))
-        .agg(*aggs)
+    ``q_sketch`` column via KLL merge — see :func:`merge_tier`)."""
+    return merge_tier(
+        tier, key_cols, F.date_trunc(unit, F.col(tick_col)).alias("tick")
     )
-    if "q_sketch" not in tier.columns:
-        return jvm
-    qt = rollup_qsketch_from_partials(
-        tier, unit, key_cols=key_cols, tick_col=tick_col
-    ).drop("n_points")
-    return _join_sketch(jvm, qt, key_cols + ["tick"])
 
 
 def _join_sketch(jvm: DataFrame, qt: DataFrame, cols: list) -> DataFrame:
     """Join the sketch column back onto the JVM aggregates NULL-SAFELY:
     groupBy keeps NULL-keyed groups, so a plain equi-join would leave
     their q_sketch NULL and crash the first from_bytes downstream."""
-    cond = None
-    for c in cols:
-        piece = jvm[c].eqNullSafe(qt[c])
-        cond = piece if cond is None else cond & piece
-    return jvm.join(qt, on=cond, how="left").select(
+    return jvm.join(qt, on=null_safe_on(jvm, qt, cols), how="left").select(
         *[jvm[c] for c in jvm.columns], qt["q_sketch"]
     )
 
@@ -225,28 +263,7 @@ def rollup_distinct_sketch(
     key_cols = list(key_cols)
     return points.groupBy(
         *key_cols, F.date_trunc(unit, F.col(ts_col)).alias("tick")
-    ).agg(
-        F.hll_sketch_agg(distinct_col, F.lit(lg_k)).alias("uniq_sketch"),
-        F.count(distinct_col).alias("n_points"),
-    )
-
-
-def rollup_sketch_from_partials(
-    tier: DataFrame,
-    unit: str,
-    key_cols: list = ("cell_id",),
-    tick_col: str = "tick",
-) -> DataFrame:
-    """Coarser distinct tier from finer sketches — ``hll_union_agg``
-    merges without touching raw (sketch union is exact: the merged
-    registers equal the registers a direct coarse sketch would hold)."""
-    key_cols = list(key_cols)
-    return tier.groupBy(
-        *key_cols, F.date_trunc(unit, F.col(tick_col)).alias("tick")
-    ).agg(
-        F.hll_union_agg("uniq_sketch", F.lit(False)).alias("uniq_sketch"),
-        F.sum("n_points").alias("n_points"),
-    )
+    ).agg(*raw_partials(distinct_col, ("uniq_sketch", "n_points"), lg_k))
 
 
 def with_distinct_estimate(tier: DataFrame) -> DataFrame:
@@ -300,101 +317,90 @@ def rollup_quantile_sketch(
 
 def _qsketch_tier(slim: DataFrame, gcols: list, k: int) -> DataFrame:
     """Partial+final over a (gcols..., _v) frame: per-partition partial
-    sketches via mapInPandas (raw never shuffles), then a per-group
-    merge of the O(partitions × groups) blobs."""
-    import pandas as pd
+    sketches (raw never shuffles), then a per-group merge of the
+    O(partitions × groups) blobs."""
 
-    from repurpose_spark.functions.qsketch import QuantileSketch
+    def partial(state, grp):
+        sk = QuantileSketch(k) if state is None else state[0]
+        sk.update(grp["_v"].to_numpy(dtype=np.float64, na_value=np.nan))
+        return sk, sk.n
 
-    part_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in slim.schema.fields
-        if f.name != "_v"
-    ) + ", q_sketch binary, n_points long"
-
-    def partials(batches):
-        acc: dict[tuple, QuantileSketch] = {}
-        for pdf in batches:
-            for key, grp in pdf.groupby(gcols, dropna=False, sort=False):
-                kt = tuple(key) if isinstance(key, tuple) else (key,)
-                sk = acc.get(kt)
-                if sk is None:
-                    sk = acc[kt] = QuantileSketch(k)
-                sk.update(grp["_v"].to_numpy(dtype=np.float64, na_value=np.nan))
-        if acc:
-            yield pd.DataFrame(
-                [
-                    (*kt, sk.to_bytes(), sk.n)
-                    for kt, sk in acc.items()
-                ],
-                columns=gcols + ["q_sketch", "n_points"],
-            )
-
-    partial_df = slim.mapInPandas(partials, part_schema)
-    return _merge_qsketches(partial_df, gcols, part_schema)
+    return group_fold(slim, gcols, _KLL_OUT, _kll_merge, _kll_emit, partial)
 
 
-def _merge_qsketches(tier: DataFrame, gcols: list, schema: str) -> DataFrame:
-    """Hash-shuffle on the group keys, then ONE mapInPandas call per
-    shuffle partition that dict-merges every group it holds.  The
+# KLL partial state: (sketch, n_points).  The merge is sample- and
+# weight-preserving, so a daily sketch merged from hourly ones equals
+# (within rank error) a sketch built directly on the day's raw.
+_KLL_OUT = "q_sketch binary, n_points long"
+
+
+def _kll_merge(state, grp):
+    sk, n = (None, 0) if state is None else state
+    for b in grp["q_sketch"]:
+        other = QuantileSketch.from_bytes(bytes(b))
+        sk = other if sk is None else sk.merge(other)
+    return sk, n + int(grp["n_points"].sum())
+
+
+def _kll_emit(state):
+    return [(state[0].to_bytes(), state[1])]
+
+
+# ----------------------------------------------- Python partial+final fold
+def group_fold(
+    df: DataFrame, gcols: list, out: str, merge, emit, partial=None
+) -> DataFrame:
+    """Fold rows into one Python state per ``gcols`` group, partial+final.
+
+    ``partial(state, grp)`` folds one pandas group of a map partition's
+    raw rows into the group's state (``None`` on first sight), so raw
+    never shuffles; ``emit(state)`` gives the state's rows, tuples of
+    the ``out`` columns (DDL, appended to ``gcols``).  The emitted rows
+    hash-shuffle on ``gcols`` and ``merge(state, grp)`` folds them.
+    Without ``partial``, ``df`` already holds emitted rows (a finer
+    tier) and only the shuffle + merge run.
+
+    ONE mapInPandas call per partition folds every group it holds.  The
     obvious ``groupBy().applyInPandas`` spelling invokes Python once
     PER GROUP (one Arrow round-trip each) — measured 3-4x the whole
     query's wall at sf0.1's 3,600 hourly groups.  ``repartition(gcols)``
-    gives the same all-blobs-of-a-key-in-one-task guarantee with
+    gives the same all-rows-of-a-key-in-one-task guarantee with
     O(shuffle partitions) Python calls instead of O(groups); executor
-    memory holds one ~4 KB sketch per live group per task, the same
-    contract as the partials phase."""
+    memory holds one state per live group per task."""
     import pandas as pd
 
-    from repurpose_spark.functions.qsketch import QuantileSketch
-
-    def merge_partition(batches):
-        acc: dict[tuple, QuantileSketch] = {}
-        npts: dict[tuple, int] = {}
-        for pdf in batches:
-            for key, grp in pdf.groupby(gcols, dropna=False, sort=False):
-                kt = tuple(key) if isinstance(key, tuple) else (key,)
-                sk = acc.get(kt)
-                for b in grp["q_sketch"]:
-                    other = QuantileSketch.from_bytes(bytes(b))
-                    if sk is None:
-                        sk = other
-                    else:
-                        sk.merge(other)
-                acc[kt] = sk
-                npts[kt] = npts.get(kt, 0) + int(grp["n_points"].sum())
-        if acc:
-            yield pd.DataFrame(
-                [(*kt, sk.to_bytes(), npts[kt]) for kt, sk in acc.items()],
-                columns=gcols + ["q_sketch", "n_points"],
-            )
-
-    return tier.repartition(*gcols).mapInPandas(merge_partition, schema)
-
-
-def rollup_qsketch_from_partials(
-    tier: DataFrame,
-    unit: str,
-    key_cols: list = ("cell_id",),
-    tick_col: str = "tick",
-) -> DataFrame:
-    """Coarser percentile tier from finer sketches — merge is sample-
-    and weight-preserving, so the daily sketch equals (within rank
-    error) a sketch built directly on the day's raw."""
-    key_cols = list(key_cols)
-    coarse = tier.select(
-        *key_cols,
-        F.date_trunc(unit, F.col(tick_col)).alias("tick"),
-        "q_sketch",
-        "n_points",
-    )
-    gcols = key_cols + ["tick"]
+    gcols = list(gcols)
+    names = gcols + [c.split()[0] for c in out.split(",")]
     schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in coarse.schema.fields
-        if f.name not in ("q_sketch", "n_points")
-    ) + ", q_sketch binary, n_points long"
-    return _merge_qsketches(coarse, gcols, schema)
+        f"{c} {df.schema[c].dataType.simpleString()}" for c in gcols
+    ) + ", " + out
+
+    def fold(step):
+        def run(batches):
+            acc: dict[tuple, object] = {}
+            for pdf in batches:
+                for key, grp in pdf.groupby(gcols, dropna=False, sort=False):
+                    kt = key if isinstance(key, tuple) else (key,)
+                    acc[kt] = step(acc.get(kt), grp)
+            rows = [(*kt, *r) for kt, st in acc.items() for r in emit(st)]
+            if rows:
+                yield pd.DataFrame(rows, columns=names)
+
+        run.__name__ = step.__name__  # names the phase in query plans
+        return run
+
+    if partial is not None:
+        df = df.mapInPandas(fold(partial), schema)
+    return df.repartition(*gcols).mapInPandas(fold(merge), schema)
+
+
+def null_safe_on(left: DataFrame, right: DataFrame, cols: list) -> Column:
+    """NULL-safe equality join condition over shared column names: a
+    NULL group key is a real group (GROUP BY keeps it), which a plain
+    equi-join would silently drop."""
+    return reduce(
+        operator.and_, (left[c].eqNullSafe(right[c]) for c in cols)
+    )
 
 
 def quantile_rows(
@@ -405,8 +411,6 @@ def quantile_rows(
     'p99': .99}.  Labels are strings so exact-column alignment never
     trips on float bit patterns."""
     import pandas as pd
-
-    from repurpose_spark.functions.qsketch import QuantileSketch
 
     if qs is None:
         qs = {"p50": 0.5, "p90": 0.9, "p99": 0.99}

@@ -22,11 +22,11 @@ Two layers:
   that returns the keys whose row share exceeds ``threshold``.  At cluster
   scale this reads a tiny aggregate, never the raw data twice (feed it the
   finest tier, which is ~unit/dt smaller than raw points).
-* :func:`rollup_points_salted` / :func:`merge_partials` — the two-phase
-  aggregate.  Salt is derived from a *fine* column (``doc_id``) via
-  ``xxhash64`` so rows of a hot coarse key spread over ``buckets``
-  reducers; non-hot keys keep salt 0 (single partial each) so the merge
-  stage stays tiny.
+* :func:`rollup_points_salted` — the two-phase aggregate (salted
+  partials, then rollup.py's one partial merge on the true keys).  Salt
+  is derived from a *fine* column (``doc_id``) via ``xxhash64`` so rows
+  of a hot coarse key spread over ``buckets`` reducers; non-hot keys
+  keep salt 0 (single partial each) so the merge stage stays tiny.
 
 Note Spark's hash aggregation already does map-side partial aggregation,
 which absorbs skew when group cardinality is low; explicit salting is the
@@ -41,7 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from repurpose_spark.config import EPOCH_STR
-from repurpose_spark.operators.rollup import rollup_points
+from repurpose_spark.functions.cells import salt_expr
+from repurpose_spark.operators.rollup import merge_tier, rollup_points
 
 SALT = "__salt"
 
@@ -74,11 +75,9 @@ def salt_for(
     hot_keys: list | None = None,
     key_cols: list = ("cell_id",),
 ) -> F.Column:
-    """Salt expression: pmod(xxhash64(fine, 'salt'), buckets) for rows whose
-    coarse key is hot, 0 otherwise (None hot_keys = salt everything)."""
-    s = F.pmod(F.xxhash64(F.col(fine_col), F.lit("salt")), F.lit(buckets)).cast(
-        "int"
-    )
+    """Salt expression: ``salt_expr(fine, buckets)`` for rows whose coarse
+    key is hot, 0 otherwise (None hot_keys = salt everything)."""
+    s = salt_expr(fine_col, buckets)
     if hot_keys is None:
         return s
     if not hot_keys:
@@ -91,22 +90,6 @@ def salt_for(
             match = match & (F.col(k) == F.lit(row[k]))
         pred = pred | match
     return F.when(pred, s).otherwise(F.lit(0))
-
-
-def merge_partials(
-    partials: DataFrame,
-    key_cols: list = ("cell_id",),
-    tick_col: str = "tick",
-) -> DataFrame:
-    """Final phase: merge salted partials on the true keys (exact re-agg,
-    same tick — no re-truncation, unlike rollup_from_partials)."""
-    key_cols = list(key_cols)
-    return partials.groupBy(*key_cols, tick_col).agg(
-        F.sum("n_points").alias("n_points"),
-        F.sum("sum_v").alias("sum_v"),
-        F.min("min_v").alias("min_v"),
-        F.max("max_v").alias("max_v"),
-    )
 
 
 def ordered_export_salted(
@@ -173,4 +156,5 @@ def rollup_points_salted(
         dt_seconds=dt_seconds,
         epoch=epoch,
     )
-    return merge_partials(partial, key_cols=key_cols)
+    # same tick — the merge only collapses the salt
+    return merge_tier(partial, key_cols, F.col("tick"))

@@ -16,13 +16,6 @@ import pandas as pd
 MJD_EPOCH = pd.Timestamp("1858-11-17")  # reference units epoch, img2ts.py:86
 
 
-def xxhash64_cell(doc_ids, n_cells: int):
-    """Driver-side twin of cell_id_expr — delegated to Spark in tests
-    (xxhash64 has no pure-python twin here; tests derive the expected cell
-    from a 1-column Spark eval to keep the oracle honest)."""
-    raise NotImplementedError("use Spark to evaluate xxhash64; see tests")
-
-
 def oracle_points(seqs: pd.DataFrame, dt_seconds: int, epoch: str) -> pd.DataFrame:
     """Explode sequences into points (without cell_id)."""
     rows = []

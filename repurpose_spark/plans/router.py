@@ -34,7 +34,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from repurpose_spark.operators.rollup import MERGEABLE
+from repurpose_spark.operators.rollup import (
+    MERGEABLE,
+    bucketed,
+    merge_tier,
+    raw_partials,
+    seconds_bucket,
+)
 
 
 def choose_tier(bucket_seconds: int, resolutions: dict) -> str | None:
@@ -55,47 +61,6 @@ def choose_tier(bucket_seconds: int, resolutions: dict) -> str | None:
     return best
 
 
-def rollup_bucketed_from_partials(
-    tier: DataFrame,
-    bucket_seconds: int,
-    key_cols: list = ("cell_id", "doc_id"),
-    tick_col: str = "tick",
-) -> DataFrame:
-    """Arbitrary-width buckets from a tier's mergeable partials.
-
-    Unlike :func:`operators.rollup.rollup_from_partials` (calendar units
-    via ``date_trunc``), this buckets on integer unix-second arithmetic,
-    so any width — 6 h, 90 min, 3 d — works as long as the caller routed
-    correctly (the tier's resolution divides the width; UTC unix buckets
-    are midnight-aligned, so calendar-aligned widths coincide with
-    ``date_trunc``'s).  Carries a ``uniq_sketch`` HLL partial through the
-    merge when present, same as the calendar path.
-    """
-    key_cols = list(key_cols)
-    aggs = [
-        F.sum("n_points").alias("n_points"),
-        F.sum("sum_v").alias("sum_v"),
-        F.min("min_v").alias("min_v"),
-        F.max("max_v").alias("max_v"),
-    ]
-    if "uniq_sketch" in tier.columns:
-        aggs.append(
-            F.hll_union_agg("uniq_sketch", F.lit(False)).alias("uniq_sketch")
-        )
-    bucket = F.floor(
-        F.unix_timestamp(F.col(tick_col)) / F.lit(int(bucket_seconds))
-    ).alias("__b")
-    out = tier.groupBy(*key_cols, bucket).agg(*aggs)
-    carried = [c for c in out.columns if c not in key_cols + ["__b"]]
-    return out.select(
-        *key_cols,
-        F.timestamp_seconds(F.col("__b") * int(bucket_seconds)).alias(
-            tick_col
-        ),
-        *carried,
-    )
-
-
 def routed_rollup(
     bucket_seconds: int,
     tiers: dict,
@@ -109,9 +74,11 @@ def routed_rollup(
 
     ``tiers`` maps name → ``(tier_df, resolution_seconds)`` where each
     ``tier_df`` holds the MERGEABLE partial columns keyed by
-    ``key_cols + [tick_col]``.  Returns ``(DataFrame, source)`` where
-    ``source`` is the routed tier name or ``"raw"`` — callers (and
-    tests) can assert the route, not just the rows.
+    ``key_cols + [tick_col]``; ``uniq_sketch`` / ``q_sketch`` partials,
+    when present, merge along (rollup.py::merge_tier).  Returns
+    ``(DataFrame, source)`` where ``source`` is the routed tier name or
+    ``"raw"`` — callers (and tests) can assert the route, not just the
+    rows.
 
     When no tier divides the width, ``raw`` (point rows with ``ts_col``
     / ``value_col``) is aggregated directly; omitting it raises rather
@@ -127,40 +94,31 @@ def routed_rollup(
             raise ValueError(
                 f"tier {chosen!r} lacks mergeable partials: {missing}"
             )
-        return (
-            rollup_bucketed_from_partials(
-                df, bucket_seconds, key_cols=key_cols, tick_col=tick_col
-            ),
-            chosen,
-        )
+        return _merge_bucketed(df, bucket_seconds, key_cols, tick_col), chosen
     if raw is None:
         raise ValueError(
             f"no tier divides bucket_seconds={bucket_seconds} and no raw "
             "source was provided"
         )
     key_cols = list(key_cols)
-    bucket = F.floor(
-        F.unix_timestamp(F.col(ts_col)) / F.lit(int(bucket_seconds))
-    ).alias("__b")
-    out = raw.groupBy(*key_cols, bucket).agg(
-        F.count(value_col).alias("n_points"),
-        F.sum(value_col).alias("sum_v"),
-        F.min(value_col).alias("min_v"),
-        F.max(value_col).alias("max_v"),
+    group, tick = seconds_bucket(
+        F.unix_timestamp(F.col(ts_col)), int(bucket_seconds), 0, tick_col
     )
-    return (
-        out.select(
-            *key_cols,
-            F.timestamp_seconds(F.col("__b") * int(bucket_seconds)).alias(
-                tick_col
-            ),
-            "n_points",
-            "sum_v",
-            "min_v",
-            "max_v",
-        ),
-        "raw",
+    return bucketed(raw, key_cols, raw_partials(value_col), group, tick), "raw"
+
+
+def _merge_bucketed(
+    tier: DataFrame, bucket_seconds: int, key_cols: list, tick_col: str
+) -> DataFrame:
+    """Arbitrary-width buckets from a tier's partials: integer unix-second
+    buckets, so any width works once routed (the tier's resolution
+    divides it; UTC unix buckets are midnight-aligned, so calendar widths
+    coincide with ``date_trunc``'s).  Every partial the tier carries,
+    sketches included, merges by rollup.py's one rule."""
+    group, tick = seconds_bucket(
+        F.unix_timestamp(F.col(tick_col)), int(bucket_seconds), 0, tick_col
     )
+    return merge_tier(tier, key_cols, group, tick)
 
 
 def realtime_rollup(
@@ -211,11 +169,16 @@ def realtime_rollup(
             "directly from raw via routed_rollup instead"
         )
     tier_df, _res = tiers[chosen]
-    hist = rollup_bucketed_from_partials(
-        tier_df.where(F.unix_timestamp(F.col(tick_col)) < cut),
+    # the raw tail carries no sketch column, so neither does the history:
+    # only the exact partials are merged (callers needing a sketch must
+    # route fully-materialized ranges)
+    hist = _merge_bucketed(
+        tier_df.where(F.unix_timestamp(F.col(tick_col)) < cut).select(
+            *key_cols, tick_col, *MERGEABLE
+        ),
         bucket_seconds,
-        key_cols=key_cols,
-        tick_col=tick_col,
+        key_cols,
+        tick_col,
     )
     tail, _ = routed_rollup(
         bucket_seconds,
@@ -226,8 +189,4 @@ def realtime_rollup(
         value_col=value_col,
         tick_col=tick_col,
     )
-    # the raw tail carries no sketch column; align schemas by dropping
-    # partials the tail cannot produce (callers needing the sketch must
-    # route fully-materialized ranges)
-    hist = hist.select(*tail.columns)
     return hist.unionByName(tail), chosen

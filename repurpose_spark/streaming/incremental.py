@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from repurpose_spark.config import DEFAULT, EngineConfig
 from repurpose_spark.functions.cells import cell_id_expr
+from repurpose_spark.operators.rollup import MERGEABLE, raw_partials
 
 POINTS_SCHEMA = "doc_id string, ts timestamp, token int"
 
@@ -64,17 +65,8 @@ def incremental_hourly_rollup(
         .groupBy(
             "cell_id", "doc_id", F.window("ts", "1 hour").alias("w")
         )
-        .agg(
-            F.count("token").alias("n_points"),
-            F.sum("token").alias("sum_v"),
-            F.min("token").alias("min_v"),
-            F.max("token").alias("max_v"),
-        )
-        .select(
-            "cell_id", "doc_id",
-            F.col("w.start").alias("tick"),
-            "n_points", "sum_v", "min_v", "max_v",
-        )
+        .agg(*raw_partials("token"))
+        .select("cell_id", "doc_id", F.col("w.start").alias("tick"), *MERGEABLE)
     )
 
 
@@ -112,10 +104,7 @@ def incremental_uniques_rollup(
     return (
         ev.withWatermark("ts", watermark)
         .groupBy("event_type", F.window("ts", window).alias("w"))
-        .agg(
-            F.hll_sketch_agg("user_id", F.lit(lg_k)).alias("uniq_sketch"),
-            F.count("user_id").alias("n_points"),
-        )
+        .agg(*raw_partials("user_id", ("uniq_sketch", "n_points"), lg_k))
         .select(
             "event_type",
             F.col("w.start").alias("tick"),

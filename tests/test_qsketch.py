@@ -117,16 +117,14 @@ def _exact_by_group(ev):
 def test_tier_daily_from_hourly_within_rank_error(spark, tier_fixture):
     from repurpose_spark.operators.rollup import (
         quantile_rows,
-        rollup_qsketch_from_partials,
+        rollup_from_partials,
         rollup_quantile_sketch,
     )
 
     hourly = rollup_quantile_sketch(
         tier_fixture, "hour", "value", key_cols=["event_type"]
     )
-    daily = rollup_qsketch_from_partials(
-        hourly, "day", key_cols=["event_type"]
-    )
+    daily = rollup_from_partials(hourly, "day", key_cols=["event_type"])
     rows = quantile_rows(daily).collect()
     exact = _exact_by_group(tier_fixture)
     assert len(rows) == len(exact) * 3
@@ -136,6 +134,28 @@ def test_tier_daily_from_hourly_within_rank_error(spark, tier_fixture):
         q = {"p50": 0.5, "p90": 0.9, "p99": 0.99}[r.q]
         lo, hi = _rank_of(r.value_est, data)
         assert lo - 0.02 <= q <= hi + 0.02, (r, lo, hi)
+
+
+def test_kll_only_tier_merges_without_join(spark, tier_fixture):
+    """A tier holding only n_points + q_sketch merges through the KLL
+    fold alone: no JVM aggregate joined back, just the daily merge
+    (exchange → MapInPandas) on top of the hourly partial+final."""
+    import re
+
+    from repurpose_spark.operators.rollup import (
+        rollup_from_partials,
+        rollup_quantile_sketch,
+    )
+
+    hourly = rollup_quantile_sketch(
+        tier_fixture, "hour", "value", key_cols=["event_type"]
+    )
+    daily = rollup_from_partials(hourly, "day", key_cols=["event_type"])
+    assert daily.columns == ["event_type", "tick", "q_sketch", "n_points"]
+    plan = daily._jdf.queryExecution().executedPlan().toString()
+    assert re.findall(r"MapInPandas|Exchange|Join", plan) == [
+        "MapInPandas", "Exchange", "MapInPandas", "Exchange", "MapInPandas"
+    ]
 
 
 def test_tier_partition_layout_changes_bytes_not_bound(spark, tier_fixture):
@@ -166,7 +186,7 @@ def test_tier_partition_layout_changes_bytes_not_bound(spark, tier_fixture):
 def test_sketch_survives_parquet_roundtrip(spark, tier_fixture, tmp_path):
     from repurpose_spark.operators.rollup import (
         quantile_rows,
-        rollup_qsketch_from_partials,
+        rollup_from_partials,
         rollup_quantile_sketch,
     )
 
@@ -175,7 +195,7 @@ def test_sketch_survives_parquet_roundtrip(spark, tier_fixture, tmp_path):
     )
     path = str(tmp_path / "hourly_q")
     hourly.write.parquet(path)
-    daily = rollup_qsketch_from_partials(
+    daily = rollup_from_partials(
         spark.read.parquet(path), "day", key_cols=["event_type"]
     )
     rows = quantile_rows(daily).collect()

@@ -115,7 +115,7 @@ def test_distinct_sketch_tiers_merge_within_error(spark):
 
     from repurpose_spark.operators.rollup import (
         rollup_distinct_sketch,
-        rollup_sketch_from_partials,
+        rollup_from_partials,
         with_distinct_estimate,
     )
 
@@ -130,7 +130,7 @@ def test_distinct_sketch_tiers_merge_within_error(spark):
     )
     hourly = rollup_distinct_sketch(pts, "hour", "user").cache()
     daily_merged = with_distinct_estimate(
-        rollup_sketch_from_partials(hourly, "day")
+        rollup_from_partials(hourly, "day", key_cols=["cell_id"])
     )
     daily_direct = with_distinct_estimate(
         rollup_distinct_sketch(pts, "day", "user")
@@ -169,7 +169,7 @@ def test_distinct_sketch_survives_parquet_roundtrip(spark, tmp_path):
 
     from repurpose_spark.operators.rollup import (
         rollup_distinct_sketch,
-        rollup_sketch_from_partials,
+        rollup_from_partials,
         with_distinct_estimate,
     )
 
@@ -184,7 +184,9 @@ def test_distinct_sketch_survives_parquet_roundtrip(spark, tmp_path):
     p = str(tmp_path / "hourly")
     rollup_distinct_sketch(pts, "hour", "user").write.parquet(p)
     daily = with_distinct_estimate(
-        rollup_sketch_from_partials(spark.read.parquet(p), "day")
+        rollup_from_partials(
+            spark.read.parquet(p), "day", key_cols=["cell_id"]
+        )
     ).collect()
     assert len(daily) == 1
     est = daily[0]["n_distinct_est"]

@@ -143,6 +143,50 @@ def test_sketch_partial_carries_through_route(spark):
         assert abs(r["est"] - r["exact"]) <= max(2.0, 0.05 * r["exact"])
 
 
+def test_quantile_sketch_partial_carries_through_route(spark):
+    """A q_sketch KLL partial merges through the routed re-aggregation
+    exactly as through the calendar merge: a 1-day route from hourly
+    keeps the column, its n_points equal rollup_from_partials(day)'s,
+    and its estimates stay within rank error of the exact day values."""
+    import numpy as np
+
+    from repurpose_spark.operators.rollup import quantile_rows, rollup_points
+
+    # 2 groups × 3000 one-minute positions: two full days + 2 h, ~1440
+    # values per (group, day) — above k, so the daily merge compacts
+    pts = spark.range(6000).select(
+        (F.col("id") % 2).alias("grp"),
+        (F.col("id") / 2).cast("long").alias("pos"),
+        ((F.col("id") * 7919) % 1000).alias("v"),
+    )
+    hourly = rollup_points(
+        pts, 3600, key_cols=["grp"], value_col="v",
+        sketch_distinct=True, sketch_quantiles=True,
+    )
+    out, source = routed_rollup(
+        86400, {"hourly": (hourly, 3600)}, key_cols=["grp"]
+    )
+    assert source == "hourly"
+    assert "q_sketch" in out.columns
+    calendar = rollup_from_partials(hourly, "day", key_cols=["grp"])
+    n_cal = {(r["grp"], r["tick"]): r["n_points"] for r in calendar.collect()}
+    rows = quantile_rows(out).collect()
+    assert {(r["grp"], r["tick"]): r["n_points"] for r in rows} == n_cal
+    exact = {}
+    for i in range(6000):
+        exact.setdefault((i % 2, (i // 2) * 60 // 86400), []).append(
+            (i * 7919) % 1000
+        )
+    days = sorted({t for _, t in n_cal})
+    for r in rows:
+        data = np.sort(exact[(r["grp"], days.index(r["tick"]))])
+        assert r["n_points"] == len(data)
+        lo = np.searchsorted(data, r["value_est"], side="left") / len(data)
+        hi = np.searchsorted(data, r["value_est"], side="right") / len(data)
+        q = {"p50": 0.5, "p90": 0.9, "p99": 0.99}[r["q"]]
+        assert lo - 0.02 <= q <= hi + 0.02, (r, lo, hi)
+
+
 def _realtime_check(spark, wm):
     from repurpose_spark.plans.router import realtime_rollup
 
