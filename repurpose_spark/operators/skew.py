@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from repurpose_spark.config import EPOCH_STR
 from repurpose_spark.functions.cells import salt_expr
 from repurpose_spark.operators.rollup import merge_tier, rollup_points
+from repurpose_spark.plans.parallelism import write_partitions
 
 SALT = "__salt"
 
@@ -114,8 +115,7 @@ def ordered_export_salted(
     standard files-vs-stragglers trade).  Cold keys keep salt 0: one
     slice each, exactly the unsalted layout."""
     key_cols = list(key_cols)
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism * 2
+    n = num_partitions or write_partitions(df.sparkSession)
     parts = [F.col(c) for c in key_cols] + [
         salt_for(fine_col, buckets, hot_keys, key_cols)
     ]

@@ -11,16 +11,21 @@ preserving the partition layout, committed as a snapshot.
 
 Parquet twin mechanics: ``Warehouse.rewrite`` — the one whole-table
 rewrite retention also uses (staged files, crash-safe rename swap, one
-full manifest).  The file count per partition comes from
-``repartition(n, *partition_chain)``; n is sized from the table's live
-bytes / target_file_bytes (``Warehouse.live_files`` — the twin's analog
-of reading Iceberg's file-size metadata).
+full manifest).  A partitioned table is rewritten through
+``repartition(write_partitions, *partition_chain)``: the hash on the
+chain sends each partition value to one task, so every partition comes
+out as exactly ONE file, whatever its size — ``target_file_bytes`` sizes
+only unpartitioned tables (n = live bytes / target, from
+``Warehouse.live_files``, the twin's analog of Iceberg's file-size
+metadata).  Range-split files per partition would make the target real
+for partitioned tables too (ROADMAP).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from repurpose_spark.plans.parallelism import write_partitions
 from repurpose_spark.sources.tables import Warehouse
 
 
@@ -32,8 +37,9 @@ def compact_table(
     transform=None,
     zorder_by: list | None = None,
 ) -> dict:
-    """Rewrite ``table`` into ~target-sized files; returns before/after
-    file counts.  Iceberg branch: delegates to the engine's
+    """Rewrite ``table`` into one file per partition (partitioned
+    tables) or ~``target_file_bytes`` files (unpartitioned); returns
+    before/after file counts.  Iceberg branch: delegates to the engine's
     rewrite_data_files procedure (cluster-only).
 
     ``sort_by``: cluster rows within each output file by these columns
@@ -78,9 +84,11 @@ def compact_table(
         sort_by = list(sort_by or []) + [
             zorder_sort_key(df, zorder_by, bounds=bounds)
         ]
-    n_out = max(1, -(-sum(before.values()) // target_file_bytes))
-    # hive layout: one shuffle keyed on the partition chain; files per
-    # partition ≈ n_out · (partition's share of rows)
+    # hive layout: one shuffle keyed on the partition chain, one file
+    # per partition value on every core; unpartitioned: bytes-sized files
+    n_out = write_partitions(wh.spark) if chain else max(
+        1, -(-sum(before.values()) // target_file_bytes)
+    )
     df = df.repartition(n_out, *[F.col(c) for c in chain])
     if sort_by:
         df = df.sortWithinPartitions(*sort_by)

@@ -14,6 +14,9 @@ This is deliberately NOT a blanket ``repartition()`` — that would
 shuffle the full payload (text bytes) even when the scan is already
 wide, which at 100 TB is the single most expensive mistake an operator
 can make.
+
+``write_partitions`` is the other side: the width of the shuffle that
+clusters rows by their output partition before a ``partitionBy`` write.
 """
 
 from __future__ import annotations
@@ -31,3 +34,13 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     if current >= target:
         return df
     return df.repartition(target)
+
+
+def write_partitions(spark) -> int:
+    """Partition count of a keyed write's clustering shuffle
+    (``repartition(n, *partition_chain)`` before a ``partitionBy``
+    write): twice the cluster's cores.  Hashing on the chain still sends
+    each partition value to one task, so the write makes one file per
+    value; the explicit count keeps AQE from coalescing a small shuffle
+    into ONE task that writes every partition value alone."""
+    return 2 * spark.sparkContext.defaultParallelism

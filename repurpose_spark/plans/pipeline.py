@@ -39,7 +39,8 @@ from repurpose_spark.operators.rollup import (
     rollup_points,
     with_avg,
 )
-from repurpose_spark.sources.tables import Warehouse
+from repurpose_spark.plans.parallelism import write_partitions
+from repurpose_spark.sources.tables import Warehouse, schema_reader
 
 LEDGER = "_ledger"
 
@@ -172,7 +173,9 @@ class TierPipeline:
         The assignment is persisted in the ledger ('plan' rows) on first
         call and reused verbatim on resume, so a listing that changes
         mid-job (late-arriving files, compaction) can never shift batch
-        membership under a restarted run."""
+        membership under a restarted run.  The rows also carry the
+        input's schema, so every later batch read and increment listing
+        plans without a schema-inference job."""
         last_plan = self._ledgered_plan()
         if last_plan:
             # increment rows (run_incremental) carry n_batches=None and
@@ -187,7 +190,8 @@ class TierPipeline:
                 )
             return {b: r["files"] for b, r in last_plan.items()}
         # metadata-only listing (no data scan)
-        files = sorted(self.spark.read.parquet(input_path).inputFiles())
+        listed = self.spark.read.parquet(input_path)
+        files = sorted(listed.inputFiles())
         plan = self._assign_files(files, n_batches)
         self.wh._commit_many(
             self._ledger_table(),
@@ -199,6 +203,7 @@ class TierPipeline:
                     "n_batches": n_batches,
                     "input_path": input_path,
                     "files": fs,
+                    "schema": listed.schema.jsonValue(),
                 }
                 for b, fs in plan.items()
             ],
@@ -227,6 +232,16 @@ class TierPipeline:
             if r.get("status") == "plan":
                 last_plan[r["batch_id"]] = r
         return last_plan
+
+    def _input_reader(self, plan: dict):
+        """A parquet reader of the input carrying the schema the newest
+        ledgered plan row recorded; plain inference for a ledger written
+        without one."""
+        return schema_reader(self.spark, next(
+            (r["schema"] for _, r in sorted(plan.items(), reverse=True)
+             if "schema" in r),
+            None,
+        ))
 
     def run_incremental(
         self,
@@ -260,7 +275,8 @@ class TierPipeline:
         # or the coarser tiers stay silently incomplete
         stale = sorted(set(plan) - self._finalized_batches())
         known = {f for r in plan.values() for f in r["files"]}
-        listing = sorted(self.spark.read.parquet(input_path).inputFiles())
+        listed = self._input_reader(plan).parquet(input_path)
+        listing = sorted(listed.inputFiles())
         new = [f for f in listing if f not in known]
         orig_n = next(
             (
@@ -286,6 +302,7 @@ class TierPipeline:
                         "increment": True,
                         "input_path": input_path,
                         "files": fs,
+                        "schema": listed.schema.jsonValue(),
                     }
                     for k, fs in sub.items()
                 ],
@@ -425,11 +442,12 @@ class TierPipeline:
         """
         if (seqs is None) == (input_path is None):
             raise ValueError("pass exactly one of seqs= or input_path=")
-        plan = (
-            self.plan_batches(input_path, n_batches)
-            if input_path is not None
-            else None
-        )
+        plan = reader = None
+        if input_path is not None:
+            plan = self.plan_batches(input_path, n_batches)
+            reader = self._input_reader(self._ledgered_plan()).option(
+                "basePath", input_path
+            )
         # file mode iterates the LEDGERED plan's batch ids — they can
         # extend past n_batches when run_incremental appended new files
         batch_ids = sorted(plan) if plan is not None else range(n_batches)
@@ -448,9 +466,7 @@ class TierPipeline:
                     if fail_after_batch is not None and n_run >= fail_after_batch:
                         raise RuntimeError(f"injected crash after batch {b}")
                     continue
-                batch = self.spark.read.option(
-                    "basePath", input_path
-                ).parquet(*files)
+                batch = reader.parquet(*files)
             else:
                 batch = seqs.where(
                     F.pmod(
@@ -474,7 +490,7 @@ class TierPipeline:
             # Iceberg backend gets the same contract via
             # overwritePartitions (ADVICE r1: never bypass the abstraction)
             self.wh.write_batch_partition(
-                hourly.repartition("cell_id"),
+                hourly.repartition(write_partitions(self.spark), "cell_id"),
                 self.hourly_table(),
                 b,
                 partition_by=["cell_id"],
@@ -668,7 +684,9 @@ class TierPipeline:
                     hot_keys=hot,
                 )
             else:
-                df = df.repartition(F.col("cell_id"))
+                df = df.repartition(
+                    write_partitions(self.spark), F.col("cell_id")
+                )
             if incremental:
                 # the refresh knows its cell scope, so the commit records
                 # a partition-scoped delta manifest (O(refreshed cells'
@@ -732,11 +750,21 @@ class TierPipeline:
             # overlap them so the second tier's scan back-fills the
             # first's write tail (guide §2.6 — two jobs in flight is
             # enough to fill stragglers without fighting for cores)
+            # (each thread runs under the caller's job group,
+            # description and tags, as the caller's own jobs do).  Wrap
+            # each job separately: one wrap hands its threads ONE shared
+            # copy of the local properties, so a query ending on one
+            # thread would clear the other's SQL execution id
             from concurrent.futures import ThreadPoolExecutor
 
+            from pyspark.util import inheritable_thread_target
+
+            def inherit(job):
+                return inheritable_thread_target(self.spark)(job)
+
             with ThreadPoolExecutor(max_workers=2) as pool:
-                f_daily = pool.submit(_daily_job)
-                f_packed = pool.submit(_packed_job)
+                f_daily = pool.submit(inherit(_daily_job))
+                f_packed = pool.submit(inherit(_packed_job))
                 out = {"n_daily": f_daily.result(),
                        "n_packed": f_packed.result()}
         else:

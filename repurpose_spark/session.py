@@ -68,6 +68,12 @@ def get_spark(
             "2",
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # list up to 1024 sibling dirs (a tier's cell partitions) on the
+        # driver instead of in a Spark job: on local disk (local[4]) the
+        # driver lists 64/256/1024/4096 cell dirs in 15/23/82/333 ms, the
+        # job takes 0.38/0.96/3.4/14 s.  Object stores pay a round trip
+        # per dir, so a submitter there may lower it
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         # transient-IO resilience: the reference wraps every image read in
         # a retry loop (ImageBaseConnection, process.py:26-113, <=99
         # attempts); Spark's analog is task-level retry — a task that dies

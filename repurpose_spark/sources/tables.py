@@ -8,9 +8,10 @@ Iceberg gives optimistic-commit append snapshots, the Parquet twin gives
 talks to this class only, so swapping the backend is a config change.
 
 The Parquet twin's file-level decisions live here: every data commit
-records the table's partition chain and a file manifest (full, or a
-partition-scoped delta), and every whole-table rewrite (compaction,
-retention) goes through ``Warehouse.rewrite`` and its rename swap.
+records the table's partition chain, its read schema and a file manifest
+(full, or a partition-scoped delta), and every whole-table rewrite
+(compaction, retention) goes through ``Warehouse.rewrite`` and its rename
+swap.
 
 A current-state read of the Parquet twin is pinned to the table's last
 commit, as a catalog caches a table relation until ``REFRESH TABLE``:
@@ -27,7 +28,14 @@ from functools import reduce
 from operator import and_, or_
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
+
+
+def schema_reader(spark: SparkSession, schema: dict | None):
+    """``spark.read`` carrying a recorded schema (its JSON), so a parquet
+    scan plans without reading a footer; plain inference when None."""
+    r = spark.read
+    return r if schema is None else r.schema(StructType.fromJson(schema))
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -122,7 +130,8 @@ class Warehouse:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(table))
         self._commit(
-            table, mode, {**(metrics or {}), **self._manifest(table, partition_by)}
+            table, mode,
+            {**(metrics or {}), **self._manifest(table, df, partition_by)},
         )
 
     def append(self, df: DataFrame, table: str, partition_by: list | None = None,
@@ -184,7 +193,8 @@ class Warehouse:
         self._commit(
             table,
             "overwrite_partitions",
-            {**(metrics or {}), **self._manifest(table, partition_by, prefixes)},
+            {**(metrics or {}),
+             **self._manifest(table, df, partition_by, prefixes)},
         )
 
     def write_batch_partition(
@@ -238,7 +248,7 @@ class Warehouse:
             {
                 "batch_id": batch_id,
                 **self._manifest(
-                    table, ["batch_id", *(partition_by or [])],
+                    table, df, ["batch_id", *(partition_by or [])],
                     [f"batch_id={batch_id}"],
                 ),
             },
@@ -255,9 +265,9 @@ class Warehouse:
         ``data__staged`` beside the live ``data`` dir, then swapped in by
         rename: live → ``data__old``, staged → live, delete old.  A crash
         leaves the old or the new files in place, never neither.  ONE
-        full manifest is committed, carrying the chain and ``df``'s
+        full manifest is committed, carrying the chain and the read
         schema: a rewrite that keeps no row writes no file, and ``read``
-        then serves that schema.
+        still plans the table's columns from that schema.
 
         ``metrics``: fn(new live files {path: bytes}) -> the commit's
         lineage fields, called after the write (so it may read the write
@@ -279,9 +289,7 @@ class Warehouse:
         files = self.live_files(table)
         m = metrics(files) if metrics else {}
         self._commit(
-            table, mode,
-            {**m, **self._manifest(table, chain, files=files),
-             "schema": df.schema.jsonValue()},
+            table, mode, {**m, **self._manifest(table, df, chain, files=files)}
         )
         return m
 
@@ -300,7 +308,13 @@ class Warehouse:
         sidecar's inode, size and mtime, and reused until the next commit
         changes it — a stream of per-cell reads plans the table once.
         Files changed behind the Warehouse API are not seen until the
-        next commit; a table without a sidecar is re-planned every read."""
+        next commit; a table without a sidecar is re-planned every read.
+
+        Every read passes the schema its manifests recorded (as of
+        ``snapshot_id`` for time travel), so planning reads no parquet
+        footer — no schema-inference job, and a table whose rewrite kept
+        no row still reads with its columns.  Tables committed without a
+        recorded schema fall back to inference."""
         if self.use_iceberg:
             r = self.spark.read
             if snapshot_id is not None:
@@ -318,7 +332,8 @@ class Warehouse:
                 hit = (key, self._plan(table))
                 self._pinned[table] = hit
             return hit[1]
-        state = self._replay(self.snapshots(table), snapshot_id)
+        recs = self.snapshots(table)
+        state = self._replay(recs, snapshot_id)
         if state is None:
             raise ValueError(
                 f"no file-tracked snapshot {snapshot_id} for {table!r}"
@@ -338,20 +353,21 @@ class Warehouse:
                 "twin retains history across appends only; Iceberg "
                 "retains it until explicit expiry)"
             )
-        return self.spark.read.option("basePath", base).parquet(*files)
+        schema = self._latest(
+            [s for s in recs if s.get("snapshot_id", -1) <= snapshot_id],
+            "schema",
+        )
+        return schema_reader(self.spark, schema).option(
+            "basePath", base
+        ).parquet(*files)
 
     def _plan(self, table: str) -> DataFrame:
-        """The current state as a listed parquet scan — or, when the
-        replayed manifests hold no file (a rewrite that kept no row), an
-        empty frame of the newest recorded schema, which a scan of a
-        file-less directory cannot infer."""
-        recs = self.snapshots(table)
-        schema = self._latest(recs, "schema")
-        if schema is not None and self._replay(recs) == []:
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(schema)
-            )
-        return self.spark.read.parquet(self.path(table))
+        """The current state as a listed parquet scan of the newest
+        recorded schema.  The directory is listed, not the manifest's
+        file list: the listing is what the pin holds until the next
+        commit."""
+        schema = self._latest(self.snapshots(table), "schema")
+        return schema_reader(self.spark, schema).parquet(self.path(table))
 
     def snapshot_ids(self, table: str) -> list:
         """Committed snapshot ids, oldest first (parquet twin)."""
@@ -430,18 +446,30 @@ class Warehouse:
     def _manifest(
         self,
         table: str,
+        df: DataFrame,
         partition_by: list | None,
         prefixes: list | None = None,
         files: dict | None = None,
     ) -> dict:
-        """The manifest fields of a data commit: the next snapshot id,
-        the partition chain, and the live files — all of them (a full
-        manifest; ``files`` when the caller already walked them) or,
-        given ``prefixes``, only those under these hive directories (a
-        partition-scoped delta)."""
+        """The manifest fields of a data commit of ``df``: the next
+        snapshot id, the partition chain, the read schema and the live
+        files — all of them (a full manifest; ``files`` when the caller
+        already walked them) or, given ``prefixes``, only those under
+        these hive directories (a partition-scoped delta).
+
+        The read schema is what a scan of the table plans: ``df``'s data
+        columns, then the chain, all nullable.  A chain column ``df``
+        does not carry (a batch's ``batch_id``) is an int."""
+        chain = list(partition_by or [])
+        have = {f.name: f.dataType for f in df.schema}
+        schema = StructType([
+            StructField(f.name, f.dataType, True, f.metadata)
+            for f in df.schema if f.name not in chain
+        ] + [StructField(c, have.get(c, IntegerType()), True) for c in chain])
         rec = {
             "snapshot_id": self._next_snapshot_id(table),
-            "partition_by": list(partition_by or []),
+            "partition_by": chain,
+            "schema": schema.jsonValue(),
         }
         if prefixes is None:
             rec["files"] = sorted(

@@ -1,5 +1,7 @@
 """Small-file compaction: fewer files, identical rows, layout kept."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from repurpose_spark.plans.compaction import compact_table
@@ -88,6 +90,31 @@ def test_compact_sort_by_clusters_rowgroups(spark, tmp_path):
     for f in glob.glob(wh.path("t") + "/*.parquet"):
         ticks = pq.read_table(f, columns=["tick"])["tick"].to_pylist()
         assert ticks == sorted(ticks), f
+
+
+def test_compact_writes_one_file_per_cell_on_many_tasks(spark, tmp_path):
+    """A partitioned compaction makes exactly one file per partition
+    value — 64 cells, 64 files — and spreads the cells over several write
+    tasks (a written file's ``part-NNNNN`` is its task's partition), not
+    one task sized from the table's bytes."""
+    wh = Warehouse(spark, str(tmp_path))
+    t = "cells"
+    for b in range(2):
+        wh.write_batch_partition(
+            spark.range(6400).select(
+                F.col("id").alias("k"), (F.col("id") % 64).cast("int").alias("cell_id")
+            ).repartition(4),
+            t, b, partition_by=["cell_id"],
+        )
+    expect = _rows(wh.read(t).drop("batch_id"))
+    m = compact_table(
+        wh, t, transform=lambda df: df.withColumn("batch_id", F.lit(-1))
+    )
+    assert m["files_before"] > m["files_after"] == 64
+    files = wh.live_files(t)
+    assert len({os.path.dirname(f) for f in files}) == 64
+    assert len({os.path.basename(f).split("-")[1] for f in files}) > 1
+    assert _rows(wh.read(t).drop("batch_id")) == expect
 
 
 def test_pipeline_compact_collapses_batches(spark, tmp_path):

@@ -185,6 +185,40 @@ def test_retention_past_all_data_keeps_tier_readable(spark, tmp_path):
     ) == [(1, 0), (1, 1), (1, 2)]
 
 
+def test_recorded_schema_reads_as_inference(spark, seqs, tmp_path):
+    """Tier reads plan from the schema the manifests recorded; after a
+    run, an increment, compaction, retention and expiry every tier reads
+    the schema and rows a footer-inferring scan of its directory does."""
+    path = _write_input(spark, seqs, tmp_path, n_files=4)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    pipe = TierPipeline(spark, wh, CFG, job_id="t")
+
+    def same():
+        for table in (
+            pipe.hourly_table(), pipe.daily_table(), pipe.packed_table()
+        ):
+            got = wh.read(table)
+            want = spark.read.parquet(wh.path(table))
+            assert got.schema == want.schema, table
+            assert sorted(map(str, got.collect())) == sorted(
+                map(str, want.collect())
+            ), table
+
+    pipe.run(input_path=path, n_batches=2)
+    same()
+    synth_sequences(spark, N_DOCS + 40).where(
+        F.col("doc_id") >= f"doc{N_DOCS:08d}"
+    ).repartition(1).write.mode("append").parquet(path)
+    assert pipe.run_incremental(path)["n_new_files"] == 1
+    same()
+    pipe.compact()
+    same()
+    pipe.apply_retention({"hourly": "2020-01-01 02:00:00"})
+    same()
+    pipe.expire_snapshots(keep_last=2)
+    same()
+
+
 def test_ledger_last_attempt_wins(spark, seqs, tmp_path):
     """A batch re-run must not double-count lineage: ledger_rows keeps
     only the newest cell row per (batch_id, cell_id)."""
