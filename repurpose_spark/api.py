@@ -61,6 +61,9 @@ class Img2Ts:
         self.sketch_quantiles = sketch_quantiles
 
     def calc(self, pack: bool = True) -> dict:
+        """Run (or resume) the tier pipeline; returns
+        :meth:`TierPipeline.run`'s counts, which cover only the cells
+        this call refreshed (a finished job returns 0 for each)."""
         spark = (
             self.input_df.sparkSession
             if self.input_df is not None

@@ -8,7 +8,8 @@ parallelism.  ``dt_seconds`` defines the derived per-token timestamp axis
 
 Only what several operators must agree on lives here.  Knobs with one
 user are that user's arguments: salting is ``TierPipeline``'s
-(``hot_cell_threshold``, ``salt_buckets``), the collocation window is
+``salt_buckets`` (its hot-cell share is ``plans.pipeline``'s
+``HOT_CELL_THRESHOLD`` constant), the collocation window is
 ``collocate``'s ``tolerance_seconds``, storage is the ``Warehouse`` root
 and the session's parquet codec.
 """

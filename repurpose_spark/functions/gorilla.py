@@ -116,6 +116,10 @@ def dod_decode(buf: bytes) -> np.ndarray:
     (nblocks,) = struct.unpack_from("<I", buf, off)
     off += 4
     widths = list(buf[off : off + nblocks])
+    if not any(widths):
+        # every DoD value is zero (a regular stream: tier ticks, constant
+        # counts): v0 + d0·arange(n), with no bit unpacking
+        return v0 + d0 * np.arange(n, dtype=np.int64)
     off += nblocks
     m = n - 2  # number of DoD values
     zs = []
@@ -256,26 +260,9 @@ def encode_int_stream(s: pd.Series) -> pd.Series:
     return pd.Series(dod_encode_batch(list(s)), index=s.index)
 
 
-def dod_decode_fast(buf: bytes) -> np.ndarray:
-    """dod_decode with a regular-stream fast path: when every block width
-    is 0 (all DoD values zero — tier ticks, constant counts) the stream
-    is v0 + d0·arange(n), reconstructed without any bit unpacking."""
-    assert buf[:4] == MAGIC, "bad magic"
-    codec, n = struct.unpack_from("<BQ", buf, 4)
-    if codec != CODEC_DOD or n < 3:
-        return dod_decode(buf)
-    (v0,) = struct.unpack_from("<q", buf, 13)
-    (d0,) = struct.unpack_from("<q", buf, 21)
-    (nblocks,) = struct.unpack_from("<I", buf, 29)
-    widths = buf[33 : 33 + nblocks]
-    if any(widths):
-        return dod_decode(buf)
-    return v0 + d0 * np.arange(n, dtype=np.int64)
-
-
 @F.pandas_udf(ArrayType(LongType()))
 def decode_int_stream(s: pd.Series) -> pd.Series:
-    return s.map(lambda b: dod_decode_fast(bytes(b)))
+    return s.map(lambda b: dod_decode(bytes(b)))
 
 
 def xor_encode_batch(arrays: list) -> list:

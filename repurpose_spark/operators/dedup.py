@@ -27,7 +27,10 @@ from repurpose_spark.functions.text import (
     simhash64,
 )
 from repurpose_spark.plans import cache
-from repurpose_spark.plans.parallelism import ensure_parallelism
+from repurpose_spark.plans.parallelism import (
+    ensure_parallelism,
+    write_partitions,
+)
 
 
 def dedup_exact(
@@ -284,12 +287,15 @@ def _write_dedup_index(
     base, banded = _minhash_base_bands(
         docs, id_col, text_col, k, bands, shingle_n, step, use_md5
     )
+    # one write task per partition value, over write_partitions tasks
+    # (with no count AQE coalesces the shuffle into ONE writing task)
+    n = write_partitions(docs.sparkSession)
     bands_df = banded.withColumn("bprefix", _bucket_prefix(n_prefix))
-    bands_df.repartition(F.col("band"), F.col("bprefix")).write.mode(
+    bands_df.repartition(n, F.col("band"), F.col("bprefix")).write.mode(
         mode
     ).partitionBy("band", "bprefix").parquet(path + "/bands")
     sh_df = base.withColumn("idb", _id_bucket(F.col("id"), n_id_buckets))
-    sh_df.repartition(F.col("idb")).write.mode(mode).partitionBy(
+    sh_df.repartition(n, F.col("idb")).write.mode(mode).partitionBy(
         "idb"
     ).parquet(path + "/shingles")
 

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from repurpose_spark.plans import cache
+from repurpose_spark.plans.parallelism import write_partitions
 
 
 def _dot(a, b):
@@ -362,10 +363,11 @@ def materialize_ann_index(
     # it each bucket is written by one task → one right-sized file per
     # partition dir (measured: the build SCALED NEGATIVELY 2→8 cores
     # before, 0.19 efficiency, because file-creation overhead grew with
-    # parallelism)
-    df.repartition(*[F.col(c) for c in parts]).write.mode(
-        "overwrite"
-    ).partitionBy(*parts).parquet(path)
+    # parallelism).  The explicit count keeps AQE from coalescing the
+    # shuffle into one task that writes every bucket alone
+    df.repartition(
+        write_partitions(emb.sparkSession), *[F.col(c) for c in parts]
+    ).write.mode("overwrite").partitionBy(*parts).parquet(path)
 
 
 def _query_sig(query_vec: list, n_planes: int, seed: int = 7) -> int:

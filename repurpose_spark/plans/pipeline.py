@@ -18,7 +18,10 @@ rerun over the remaining date range by hand.  Here the unit is a **batch**
   properties.
 * coarser tiers (daily, packed) are derived from the hourly partials only
   after all batches are complete — the partial+final architecture, so raw
-  points are exploded and shuffled exactly once per batch.
+  points are exploded and shuffled exactly once per batch — and only for
+  the cells of batches no finalize has covered yet, so a run with nothing
+  new never re-derives a cell from the hours retention has left (see
+  ``TierPipeline.finalize``).
 
 At cluster scale a batch bounds the working set exactly like imgbuffer
 bounds memory ("chosen so that the memory of your machine is utilized",
@@ -43,6 +46,9 @@ from repurpose_spark.plans.parallelism import write_partitions
 from repurpose_spark.sources.tables import Warehouse, schema_reader
 
 LEDGER = "_ledger"
+# a cell holding more than this share of a refresh's points is hot:
+# finalize fans its tier writes over ``salt_buckets`` slices
+HOT_CELL_THRESHOLD = 0.2
 
 
 def lpt_assign(files: list, sizes: dict, n_batches: int) -> dict:
@@ -77,7 +83,6 @@ class TierPipeline:
         postprocess: list | None = None,
         sketch_distinct: bool = False,
         sketch_quantiles: bool = False,
-        hot_cell_threshold: float = 0.2,
         salt_buckets: int = 16,
     ):
         """``postprocess``: F2 hooks — fn(DataFrame) -> DataFrame applied
@@ -98,9 +103,9 @@ class TierPipeline:
         (incremental refresh, compaction, expiry) treats it as any
         other mergeable partial column.
 
-        ``hot_cell_threshold`` / ``salt_buckets``: finalize's clustered
-        tier writes fan any cell holding more than ``threshold`` of the
-        refresh scope's points over ``salt_buckets`` write slices
+        ``salt_buckets``: finalize's clustered tier writes fan any cell
+        holding more than ``HOT_CELL_THRESHOLD`` of the refresh scope's
+        points over ``salt_buckets`` write slices
         (operators.skew.ordered_export_salted) — without this a 30 %-hot
         cell funnels through ONE task's sort (BENCH_SKEW.json measured
         1.35× at 21 % skew, growing with hot share; VERDICT r4 #1).
@@ -112,7 +117,6 @@ class TierPipeline:
         self.postprocess = postprocess or []
         self.sketch_distinct = sketch_distinct
         self.sketch_quantiles = sketch_quantiles
-        self.hot_cell_threshold = hot_cell_threshold
         self.salt_buckets = salt_buckets
 
     # -- ledger --------------------------------------------------------------
@@ -210,20 +214,28 @@ class TierPipeline:
         )
         return plan
 
-    def _finalized_batches(self) -> set:
+    def _finalized_batches(self, packed: bool = False) -> set:
         """Batches whose cells a finalize has provably folded into the
-        derived tiers — the last 'finalize' ledger row's batch set.  A
-        full finalize covers every batch done at commit time; a partial
-        (cells=...) refresh extends the previous coverage with the
-        batches it refreshed.  The row commits AFTER the tier writes, so
-        a crash mid-finalize leaves its batches uncovered and the next
-        increment re-refreshes them (idempotent)."""
+        daily tier (``packed=True``: into the packed tier) — the last
+        'finalize' ledger row's batch set for that tier.  Each finalize
+        extends the previous coverage with the batches it refreshed.  The
+        tiers keep separate sets because ``pack`` is per call: a
+        ``pack=False`` finalize covers daily only, so a later
+        ``pack=True`` one still builds packed from every batch.  The row
+        commits AFTER the tier writes, so a crash mid-finalize leaves its
+        batches uncovered and the next finalize refreshes them again
+        (idempotent)."""
         rows = [
             r
             for r in self.wh.snapshots(self._ledger_table())
             if r.get("status") == "finalize"
         ]
-        return set(rows[-1]["batches"]) if rows else set()
+        if not rows:
+            return set()
+        # a row written before the tiers had separate sets claims both
+        last = rows[-1]
+        return set(last.get("packed", last["batches"]) if packed
+                   else last["batches"])
 
     def _ledgered_plan(self) -> dict:
         """Last plan row per batch_id (original run + any increments)."""
@@ -255,10 +267,13 @@ class TierPipeline:
         re-run over the new date range and appends to the same cells,
         img2ts.py:798-802).  New files become NEW batches (ids continue
         past the originals), committed to the ledger plan before any
-        processing, then the normal resumable loop runs them and
-        re-derives the daily/packed tiers (overwrite — idempotent).
-        Already-planned batches are untouched: their ledger 'done'
-        markers skip them, so an increment never re-reads old data.
+        processing; then the normal resumable :meth:`run` processes them
+        and its finalize refreshes the daily/packed partitions of the
+        cells they touched.  Already-planned batches are untouched: their
+        ledger 'done' markers skip them, so an increment never re-reads
+        old data.  With no new file it is a plain resume: unfinished
+        batches complete, and a finalize with nothing pending writes
+        nothing.
 
         ``files_per_batch`` sizes the new batches (default: the original
         run's files-per-batch average, so increments inherit the same
@@ -268,12 +283,6 @@ class TierPipeline:
             raise ValueError(
                 "no ledgered batch plan; run(input_path=...) first"
             )
-        # batches whose data committed but whose cells never reached the
-        # derived tiers (a crash anywhere before a finalize covering
-        # them — ADVICE r3 medium #1: 'done' alone does not imply the
-        # batch is in daily/packed): they must join the partial refresh
-        # or the coarser tiers stay silently incomplete
-        stale = sorted(set(plan) - self._finalized_batches())
         known = {f for r in plan.values() for f in r["files"]}
         listed = self._input_reader(plan).parquet(input_path)
         listing = sorted(listed.inputFiles())
@@ -307,52 +316,13 @@ class TierPipeline:
                     for k, fs in sub.items()
                 ],
             )
-            new_ids = [next_id + k for k in sub]
-            out = self.run(
-                input_path=input_path,
-                n_batches=orig_n,
-                fail_after_batch=fail_after_batch,
-                pack=pack,
-                _finalize=False,
-            )
-            # continuous-aggregate refresh: only cells the new batches —
-            # plus any earlier batches no finalize has covered yet —
-            # touched get their daily/packed partitions recomputed.  The
-            # affected-cell set comes from the LEDGER's per-cell lineage
-            # rows, not a batch_id filter on the hourly tier: compact()
-            # remaps completed batches' partitions to batch_id=-1, so a
-            # compaction landing in the crash-before-finalize window
-            # would make stale batches match no hourly rows — their cells
-            # silently dropped from the refresh while the coverage row
-            # still claimed them (ADVICE r4 medium).  Ledger rows survive
-            # compaction by construction; no Spark job needed either.
-            refresh_ids = new_ids + stale
-            want = set(refresh_ids)
-            affected = sorted(
-                {
-                    r["cell_id"]
-                    for r in self.ledger_rows()
-                    if r.get("status") == "cell" and r["batch_id"] in want
-                }
-            )
-            out.update(
-                self.finalize(
-                    pack=pack, cells=affected, covered_batches=refresh_ids
-                )
-            )
-            out["n_refreshed_cells"] = len(affected)
-        else:
-            # nothing new: complete any unfinished planned batches and do
-            # a FULL finalize — also heals a crash that landed between an
-            # increment's batch commits and its partial refresh
-            out = self.run(
-                input_path=input_path,
-                n_batches=orig_n,
-                fail_after_batch=fail_after_batch,
-                pack=pack,
-            )
-        out["n_new_files"] = len(new)
-        return out
+        out = self.run(
+            input_path=input_path,
+            n_batches=orig_n,
+            fail_after_batch=fail_after_batch,
+            pack=pack,
+        )
+        return {**out, "n_new_files": len(new)}
 
     def _assign_files(self, files: list, n_batches: int) -> dict:
         """Size-balanced assignment: greedy longest-processing-time over
@@ -424,7 +394,6 @@ class TierPipeline:
         fail_after_batch: int | None = None,
         pack: bool = True,
         input_path: str | None = None,
-        _finalize: bool = True,
     ) -> dict:
         """Process all batches (skipping ledgered ones), then finalize.
 
@@ -439,6 +408,11 @@ class TierPipeline:
 
         ``fail_after_batch`` aborts after N batch commits — test hook for
         the crash/resume contract.
+
+        Returns :meth:`finalize`'s counts, which cover only the cells
+        this call refreshed: ``n_daily``/``n_packed`` rows written and
+        ``n_refreshed_cells``.  Re-running a finished job refreshes
+        nothing and returns 0 for each.
         """
         if (seqs is None) == (input_path is None):
             raise ValueError("pass exactly one of seqs= or input_path=")
@@ -456,63 +430,62 @@ class TierPipeline:
         for b in batch_ids:
             if b in done:
                 continue
-            if plan is not None:
-                files = plan.get(b, [])
-                if not files:
-                    # fewer files than batches: ledger the empty batch so
-                    # resume still converges
-                    self._commit_batch(b, [])
-                    n_run += 1
-                    if fail_after_batch is not None and n_run >= fail_after_batch:
-                        raise RuntimeError(f"injected crash after batch {b}")
-                    continue
-                batch = reader.parquet(*files)
-            else:
+            if plan is None:
                 batch = seqs.where(
                     F.pmod(
                         F.xxhash64("doc_id", F.lit("batch")), F.lit(n_batches)
                     )
                     == b
                 )
-            pts = sequences_to_points(batch, self.cfg, with_ts=False)
-            hourly = rollup_points(
-                pts,
-                3600,
-                key_cols=["cell_id", "doc_id"],
-                dt_seconds=self.cfg.dt_seconds,
-                epoch=self.cfg.epoch,
-                sketch_distinct=self.sketch_distinct,
-                sketch_quantiles=self.sketch_quantiles,
-            ).cache()
-            # idempotent commit: the batch owns its own partition and
-            # overwrites it wholesale — no dynamic-overwrite staging or
-            # full-table listing; routed through the Warehouse so the
-            # Iceberg backend gets the same contract via
-            # overwritePartitions (ADVICE r1: never bypass the abstraction)
-            self.wh.write_batch_partition(
-                hourly.repartition(write_partitions(self.spark), "cell_id"),
-                self.hourly_table(),
-                b,
-                partition_by=["cell_id"],
-            )
-            # per-cell lineage from the cached tier (tiny: ~1/unit_dt of
-            # raw), not a parquet re-read — one extra small job per batch
-            per_cell = (
-                hourly.groupBy("cell_id")
-                .agg(
-                    F.count_distinct("doc_id").alias("n_series"),
-                    F.sum("n_points").alias("n_points"),
-                )
-                .collect()
-            )
-            hourly.unpersist()
+            else:
+                # fewer files than batches leaves a batch empty: it is
+                # ledgered with no cells, so resume still converges
+                files = plan.get(b, [])
+                batch = reader.parquet(*files) if files else None
+            per_cell = [] if batch is None else self._write_hourly(batch, b)
             self._commit_batch(b, per_cell)
             n_run += 1
             if fail_after_batch is not None and n_run >= fail_after_batch:
                 raise RuntimeError(f"injected crash after batch {b}")
-        if not _finalize:
-            return {}
         return self.finalize(pack=pack)
+
+    def _write_hourly(self, batch: DataFrame, batch_id: int) -> list:
+        """Explode one batch to points, roll them up to the hourly tier
+        and write its ``batch_id`` partition; returns the per-cell
+        lineage rows."""
+        pts = sequences_to_points(batch, self.cfg, with_ts=False)
+        hourly = rollup_points(
+            pts,
+            3600,
+            key_cols=["cell_id", "doc_id"],
+            dt_seconds=self.cfg.dt_seconds,
+            epoch=self.cfg.epoch,
+            sketch_distinct=self.sketch_distinct,
+            sketch_quantiles=self.sketch_quantiles,
+        ).cache()
+        # idempotent commit: the batch owns its own partition and
+        # overwrites it wholesale — no dynamic-overwrite staging or
+        # full-table listing; routed through the Warehouse so the
+        # Iceberg backend gets the same contract via
+        # overwritePartitions (ADVICE r1: never bypass the abstraction)
+        self.wh.write_batch_partition(
+            hourly.repartition(write_partitions(self.spark), "cell_id"),
+            self.hourly_table(),
+            batch_id,
+            partition_by=["cell_id"],
+        )
+        # per-cell lineage from the cached tier (tiny: ~1/unit_dt of
+        # raw), not a parquet re-read — one extra small job per batch
+        per_cell = (
+            hourly.groupBy("cell_id")
+            .agg(
+                F.count_distinct("doc_id").alias("n_series"),
+                F.sum("n_points").alias("n_points"),
+            )
+            .collect()
+        )
+        hourly.unpersist()
+        return per_cell
 
     def compact(
         self,
@@ -580,12 +553,12 @@ class TierPipeline:
         return out
 
     def _hot_cells(self, cells: list | None = None) -> list:
-        """Cells holding > ``hot_cell_threshold`` of the refresh scope's
+        """Cells holding > ``HOT_CELL_THRESHOLD`` of the refresh scope's
         points — from the LEDGER's per-cell lineage rows, so detection
         costs zero Spark jobs (detect_hot_keys' count sketch would re-scan
         the hourly tier; the ledger already IS that aggregate, and unlike
         hourly batch_id partitions it survives compaction).  ``cells``
-        scopes the shares to an incremental refresh's cell set."""
+        scopes the shares to a refresh's cell set."""
         per: dict = {}
         want = set(cells) if cells is not None else None
         for r in self.ledger_rows():
@@ -601,61 +574,74 @@ class TierPipeline:
         return [
             {"cell_id": c}
             for c in sorted(per)
-            if per[c] > self.hot_cell_threshold * total
+            if per[c] > HOT_CELL_THRESHOLD * total
         ]
 
-    def finalize(
-        self,
-        pack: bool = True,
-        cells: list | None = None,
-        covered_batches: list | None = None,
-    ) -> dict:
-        """Daily (and packed) tiers from the hourly partials.
+    def finalize(self, pack: bool = True) -> dict:
+        """Daily (and packed) tiers from the hourly partials, by one
+        continuous-aggregate refresh rule: recompute exactly the cells of
+        the completed batches no finalize has covered yet, per tier.  A
+        first run covers every cell, an increment the cells its new
+        batches touched (one day's data must not rebuild years of
+        dailies), and a run with nothing pending writes nothing — so a
+        re-run never derives a cell again from hourly partials that
+        retention has since thinned.
 
-        ``cells=None`` (full refresh): overwrite the whole tier —
-        deriving tiers is idempotent.  ``cells=[...]`` (incremental
-        continuous-aggregate refresh, used by :meth:`run_incremental`):
-        recompute ONLY those cells from their hourly partials
-        (cell-pruned scan) and dynamic-partition-overwrite exactly their
-        tier partitions — an increment touching one day's data must not
-        rebuild years of dailies.  Counts reported for an incremental
-        refresh cover the recomputed cells only.
+        The cell set comes from the LEDGER's per-cell lineage rows, not a
+        batch_id filter on the hourly tier: compact() remaps completed
+        batches' partitions to batch_id=-1, so a compaction landing
+        before a finalize would make pending batches match no hourly rows
+        — their cells silently dropped while the coverage row still
+        claimed them (ADVICE r4 medium).  Ledger rows survive compaction
+        by construction; no Spark job needed either.
 
-        Every finalize commits a 'finalize' ledger row recording which
-        batches the derived tiers now cover (full: all done batches;
-        partial: previous coverage + ``covered_batches``) — the record
-        :meth:`run_incremental` uses to heal crash-before-finalize gaps.
+        The refresh scans only those cells' hourly partials and replaces
+        exactly their tier partitions.  Then one 'finalize' ledger row
+        records the batches each tier now covers (previous coverage + its
+        pending batches); it commits after the tier writes, so a crash
+        mid-finalize leaves the batches pending for the next run (the
+        writes are idempotent).  Counts cover the refreshed cells only.
         """
+        done = self.completed_batches()
+        covered = self._finalized_batches()
+        covered_packed = self._finalized_batches(packed=True)
+        pending = done - covered
+        pending_packed = done - covered_packed if pack else set()
+        cells = self._cells_of(pending)
+        packed_cells = self._cells_of(pending_packed)
+        out = {"n_daily": 0, **({"n_packed": 0} if pack else {})}
+        if cells or packed_cells:
+            out = self._refresh(cells, packed_cells if pack else None)
+        if pending or pending_packed:
+            self.wh._commit(
+                self._ledger_table(),
+                "finalize",
+                {"status": "finalize",
+                 "batches": sorted(covered | pending),
+                 "packed": sorted(covered_packed | pending_packed)},
+            )
+        return {**out, "n_refreshed_cells": len(set(cells) | set(packed_cells))}
+
+    def _cells_of(self, batches: set) -> list:
+        """The cells the ledger's lineage rows record for ``batches``."""
+        return sorted({
+            r["cell_id"]
+            for r in self.ledger_rows()
+            if r.get("status") == "cell" and r["batch_id"] in batches
+        })
+
+    def _refresh(self, cells: list, packed_cells: list | None) -> dict:
+        """Recompute the daily partitions of ``cells`` (and the packed
+        partitions of ``packed_cells``; ``None`` skips the packed tier)
+        from their hourly partials and overwrite exactly those
+        partitions."""
         from pyspark.sql import Observation
 
         from repurpose_spark.operators.hooks import apply_batch_hooks
 
-        incremental = cells is not None
-
-        def _commit_coverage():
-            batches = (
-                sorted(
-                    self._finalized_batches() | set(covered_batches or [])
-                )
-                if incremental
-                else sorted(self.completed_batches())
-            )
-            self.wh._commit(
-                self._ledger_table(),
-                "finalize",
-                {"status": "finalize", "batches": batches},
-            )
-
-        if incremental and not cells:
-            _commit_coverage()
-            return {"n_daily": 0, **({"n_packed": 0} if pack else {})}
         hourly = self.wh.read(self.hourly_table()).drop("batch_id")
-        if incremental:
-            hourly = hourly.where(F.col("cell_id").isin(list(cells)))
 
-        hot = self._hot_cells(cells) if self.salt_buckets else []
-
-        def _write(df, table, order_cols=("doc_id",)):
+        def _write(df, table, cells, order_cols=("doc_id",)):
             # cluster rows by their output partition BEFORE the
             # partitionBy write — without this every task holds an open
             # writer per cell it sees: O(tasks × cells) files and
@@ -670,6 +656,7 @@ class TierPipeline:
             # identical rows, ≤buckets files for the hot cell, no
             # straggler (VERDICT r4 #1; cold cells keep salt 0 = one
             # slice, exactly the unsalted layout)
+            hot = self._hot_cells(cells) if self.salt_buckets else []
             if hot:
                 from repurpose_spark.operators.skew import (
                     ordered_export_salted,
@@ -687,47 +674,47 @@ class TierPipeline:
                 df = df.repartition(
                     write_partitions(self.spark), F.col("cell_id")
                 )
-            if incremental:
-                # the refresh knows its cell scope, so the commit records
-                # a partition-scoped delta manifest (O(refreshed cells'
-                # files)) instead of walking the whole tier — at design
-                # scale a long run of small refreshes against a large
-                # tier must not pay O(table files) driver time per commit
-                self.wh.overwrite_partitions(
-                    df, table, ["cell_id"],
-                    touched_partitions=[
-                        {"cell_id": c} for c in sorted(cells)
-                    ],
-                )
-            else:
-                self.wh.write(df, table, partition_by=["cell_id"])
-
-        refresh_kind = "incremental" if incremental else "full"
+            # the refresh knows its cell scope, so the commit records a
+            # partition-scoped delta manifest (O(refreshed cells' files))
+            # instead of walking the whole tier — at design scale a long
+            # run of small refreshes against a large tier must not pay
+            # O(table files) driver time per commit
+            self.wh.overwrite_partitions(
+                df, table, ["cell_id"],
+                touched_partitions=[{"cell_id": c} for c in cells],
+            )
 
         # metrics ride the write job itself (Observation) — never re-read
         # a tier just for its lineage row (the packed re-count would scan
         # every encoded blob again)
         def _daily_job():
+            if not cells:
+                return 0
             daily = apply_batch_hooks(
-                rollup_from_partials(hourly, "day"), self.postprocess
+                rollup_from_partials(
+                    hourly.where(F.col("cell_id").isin(cells)), "day"
+                ),
+                self.postprocess,
             )
             obs_d = Observation()
             _write(
                 daily.observe(obs_d, F.count(F.lit(1)).alias("n")),
                 self.daily_table(),
+                cells,
                 order_cols=("doc_id", "tick"),
             )
             n_daily = obs_d.get["n"]
             self.wh._commit(
                 self.daily_table(), "metrics",
-                {"n_rows": n_daily, "tier": "daily",
-                 "refresh": refresh_kind},
+                {"n_rows": n_daily, "tier": "daily"},
             )
             return n_daily
 
         def _packed_job():
+            if not packed_cells:
+                return 0
             packed = encode_series(
-                with_avg(hourly),
+                with_avg(hourly.where(F.col("cell_id").isin(packed_cells))),
                 int_cols=["sum_v", "n_points"],
                 float_cols=["avg_v"],
             )
@@ -735,39 +722,35 @@ class TierPipeline:
             _write(
                 packed.observe(obs_p, F.count(F.lit(1)).alias("n")),
                 self.packed_table(),
+                packed_cells,
             )
             n_packed = obs_p.get["n"]
             self.wh._commit(
                 self.packed_table(), "metrics",
-                {"n_rows": n_packed, "tier": "packed",
-                 "refresh": refresh_kind},
+                {"n_rows": n_packed, "tier": "packed"},
             )
             return n_packed
 
-        if pack:
-            # the two derived tiers are independent reads of the hourly
-            # partials writing DISTINCT tables (separate manifest dirs):
-            # overlap them so the second tier's scan back-fills the
-            # first's write tail (guide §2.6 — two jobs in flight is
-            # enough to fill stragglers without fighting for cores)
-            # (each thread runs under the caller's job group,
-            # description and tags, as the caller's own jobs do).  Wrap
-            # each job separately: one wrap hands its threads ONE shared
-            # copy of the local properties, so a query ending on one
-            # thread would clear the other's SQL execution id
-            from concurrent.futures import ThreadPoolExecutor
+        if packed_cells is None:
+            return {"n_daily": _daily_job()}
+        # the two derived tiers are independent reads of the hourly
+        # partials writing DISTINCT tables (separate manifest dirs):
+        # overlap them so the second tier's scan back-fills the first's
+        # write tail (guide §2.6 — two jobs in flight is enough to fill
+        # stragglers without fighting for cores) (each thread runs under
+        # the caller's job group, description and tags, as the caller's
+        # own jobs do).  Wrap each job separately: one wrap hands its
+        # threads ONE shared copy of the local properties, so a query
+        # ending on one thread would clear the other's SQL execution id
+        from concurrent.futures import ThreadPoolExecutor
 
-            from pyspark.util import inheritable_thread_target
+        from pyspark.util import inheritable_thread_target
 
-            def inherit(job):
-                return inheritable_thread_target(self.spark)(job)
+        def inherit(job):
+            return inheritable_thread_target(self.spark)(job)
 
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_daily = pool.submit(inherit(_daily_job))
-                f_packed = pool.submit(inherit(_packed_job))
-                out = {"n_daily": f_daily.result(),
-                       "n_packed": f_packed.result()}
-        else:
-            out = {"n_daily": _daily_job()}
-        _commit_coverage()
-        return out
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            f_daily = pool.submit(inherit(_daily_job))
+            f_packed = pool.submit(inherit(_packed_job))
+            return {"n_daily": f_daily.result(),
+                    "n_packed": f_packed.result()}

@@ -241,6 +241,34 @@ def test_dedup_index_writer_discipline(spark, docs, tmp_path):
         assert len(files) == 1, d
 
 
+def test_dedup_index_writes_on_many_tasks(spark, tmp_path):
+    """Both index tables cluster rows by partition over several write
+    tasks (a written file's ``part-NNNNN`` is its task's partition), one
+    file per partition dir — not one task that writes every dir."""
+    import glob
+    import os
+    import random
+
+    from repurpose_spark.operators.dedup import materialize_dedup_index
+
+    rng = random.Random(11)
+    words = [f"w{i}" for i in range(500)]
+    docs = spark.createDataFrame(
+        [(i, " ".join(rng.choice(words) for _ in range(40)))
+         for i in range(200)],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "dedup_index")
+    materialize_dedup_index(docs, path, k=8, bands=4, n_prefix=16,
+                            n_id_buckets=16)
+    for table in ("bands", "shingles"):
+        files = glob.glob(f"{path}/{table}/**/*.parquet", recursive=True)
+        dirs = {os.path.dirname(f) for f in files}
+        assert len(dirs) > 8 and len(files) == len(dirs), table
+        parts = {os.path.basename(f).split("-")[1] for f in files}
+        assert len(parts) > 1, table
+
+
 # ---------------------------------------------------------------------------
 # source_overlap
 # ---------------------------------------------------------------------------

@@ -6,7 +6,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -24,6 +24,10 @@ from repurpose_spark.sources.synthetic import synth_sequences
 
 
 @given(st.lists(st.integers(-(2**40), 2**40), max_size=500))
+# regular streams (fixed step): every DoD width is zero
+@example(list(range(1577836800, 1577836800 + 2 * 3600, 3600)))
+@example(list(range(-7, -7 + 3 * 60, 60)))
+@example(list(range(5, 5 + 300 * 13, 13)))
 @settings(max_examples=200, deadline=None)
 def test_dod_round_trip(xs):
     a = np.array(xs, dtype=np.int64)

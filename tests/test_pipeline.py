@@ -116,6 +116,47 @@ def test_apply_retention_policy(spark, seqs, tmp_path):
     assert wh.read(pipe.daily_table()).count() == n_daily
 
 
+def test_refresh_after_retention_keeps_daily_history(spark, seqs, tmp_path):
+    """The coarser tiers keep what hourly retention drops: once retention
+    has run, an increment that finds no new file and a re-run of the
+    finished job have no batch to refresh, so they leave the daily and
+    packed rows as they were."""
+    path = _write_input(spark, seqs, tmp_path, n_files=4)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    pipe = TierPipeline(spark, wh, CFG, job_id="t")
+    pipe.run(input_path=path, n_batches=2)
+    cols = ["cell_id", "doc_id", "n_points"]
+    tiers = (pipe.daily_table(), pipe.packed_table())
+    before = {t: _sorted(wh.read(t), cols) for t in tiers}
+    pipe.apply_retention({"hourly": "2020-01-01 02:00:00"})
+    out = pipe.run_incremental(path)
+    pipe.run(input_path=path, n_batches=2)
+    for t in tiers:
+        assert _sorted(wh.read(t), cols) == before[t], t
+    assert out["n_new_files"] == 0 and out["n_refreshed_cells"] == 0
+
+
+def test_packed_tier_builds_after_a_run_without_it(spark, seqs, tmp_path):
+    """Each derived tier keeps its own coverage: a ``pack=False`` run
+    covers daily only, so a later run with ``pack=True`` builds the whole
+    packed tier, equal to a single-shot run's, and leaves daily alone."""
+    wh_a = Warehouse(spark, str(tmp_path / "a"))
+    ref = TierPipeline(spark, wh_a, CFG, job_id="t")
+    ref.run(seqs, n_batches=2)
+
+    wh = Warehouse(spark, str(tmp_path / "b"))
+    pipe = TierPipeline(spark, wh, CFG, job_id="t")
+    first = pipe.run(seqs, n_batches=2, pack=False)
+    assert "n_packed" not in first and not wh.exists(pipe.packed_table())
+    out = pipe.run(seqs, n_batches=2)
+    assert out["n_daily"] == 0 and out["n_packed"] == N_DOCS
+    assert out["n_refreshed_cells"] == CFG.n_cells
+    for t in (pipe.daily_table(), pipe.packed_table()):
+        cols = sorted(wh_a.read(t).columns)
+        assert _sorted(wh.read(t), cols) == _sorted(wh_a.read(t), cols), t
+    assert pipe.run(seqs, n_batches=2)["n_refreshed_cells"] == 0
+
+
 def test_retention_commits_its_manifest(spark, seqs, tmp_path):
     """Retention rewrites every file of the tier, so its commit must
     carry the new manifest: after compact + retention, and again after
@@ -652,9 +693,7 @@ def test_finalize_auto_salts_hot_cells(spark, tmp_path):
 
     skewed = synth_sequences(spark, 200, skew=True)
     wh_a = Warehouse(spark, str(tmp_path / "a"))
-    pipe_a = TierPipeline(
-        spark, wh_a, CFG, job_id="t", hot_cell_threshold=0.2, salt_buckets=4
-    )
+    pipe_a = TierPipeline(spark, wh_a, CFG, job_id="t", salt_buckets=4)
     pipe_a.run(skewed, n_batches=2)
     hot = pipe_a._hot_cells()
     assert hot, "skewed fixture must trip the ledger-based detector"

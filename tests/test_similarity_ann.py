@@ -209,6 +209,28 @@ def test_materialized_index_one_file_per_bucket(spark, emb, tmp_path):
         assert len(files) == 1
 
 
+def test_materialized_index_writes_on_many_tasks(spark, tmp_path):
+    """The index write clusters rows by bucket over several tasks (a
+    written file's ``part-NNNNN`` is its task's partition), still one
+    file per bucket dir — not one task that writes every bucket."""
+    import glob
+    import os
+
+    from repurpose_spark.operators.similarity import materialize_ann_index
+
+    rng = np.random.default_rng(5)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=DIM)]) for i in range(400)],
+        "vec_id long, embedding array<double>",
+    )
+    path = str(tmp_path / "idx")
+    materialize_ann_index(emb, path, n_planes=6)
+    files = glob.glob(path + "/sig=*/*.parquet")
+    dirs = {os.path.dirname(f) for f in files}
+    assert len(dirs) > 8 and len(files) == len(dirs)
+    assert len({os.path.basename(f).split("-")[1] for f in files}) > 1
+
+
 class TestInt8Quantize:
     def test_matches_numpy_brute_force(self, spark):
         import numpy as np
