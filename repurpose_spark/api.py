@@ -60,7 +60,7 @@ class Img2Ts:
         self.sketch_distinct = sketch_distinct
         self.sketch_quantiles = sketch_quantiles
 
-    def calc(self, pack: bool = True) -> dict:
+    def calc(self) -> dict:
         """Run (or resume) the tier pipeline; returns
         :meth:`TierPipeline.run`'s counts, which cover only the cells
         this call refreshed (a finished job returns 0 for each)."""
@@ -78,7 +78,6 @@ class Img2Ts:
         return pipe.run(
             self.input_df,
             n_batches=self.batches,
-            pack=pack,
             input_path=self.input_path,
         )
 

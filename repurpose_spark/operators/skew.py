@@ -100,7 +100,6 @@ def ordered_export_salted(
     fine_col: str = "pos",
     buckets: int = 16,
     hot_keys: list | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Per-key clustered export with hot keys fanned out — the shape
     where salting measurably wins (BENCH_SKEW.json: 1.35× at a 21% hot
@@ -115,7 +114,7 @@ def ordered_export_salted(
     standard files-vs-stragglers trade).  Cold keys keep salt 0: one
     slice each, exactly the unsalted layout."""
     key_cols = list(key_cols)
-    n = num_partitions or write_partitions(df.sparkSession)
+    n = write_partitions(df.sparkSession)
     parts = [F.col(c) for c in key_cols] + [
         salt_for(fine_col, buckets, hot_keys, key_cols)
     ]

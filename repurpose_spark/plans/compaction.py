@@ -14,7 +14,7 @@ rewrite retention also uses (staged files, crash-safe rename swap, one
 full manifest).  A partitioned table is rewritten through
 ``repartition(write_partitions, *partition_chain)``: the hash on the
 chain sends each partition value to one task, so every partition comes
-out as exactly ONE file, whatever its size — ``target_file_bytes`` sizes
+out as exactly ONE file, whatever its size — ``TARGET_FILE_BYTES`` sizes
 only unpartitioned tables (n = live bytes / target, from
 ``Warehouse.live_files``, the twin's analog of Iceberg's file-size
 metadata).  Range-split files per partition would make the target real
@@ -28,17 +28,20 @@ from pyspark.sql import functions as F
 from repurpose_spark.plans.parallelism import write_partitions
 from repurpose_spark.sources.tables import Warehouse
 
+# output file size of an unpartitioned compaction, and the Iceberg
+# rewrite_data_files target
+TARGET_FILE_BYTES = 128 * 1024 * 1024
+
 
 def compact_table(
     wh: Warehouse,
     table: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
     sort_by: list | None = None,
     transform=None,
     zorder_by: list | None = None,
 ) -> dict:
     """Rewrite ``table`` into one file per partition (partitioned
-    tables) or ~``target_file_bytes`` files (unpartitioned); returns
+    tables) or ~``TARGET_FILE_BYTES`` files (unpartitioned); returns
     before/after file counts.  Iceberg branch: delegates to the engine's
     rewrite_data_files procedure (cluster-only).
 
@@ -62,7 +65,7 @@ def compact_table(
             f"CALL {wh.catalog}.system.rewrite_data_files("
             f"table => '{table}', "
             f"options => map('target-file-size-bytes', "
-            f"'{target_file_bytes}'))"
+            f"'{TARGET_FILE_BYTES}'))"
         )
         wh._commit(table, "compact", {"op": "compact"})
         return {"op": "compact"}
@@ -87,7 +90,7 @@ def compact_table(
     # hive layout: one shuffle keyed on the partition chain, one file
     # per partition value on every core; unpartitioned: bytes-sized files
     n_out = write_partitions(wh.spark) if chain else max(
-        1, -(-sum(before.values()) // target_file_bytes)
+        1, -(-sum(before.values()) // TARGET_FILE_BYTES)
     )
     df = df.repartition(n_out, *[F.col(c) for c in chain])
     if sort_by:

@@ -214,17 +214,13 @@ class TierPipeline:
         )
         return plan
 
-    def _finalized_batches(self, packed: bool = False) -> set:
+    def _finalized_batches(self) -> set:
         """Batches whose cells a finalize has provably folded into the
-        daily tier (``packed=True``: into the packed tier) — the last
-        'finalize' ledger row's batch set for that tier.  Each finalize
-        extends the previous coverage with the batches it refreshed.  The
-        tiers keep separate sets because ``pack`` is per call: a
-        ``pack=False`` finalize covers daily only, so a later
-        ``pack=True`` one still builds packed from every batch.  The row
-        commits AFTER the tier writes, so a crash mid-finalize leaves its
-        batches uncovered and the next finalize refreshes them again
-        (idempotent)."""
+        daily and packed tiers — the last 'finalize' ledger row's batch
+        set.  Each finalize extends the previous coverage with the
+        batches it refreshed.  The row commits AFTER the tier writes, so
+        a crash mid-finalize leaves its batches uncovered and the next
+        finalize refreshes them again (idempotent)."""
         rows = [
             r
             for r in self.wh.snapshots(self._ledger_table())
@@ -232,10 +228,13 @@ class TierPipeline:
         ]
         if not rows:
             return set()
-        # a row written before the tiers had separate sets claims both
+        # a row from when the tiers kept separate sets also carries a
+        # ``packed`` set: it covers only the batches both sets hold, so a
+        # packed tier that lagged daily still gets built
         last = rows[-1]
-        return set(last.get("packed", last["batches"]) if packed
-                   else last["batches"])
+        return set(last["batches"]).intersection(
+            last.get("packed", last["batches"])
+        )
 
     def _ledgered_plan(self) -> dict:
         """Last plan row per batch_id (original run + any increments)."""
@@ -260,7 +259,6 @@ class TierPipeline:
         input_path: str,
         files_per_batch: int | None = None,
         fail_after_batch: int | None = None,
-        pack: bool = True,
     ) -> dict:
         """Ingest files that appeared under ``input_path`` AFTER the
         planned run — the reference's append-new-dates loop (img2ts is
@@ -320,7 +318,6 @@ class TierPipeline:
             input_path=input_path,
             n_batches=orig_n,
             fail_after_batch=fail_after_batch,
-            pack=pack,
         )
         return {**out, "n_new_files": len(new)}
 
@@ -392,7 +389,6 @@ class TierPipeline:
         seqs: DataFrame | None = None,
         n_batches: int = 4,
         fail_after_batch: int | None = None,
-        pack: bool = True,
         input_path: str | None = None,
     ) -> dict:
         """Process all batches (skipping ledgered ones), then finalize.
@@ -447,7 +443,7 @@ class TierPipeline:
             n_run += 1
             if fail_after_batch is not None and n_run >= fail_after_batch:
                 raise RuntimeError(f"injected crash after batch {b}")
-        return self.finalize(pack=pack)
+        return self.finalize()
 
     def _write_hourly(self, batch: DataFrame, batch_id: int) -> list:
         """Explode one batch to points, roll them up to the hourly tier
@@ -463,35 +459,40 @@ class TierPipeline:
             sketch_distinct=self.sketch_distinct,
             sketch_quantiles=self.sketch_quantiles,
         ).cache()
-        # idempotent commit: the batch owns its own partition and
-        # overwrites it wholesale — no dynamic-overwrite staging or
-        # full-table listing; routed through the Warehouse so the
-        # Iceberg backend gets the same contract via
-        # overwritePartitions (ADVICE r1: never bypass the abstraction)
-        self.wh.write_batch_partition(
-            hourly.repartition(write_partitions(self.spark), "cell_id"),
-            self.hourly_table(),
-            batch_id,
-            partition_by=["cell_id"],
-        )
-        # per-cell lineage from the cached tier (tiny: ~1/unit_dt of
-        # raw), not a parquet re-read — one extra small job per batch
-        per_cell = (
-            hourly.groupBy("cell_id")
-            .agg(
-                F.count_distinct("doc_id").alias("n_series"),
-                F.sum("n_points").alias("n_points"),
+        try:
+            # idempotent commit: the batch owns its own ``batch_id=<b>``
+            # partition and a re-run replaces it, never doubles it;
+            # routed through the Warehouse so the Iceberg backend gets
+            # the same contract via overwritePartitions (ADVICE r1:
+            # never bypass the abstraction).  The commit records a DELTA
+            # manifest of ``batch_id=<b>/`` only — a full-table manifest
+            # per batch would be an O(table files) walk + sidecar line
+            # count QUADRATIC in n_batches (256 batches × millions of
+            # files at design scale); readers replay the deltas
+            # (Iceberg's incremental-manifest move)
+            self.wh.overwrite_partitions(
+                hourly.withColumn("batch_id", F.lit(batch_id)).repartition(
+                    write_partitions(self.spark), "cell_id"
+                ),
+                self.hourly_table(),
+                ["batch_id", "cell_id"],
+                metrics={"batch_id": batch_id},
+                touched_partitions=[{"batch_id": batch_id}],
             )
-            .collect()
-        )
-        hourly.unpersist()
-        return per_cell
+            # per-cell lineage from the cached tier (tiny: ~1/unit_dt of
+            # raw), not a parquet re-read — one extra small job per batch
+            return (
+                hourly.groupBy("cell_id")
+                .agg(
+                    F.count_distinct("doc_id").alias("n_series"),
+                    F.sum("n_points").alias("n_points"),
+                )
+                .collect()
+            )
+        finally:
+            hourly.unpersist()
 
-    def compact(
-        self,
-        target_file_bytes: int = 128 * 1024 * 1024,
-        sort_by: list | None = None,
-    ) -> dict:
+    def compact(self, sort_by: list | None = None) -> dict:
         """Maintenance pass on the hourly tier: collapse COMPLETED
         batch partitions into one ``batch_id=-1`` partition per cell —
         after many batch appends the tier holds
@@ -510,7 +511,6 @@ class TierPipeline:
             table: compact_table(
                 self.wh,
                 table,
-                target_file_bytes,
                 sort_by=sort_by,
                 transform=lambda df: df.withColumn(
                     "batch_id", F.lit(-1)
@@ -577,15 +577,14 @@ class TierPipeline:
             if per[c] > HOT_CELL_THRESHOLD * total
         ]
 
-    def finalize(self, pack: bool = True) -> dict:
-        """Daily (and packed) tiers from the hourly partials, by one
+    def finalize(self) -> dict:
+        """Daily and packed tiers from the hourly partials, by one
         continuous-aggregate refresh rule: recompute exactly the cells of
-        the completed batches no finalize has covered yet, per tier.  A
-        first run covers every cell, an increment the cells its new
-        batches touched (one day's data must not rebuild years of
-        dailies), and a run with nothing pending writes nothing — so a
-        re-run never derives a cell again from hourly partials that
-        retention has since thinned.
+        the completed batches no finalize has covered yet.  A first run
+        covers every cell, an increment the cells its new batches touched
+        (one day's data must not rebuild years of dailies), and a run
+        with nothing pending writes nothing — so a re-run never derives a
+        cell again from hourly partials that retention has since thinned.
 
         The cell set comes from the LEDGER's per-cell lineage rows, not a
         batch_id filter on the hourly tier: compact() remaps completed
@@ -596,31 +595,24 @@ class TierPipeline:
         by construction; no Spark job needed either.
 
         The refresh scans only those cells' hourly partials and replaces
-        exactly their tier partitions.  Then one 'finalize' ledger row
-        records the batches each tier now covers (previous coverage + its
-        pending batches); it commits after the tier writes, so a crash
-        mid-finalize leaves the batches pending for the next run (the
-        writes are idempotent).  Counts cover the refreshed cells only.
+        exactly their partitions of both tiers.  Then one 'finalize'
+        ledger row records the batches the tiers now cover (previous
+        coverage + the pending batches); it commits after the tier
+        writes, so a crash mid-finalize leaves the batches pending for
+        the next run (the writes are idempotent).  Counts cover the
+        refreshed cells only.
         """
-        done = self.completed_batches()
         covered = self._finalized_batches()
-        covered_packed = self._finalized_batches(packed=True)
-        pending = done - covered
-        pending_packed = done - covered_packed if pack else set()
+        pending = self.completed_batches() - covered
         cells = self._cells_of(pending)
-        packed_cells = self._cells_of(pending_packed)
-        out = {"n_daily": 0, **({"n_packed": 0} if pack else {})}
-        if cells or packed_cells:
-            out = self._refresh(cells, packed_cells if pack else None)
-        if pending or pending_packed:
+        out = self._refresh(cells) if cells else {"n_daily": 0, "n_packed": 0}
+        if pending:
             self.wh._commit(
                 self._ledger_table(),
                 "finalize",
-                {"status": "finalize",
-                 "batches": sorted(covered | pending),
-                 "packed": sorted(covered_packed | pending_packed)},
+                {"status": "finalize", "batches": sorted(covered | pending)},
             )
-        return {**out, "n_refreshed_cells": len(set(cells) | set(packed_cells))}
+        return {**out, "n_refreshed_cells": len(cells)}
 
     def _cells_of(self, batches: set) -> list:
         """The cells the ledger's lineage rows record for ``batches``."""
@@ -630,18 +622,29 @@ class TierPipeline:
             if r.get("status") == "cell" and r["batch_id"] in batches
         })
 
-    def _refresh(self, cells: list, packed_cells: list | None) -> dict:
-        """Recompute the daily partitions of ``cells`` (and the packed
-        partitions of ``packed_cells``; ``None`` skips the packed tier)
-        from their hourly partials and overwrite exactly those
-        partitions."""
+    def _refresh(self, cells: list) -> dict:
+        """Recompute the daily and packed partitions of ``cells`` from
+        their hourly partials and overwrite exactly those partitions."""
+        from concurrent.futures import ThreadPoolExecutor
+
         from pyspark.sql import Observation
+        from pyspark.util import inheritable_thread_target
 
         from repurpose_spark.operators.hooks import apply_batch_hooks
+        from repurpose_spark.operators.skew import ordered_export_salted
 
-        hourly = self.wh.read(self.hourly_table()).drop("batch_id")
+        hourly = (
+            self.wh.read(self.hourly_table())
+            .drop("batch_id")
+            .where(F.col("cell_id").isin(cells))
+        )
+        hot = self._hot_cells(cells) if self.salt_buckets else []
 
-        def _write(df, table, cells, order_cols=("doc_id",)):
+        def _write(name, df, table, order_cols):
+            # metrics ride the write job itself (Observation) — never
+            # re-read a tier just for its lineage row (the packed
+            # re-count would scan every encoded blob again)
+            obs = Observation()
             # cluster rows by their output partition BEFORE the
             # partitionBy write — without this every task holds an open
             # writer per cell it sees: O(tasks × cells) files and
@@ -650,89 +653,41 @@ class TierPipeline:
             # r3 ANN index build; measured r4: finalize was the durable
             # pipeline's weakest stage at 0.60 eff before this).
             # When the ledger says a cell is HOT (> threshold of the
-            # scope's points), plain repartition('cell_id') makes that
+            # scope's points), a plain repartition('cell_id') makes that
             # cell ONE task's sort+write; ordered_export_salted fans it
             # over ≤salt_buckets slices, each still internally sorted —
             # identical rows, ≤buckets files for the hot cell, no
-            # straggler (VERDICT r4 #1; cold cells keep salt 0 = one
-            # slice, exactly the unsalted layout)
-            hot = self._hot_cells(cells) if self.salt_buckets else []
-            if hot:
-                from repurpose_spark.operators.skew import (
-                    ordered_export_salted,
-                )
-
-                df = ordered_export_salted(
-                    df,
-                    key_cols=["cell_id"],
-                    order_cols=list(order_cols),
-                    fine_col="doc_id",
-                    buckets=self.salt_buckets,
-                    hot_keys=hot,
-                )
-            else:
-                df = df.repartition(
-                    write_partitions(self.spark), F.col("cell_id")
-                )
+            # straggler (VERDICT r4 #1).  Every other cell (all of them
+            # when ``hot`` is empty) keeps salt 0: one slice, one file
+            clustered = ordered_export_salted(
+                df.observe(obs, F.count(F.lit(1)).alias("n")),
+                key_cols=["cell_id"],
+                order_cols=order_cols,
+                fine_col="doc_id",
+                buckets=self.salt_buckets,
+                hot_keys=hot,
+            )
             # the refresh knows its cell scope, so the commit records a
             # partition-scoped delta manifest (O(refreshed cells' files))
             # instead of walking the whole tier — at design scale a long
             # run of small refreshes against a large tier must not pay
             # O(table files) driver time per commit
             self.wh.overwrite_partitions(
-                df, table, ["cell_id"],
+                clustered, table, ["cell_id"],
                 touched_partitions=[{"cell_id": c} for c in cells],
             )
+            n = obs.get["n"]
+            self.wh._commit(table, "metrics", {"n_rows": n, "tier": name})
+            return n
 
-        # metrics ride the write job itself (Observation) — never re-read
-        # a tier just for its lineage row (the packed re-count would scan
-        # every encoded blob again)
-        def _daily_job():
-            if not cells:
-                return 0
-            daily = apply_batch_hooks(
-                rollup_from_partials(
-                    hourly.where(F.col("cell_id").isin(cells)), "day"
-                ),
-                self.postprocess,
-            )
-            obs_d = Observation()
-            _write(
-                daily.observe(obs_d, F.count(F.lit(1)).alias("n")),
-                self.daily_table(),
-                cells,
-                order_cols=("doc_id", "tick"),
-            )
-            n_daily = obs_d.get["n"]
-            self.wh._commit(
-                self.daily_table(), "metrics",
-                {"n_rows": n_daily, "tier": "daily"},
-            )
-            return n_daily
-
-        def _packed_job():
-            if not packed_cells:
-                return 0
-            packed = encode_series(
-                with_avg(hourly.where(F.col("cell_id").isin(packed_cells))),
-                int_cols=["sum_v", "n_points"],
-                float_cols=["avg_v"],
-            )
-            obs_p = Observation()
-            _write(
-                packed.observe(obs_p, F.count(F.lit(1)).alias("n")),
-                self.packed_table(),
-                packed_cells,
-            )
-            n_packed = obs_p.get["n"]
-            self.wh._commit(
-                self.packed_table(), "metrics",
-                {"n_rows": n_packed, "tier": "packed"},
-            )
-            return n_packed
-
-        if packed_cells is None:
-            return {"n_daily": _daily_job()}
+        daily = apply_batch_hooks(
+            rollup_from_partials(hourly, "day"), self.postprocess
+        )
+        packed = encode_series(
+            with_avg(hourly),
+            int_cols=["sum_v", "n_points"],
+            float_cols=["avg_v"],
+        )
         # the two derived tiers are independent reads of the hourly
         # partials writing DISTINCT tables (separate manifest dirs):
         # overlap them so the second tier's scan back-fills the first's
@@ -742,15 +697,17 @@ class TierPipeline:
         # own jobs do).  Wrap each job separately: one wrap hands its
         # threads ONE shared copy of the local properties, so a query
         # ending on one thread would clear the other's SQL execution id
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark.util import inheritable_thread_target
-
         def inherit(job):
             return inheritable_thread_target(self.spark)(job)
 
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_daily = pool.submit(inherit(_daily_job))
-            f_packed = pool.submit(inherit(_packed_job))
+            f_daily = pool.submit(
+                inherit(_write), "daily", daily, self.daily_table(),
+                ["doc_id", "tick"],
+            )
+            f_packed = pool.submit(
+                inherit(_write), "packed", packed, self.packed_table(),
+                ["doc_id"],
+            )
             return {"n_daily": f_daily.result(),
                     "n_packed": f_packed.result()}

@@ -28,7 +28,7 @@ from functools import reduce
 from operator import and_, or_
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql.types import StructField, StructType
 
 
 def schema_reader(spark: SparkSession, schema: dict | None):
@@ -160,18 +160,27 @@ class Warehouse:
         directories, O(touched files) — instead of walking the whole
         table (O(table files) on the driver: fine for a full overwrite
         that replaced everything anyway, QUADRATIC for a long run of
-        small refreshes against a large tier at design scale).  Values
-        must be the simple scalars used in the hive directory names.
-        Listing a claimed-touched partition the write never actually
-        replaced is harmless: the walk sees its still-live files and the
-        replay re-adds them unchanged."""
+        small refreshes against a large tier at design scale).  A row
+        may name a leading run of ``partition_by`` — ``{"batch_id": 3}``
+        on ``["batch_id", "cell_id"]`` is the whole ``batch_id=3/``
+        directory, one pipeline batch's slice.  Values must be the
+        simple scalars used in the hive directory names.  Listing a
+        claimed-touched partition the write never actually replaced is
+        harmless: the walk sees its still-live files and the replay
+        re-adds them unchanged."""
+        # before the write: a row missing a chain key raises with every
+        # file still in place
+        prefixes = None if touched_partitions is None else [
+            "/".join(f"{k}={row[k]}" for k in partition_by[:len(row)])
+            for row in touched_partitions
+        ]
         if self.use_iceberg:
             try:
                 df.writeTo(self._ident(table)).overwritePartitions()
             except Exception as exc:  # noqa: BLE001 — gated below
                 # first-write only: the incoming frame holds just the
-                # refreshed partitions, so replacing an EXISTING table
-                # with it would drop every untouched cell
+                # rewritten partitions, so replacing an EXISTING table
+                # with it would drop every untouched cell or batch
                 self._require_missing(table, exc)
                 from pyspark.sql import functions as F
 
@@ -186,72 +195,11 @@ class Warehouse:
             .partitionBy(*partition_by)
             .parquet(self.path(table))
         )
-        prefixes = None if touched_partitions is None else [
-            "/".join(f"{k}={row[k]}" for k in partition_by)
-            for row in touched_partitions
-        ]
         self._commit(
             table,
             "overwrite_partitions",
             {**(metrics or {}),
              **self._manifest(table, df, partition_by, prefixes)},
-        )
-
-    def write_batch_partition(
-        self,
-        df: DataFrame,
-        table: str,
-        batch_id: int,
-        partition_by: list | None = None,
-    ) -> None:
-        """Idempotently (re)write one batch's slice of ``table``.
-
-        Parquet twin: the batch owns its own hive-style ``batch_id=<b>``
-        directory and overwrites it wholesale — no dynamic-overwrite
-        staging, no full-table listing.  Iceberg: the same contract via
-        ``overwritePartitions()`` on a table partitioned by
-        (batch_id, *partition_by) — replaces exactly the partitions the
-        incoming rows touch (cluster-only; no runtime jar in this sandbox).
-        """
-        if self.use_iceberg:
-            from pyspark.sql import functions as F
-
-            out = df.withColumn("batch_id", F.lit(int(batch_id)))
-            try:
-                out.writeTo(self._ident(table)).overwritePartitions()
-            except Exception as exc:  # noqa: BLE001 — gated below
-                # first write: create the table with the partition spec;
-                # any failure against an EXISTING table re-raises (a
-                # createOrReplace here would erase every other batch)
-                self._require_missing(table, exc)
-                wt = out.writeTo(self._ident(table))
-                cols = ["batch_id"] + list(partition_by or [])
-                wt = wt.partitionedBy(*[F.col(c) for c in cols])
-                wt.createOrReplace()
-            self._commit(table, "batch", {"batch_id": batch_id})
-            return
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(f"{self.path(table)}/batch_id={batch_id}")
-        # every batch write is a logged snapshot (reference: every append
-        # gets a 000_log dir, img2ts.py:754) — batch-built tiers get the
-        # same time-travel/lineage surface as write/append tables.
-        # DELTA manifest scoped to the batch's own ``batch_id=<b>``
-        # directory — a full-table manifest per batch commit would be an
-        # O(table files) walk + sidecar line count QUADRATIC in n_batches
-        # (256 batches × millions of files at design scale); readers
-        # reconstruct the full state by replaying deltas (Iceberg's
-        # incremental-manifest move)
-        self._commit(
-            table, "batch",
-            {
-                "batch_id": batch_id,
-                **self._manifest(
-                    table, df, ["batch_id", *(partition_by or [])],
-                    [f"batch_id={batch_id}"],
-                ),
-            },
         )
 
     def rewrite(
@@ -399,9 +347,10 @@ class Warehouse:
         list): ``files`` — a full snapshot, resets the state
         (write/append/rewrite/expire-checkpoint);
         ``partitions``+``partition_files`` — a partition-scoped delta
-        (a batch's ``batch_id=<b>`` dir, an incremental
-        overwrite_partitions), replaces exactly the listed hive
-        directories.  Non-manifest lineage rows pass through."""
+        (an ``overwrite_partitions`` with ``touched_partitions``: a
+        batch's ``batch_id=<b>`` dir, a refresh's cells), replaces
+        exactly the listed hive directories.  Non-manifest lineage rows
+        pass through."""
         if "files" in s:
             return list(s["files"])
         if "partition_files" in s:
@@ -458,14 +407,13 @@ class Warehouse:
         these hive directories (a partition-scoped delta).
 
         The read schema is what a scan of the table plans: ``df``'s data
-        columns, then the chain, all nullable.  A chain column ``df``
-        does not carry (a batch's ``batch_id``) is an int."""
+        columns, then the chain, all nullable."""
         chain = list(partition_by or [])
         have = {f.name: f.dataType for f in df.schema}
         schema = StructType([
             StructField(f.name, f.dataType, True, f.metadata)
             for f in df.schema if f.name not in chain
-        ] + [StructField(c, have.get(c, IntegerType()), True) for c in chain])
+        ] + [StructField(c, have[c], True) for c in chain])
         rec = {
             "snapshot_id": self._next_snapshot_id(table),
             "partition_by": chain,

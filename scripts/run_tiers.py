@@ -62,7 +62,6 @@ def main() -> None:
                     help="input split count; FIXED across parallelism "
                          "levels so task granularity (and skew wave "
                          "balance) is identical")
-    ap.add_argument("--no-pack", action="store_true")
     ap.add_argument("--salt-buckets", type=int, default=16,
                     help="finalize hot-cell salting fan-out (0 disables); "
                          "exposed so the scaling bench can bisect the "
@@ -96,7 +95,7 @@ def main() -> None:
     # comparison
     warm_wh = Warehouse(spark, tempfile.mkdtemp(prefix="tiers_warm_"))
     TierPipeline(spark, warm_wh, cfg, job_id="warm").run(
-        synth_sequences(spark, 1000), n_batches=1, pack=not args.no_pack
+        synth_sequences(spark, 1000), n_batches=1
     )
     shutil.rmtree(warm_wh.root, ignore_errors=True)
 
@@ -104,12 +103,9 @@ def main() -> None:
     if args.input:
         # table input → file-sliced batches: each batch scans only its own
         # ~1/n_batches of the input files (the prunable scale path)
-        out = pipe.run(
-            input_path=args.input, n_batches=args.batches,
-            pack=not args.no_pack,
-        )
+        out = pipe.run(input_path=args.input, n_batches=args.batches)
     else:
-        out = pipe.run(seqs, n_batches=args.batches, pack=not args.no_pack)
+        out = pipe.run(seqs, n_batches=args.batches)
     dt = time.time() - t0
 
     rec = {

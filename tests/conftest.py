@@ -18,3 +18,20 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def write_batch():
+    """fn(wh, df, table, batch_id, partition_by) commits ``df`` as batch
+    ``batch_id``'s ``batch_id=<b>/`` slice of ``table`` — the hourly
+    tier's batch commit (``TierPipeline._write_hourly``)."""
+    from pyspark.sql import functions as F
+
+    def write(wh, df, table, batch_id, partition_by):
+        wh.overwrite_partitions(
+            df.withColumn("batch_id", F.lit(batch_id)), table,
+            ["batch_id", *partition_by], metrics={"batch_id": batch_id},
+            touched_partitions=[{"batch_id": batch_id}],
+        )
+
+    return write

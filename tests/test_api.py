@@ -27,9 +27,7 @@ def test_img2ts_calc(spark, tmp_path):
 
 def test_ts2img_calc_with_hook(spark, tmp_path):
     whp = str(tmp_path / "wh")
-    Img2Ts(synth_sequences(spark, 40), whp, cellsize=8, imgbuffer=2).calc(
-        pack=False
-    )
+    Img2Ts(synth_sequences(spark, 40), whp, cellsize=8, imgbuffer=2).calc()
     hourly = Warehouse(spark, whp).read("img2ts_hourly").drop("batch_id")
 
     def halve(pdf):

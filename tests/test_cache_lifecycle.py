@@ -4,16 +4,21 @@ a result held lazily across ``KEEP - 1`` later registering calls still
 runs from its cache.  Each test's corpus is distinct, so no plan here
 matches a frame another test registered."""
 
+import os
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
+from repurpose_spark.config import EngineConfig
 from repurpose_spark.operators.cooccur import bigram_lift
 from repurpose_spark.operators.curation import curate_documents
 from repurpose_spark.operators.dedup import dedup_minhash_lsh
 from repurpose_spark.operators.ingest import ingest_with_dedup
 from repurpose_spark.operators.retrieval import bm25_scores
 from repurpose_spark.plans.cache import KEEP
+from repurpose_spark.plans.pipeline import TierPipeline
+from repurpose_spark.sources.synthetic import synth_sequences
 from repurpose_spark.sources.tables import Warehouse
 
 WORDS = ("the data cache plan frame query spark index batch table cell "
@@ -84,3 +89,18 @@ def test_lazy_result_survives_keep_minus_one_calls(spark):
     assert rows == eager and rows
     plan = again._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan
+
+
+def test_failed_batch_write_releases_its_frame(spark, tmp_path):
+    """A batch whose hourly write fails still releases the tier frame it
+    cached: a plain file where the table directory belongs makes the
+    Warehouse write raise, and the session's cache count is unchanged."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    pipe = TierPipeline(spark, wh, EngineConfig(n_cells=4), job_id="t")
+    with open(os.path.join(wh.root, pipe.hourly_table()), "w") as f:
+        f.write("not a table directory")
+    before = _entries(spark)
+    with pytest.raises(Exception):
+        pipe.run(synth_sequences(spark, 20), n_batches=1)
+    assert pipe.completed_batches() == set()
+    assert _entries(spark) == before

@@ -92,7 +92,9 @@ def test_compact_sort_by_clusters_rowgroups(spark, tmp_path):
         assert ticks == sorted(ticks), f
 
 
-def test_compact_writes_one_file_per_cell_on_many_tasks(spark, tmp_path):
+def test_compact_writes_one_file_per_cell_on_many_tasks(
+    spark, tmp_path, write_batch
+):
     """A partitioned compaction makes exactly one file per partition
     value — 64 cells, 64 files — and spreads the cells over several write
     tasks (a written file's ``part-NNNNN`` is its task's partition), not
@@ -100,11 +102,12 @@ def test_compact_writes_one_file_per_cell_on_many_tasks(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path))
     t = "cells"
     for b in range(2):
-        wh.write_batch_partition(
+        write_batch(
+            wh,
             spark.range(6400).select(
                 F.col("id").alias("k"), (F.col("id") % 64).cast("int").alias("cell_id")
             ).repartition(4),
-            t, b, partition_by=["cell_id"],
+            t, b, ["cell_id"],
         )
     expect = _rows(wh.read(t).drop("batch_id"))
     m = compact_table(
@@ -117,7 +120,7 @@ def test_compact_writes_one_file_per_cell_on_many_tasks(spark, tmp_path):
     assert _rows(wh.read(t).drop("batch_id")) == expect
 
 
-def test_pipeline_compact_collapses_batches(spark, tmp_path):
+def test_pipeline_compact_collapses_batches(spark, tmp_path, write_batch):
     """TierPipeline.compact() collapses completed batch partitions into
     batch_id=-1 (n_batches x n_cells files -> n_cells), keeping the
     two-level hive layout so later batches append cleanly; tier data
@@ -149,9 +152,10 @@ def test_pipeline_compact_collapses_batches(spark, tmp_path):
         for d in os.listdir(wh.path(t))
     )
     # a later batch still appends cleanly next to the collapsed one
-    wh.write_batch_partition(
+    write_batch(
+        wh,
         wh.read(t).where("cell_id = 0").withColumn("batch_id", F.lit(9)).drop("batch_id"),
-        t, 9, partition_by=["cell_id"],
+        t, 9, ["cell_id"],
     )
     assert wh.read(t).where("batch_id = 9").count() > 0
 

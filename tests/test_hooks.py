@@ -87,7 +87,7 @@ def test_tier_pipeline_postprocess_applies_to_daily(spark, tmp_path):
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
     pipe = TierPipeline(spark, wh, CFG, job_id="t", postprocess=[tag])
-    pipe.run(synth_sequences(spark, 30), n_batches=2, pack=False)
+    pipe.run(synth_sequences(spark, 30), n_batches=2)
     daily = wh.read(pipe.daily_table())
     assert "tagged" in daily.columns
     assert daily.where(~F.col("tagged")).count() == 0

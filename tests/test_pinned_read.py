@@ -101,7 +101,7 @@ def test_repeat_read_launches_no_job(spark, tmp_path):
     assert second is first
 
 
-def test_every_commit_replans(spark, tmp_path):
+def test_every_commit_replans(spark, tmp_path, write_batch):
     wh = Warehouse(spark, str(tmp_path))
     t = "t"
     wh.write(_frame(spark, [1, 2]), t, partition_by=["cell"])
@@ -132,13 +132,15 @@ def test_every_commit_replans(spark, tmp_path):
     assert _ks(wh, t) == [10]
 
     b = "batched"
-    wh.write_batch_partition(_frame(spark, [1]), b, 0, partition_by=["cell"])
+    write_batch(wh, _frame(spark, [1]), b, 0, ["cell"])
     assert _ks(wh, b) == [1]
-    wh.write_batch_partition(_frame(spark, [2]), b, 1, partition_by=["cell"])
+    write_batch(wh, _frame(spark, [2]), b, 1, ["cell"])
     assert _ks(wh, b) == [1, 2]
 
 
-def test_first_read_after_each_commit_plans_no_job(spark, tmp_path):
+def test_first_read_after_each_commit_plans_no_job(
+    spark, tmp_path, write_batch
+):
     """Every commit kind records the read schema: the first read after it
     launches no Spark job (no listing, no footer read) and plans the
     schema inference would."""
@@ -170,9 +172,7 @@ def test_first_read_after_each_commit_plans_no_job(spark, tmp_path):
     check(t)
     assert _ks(wh, t) == [5, 6, 7]
     for batch in range(2):
-        wh.write_batch_partition(
-            _frame(spark, [batch]), b, batch, partition_by=["cell"]
-        )
+        write_batch(wh, _frame(spark, [batch]), b, batch, ["cell"])
         check(b)
 
 
@@ -238,12 +238,13 @@ def test_finalize_jobs_carry_the_callers_group(spark, tmp_path):
     run their jobs under the job group set around the call."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
     pipe = TierPipeline(spark, wh, EngineConfig(n_cells=8), job_id="t")
-    pipe.run(synth_sequences(spark, 60), n_batches=1, pack=False)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        pipe.run(synth_sequences(spark, 60), n_batches=1, fail_after_batch=1)
     sc = spark.sparkContext
 
     def grouped_finalize():
         sc.setJobGroup("finalize-under-test", "finalize")
-        return pipe.finalize(pack=True)
+        return pipe.finalize()
 
     out, jobs = _job_log(spark, grouped_finalize)
     assert out["n_packed"] == 60

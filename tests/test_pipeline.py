@@ -86,7 +86,7 @@ def test_rerun_incomplete_batch_is_idempotent(spark, seqs, tmp_path):
 def test_retention_expiry(spark, seqs, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
     pipe = TierPipeline(spark, wh, CFG, job_id="t")
-    pipe.run(seqs, n_batches=2, pack=False)
+    pipe.run(seqs, n_batches=2)
     hourly = wh.read(pipe.hourly_table())
     horizon = "2020-01-01 02:00:00"
     n_old = hourly.where(F.col("tick") < horizon).count()
@@ -106,7 +106,7 @@ def test_apply_retention_policy(spark, seqs, tmp_path):
     keeps everything (the coarser tier retains what the finer drops)."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
     pipe = TierPipeline(spark, wh, CFG, job_id="t")
-    pipe.run(seqs, n_batches=2, pack=False)
+    pipe.run(seqs, n_batches=2)
     n_daily = wh.read(pipe.daily_table()).count()
     out = pipe.apply_retention({"hourly": "2020-01-01 02:00:00"})
     assert out["hourly"]["n_dropped"] > 0
@@ -136,25 +136,35 @@ def test_refresh_after_retention_keeps_daily_history(spark, seqs, tmp_path):
     assert out["n_new_files"] == 0 and out["n_refreshed_cells"] == 0
 
 
-def test_packed_tier_builds_after_a_run_without_it(spark, seqs, tmp_path):
-    """Each derived tier keeps its own coverage: a ``pack=False`` run
-    covers daily only, so a later run with ``pack=True`` builds the whole
-    packed tier, equal to a single-shot run's, and leaves daily alone."""
+def test_finalize_builds_the_packed_tier_a_split_coverage_row_left(
+    spark, seqs, tmp_path
+):
+    """A finalize row from when the tiers kept separate coverage sets
+    covers only the batches both sets hold: after a row recording daily
+    over batches 0-1 and packed over none, finalize builds the whole
+    packed tier, equal to a single-shot run's, and rewrites daily with
+    the same rows."""
     wh_a = Warehouse(spark, str(tmp_path / "a"))
-    ref = TierPipeline(spark, wh_a, CFG, job_id="t")
-    ref.run(seqs, n_batches=2)
+    TierPipeline(spark, wh_a, CFG, job_id="t").run(seqs, n_batches=2)
 
     wh = Warehouse(spark, str(tmp_path / "b"))
     pipe = TierPipeline(spark, wh, CFG, job_id="t")
-    first = pipe.run(seqs, n_batches=2, pack=False)
-    assert "n_packed" not in first and not wh.exists(pipe.packed_table())
-    out = pipe.run(seqs, n_batches=2)
-    assert out["n_daily"] == 0 and out["n_packed"] == N_DOCS
-    assert out["n_refreshed_cells"] == CFG.n_cells
-    for t in (pipe.daily_table(), pipe.packed_table()):
-        cols = sorted(wh_a.read(t).columns)
-        assert _sorted(wh.read(t), cols) == _sorted(wh_a.read(t), cols), t
-    assert pipe.run(seqs, n_batches=2)["n_refreshed_cells"] == 0
+    pipe.run(seqs, n_batches=2)
+    cols = sorted(wh.read(pipe.daily_table()).columns)
+    daily = _sorted(wh.read(pipe.daily_table()), cols)
+    wh._commit(
+        pipe._ledger_table(), "finalize",
+        {"status": "finalize", "batches": [0, 1], "packed": []},
+    )
+    assert pipe._finalized_batches() == set()
+    out = pipe.finalize()
+    assert out["n_packed"] == N_DOCS
+    assert _sorted(wh.read(pipe.daily_table()), cols) == daily
+    cols = sorted(wh_a.read(pipe.packed_table()).columns)
+    assert _sorted(wh.read(pipe.packed_table()), cols) == _sorted(
+        wh_a.read(pipe.packed_table()), cols
+    )
+    assert pipe._finalized_batches() == {0, 1}
 
 
 def test_retention_commits_its_manifest(spark, seqs, tmp_path):
@@ -164,7 +174,7 @@ def test_retention_commits_its_manifest(spark, seqs, tmp_path):
     and names no file that retention deleted."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
     pipe = TierPipeline(spark, wh, CFG, job_id="t")
-    pipe.run(seqs, n_batches=2, pack=False)
+    pipe.run(seqs, n_batches=2)
     pipe.compact()
     pipe.apply_retention({"hourly": "2020-01-01 02:00:00"})
     t = pipe.hourly_table()
@@ -184,7 +194,7 @@ def test_retention_preserves_partition_layout_and_appends(spark, seqs, tmp_path)
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
     pipe = TierPipeline(spark, wh, CFG, job_id="t")
-    pipe.run(seqs, n_batches=2, pack=False)
+    pipe.run(seqs, n_batches=2)
     expire_tier(wh, pipe.hourly_table(), "2020-01-01 02:00:00")
     top = sorted(
         d for d in os.listdir(wh.path(pipe.hourly_table()))
@@ -196,7 +206,7 @@ def test_retention_preserves_partition_layout_and_appends(spark, seqs, tmp_path)
         F.col("doc_id") > f"doc{N_DOCS - 1:08d}"
     )
     # ledger says batches 0-1 are done; run 3 batches so the new docs land
-    pipe.run(extra, n_batches=3, pack=False)
+    pipe.run(extra, n_batches=3)
     hourly = wh.read(pipe.hourly_table())
     assert hourly.where(F.col("tick") < "2020-01-01 02:00:00").select(
         "doc_id"
@@ -204,7 +214,9 @@ def test_retention_preserves_partition_layout_and_appends(spark, seqs, tmp_path)
     assert {c for c in ("batch_id", "cell_id")} <= set(hourly.columns)
 
 
-def test_retention_past_all_data_keeps_tier_readable(spark, tmp_path):
+def test_retention_past_all_data_keeps_tier_readable(
+    spark, tmp_path, write_batch
+):
     """An expiry that drops every row writes no parquet file: the tier
     must still read (zero rows, its columns), a second expiry must keep
     the recorded batch_id/cell_id layout, and a later batch appends."""
@@ -214,13 +226,13 @@ def test_retention_past_all_data_keeps_tier_readable(spark, tmp_path):
         [(c, "2020-01-01 01:00:00", 1) for c in range(3)],
         "cell_id int, tick string, n_points long",
     ).withColumn("tick", F.col("tick").cast("timestamp"))
-    wh.write_batch_partition(rows, t, 0, partition_by=["cell_id"])
+    write_batch(wh, rows, t, 0, ["cell_id"])
     cols = wh.read(t).columns
     for _ in range(2):
         assert expire_tier(wh, t, "2099-01-01")["n_kept"] == 0
         left = wh.read(t)
         assert left.columns == cols and left.count() == 0
-    wh.write_batch_partition(rows, t, 1, partition_by=["cell_id"])
+    write_batch(wh, rows, t, 1, ["cell_id"])
     assert sorted(
         (r["batch_id"], r["cell_id"]) for r in wh.read(t).collect()
     ) == [(1, 0), (1, 1), (1, 2)]
@@ -265,7 +277,7 @@ def test_ledger_last_attempt_wins(spark, seqs, tmp_path):
     only the newest cell row per (batch_id, cell_id)."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
     pipe = TierPipeline(spark, wh, CFG, job_id="t")
-    pipe.run(seqs, n_batches=2, pack=False)
+    pipe.run(seqs, n_batches=2)
     rows1 = [r for r in pipe.ledger_rows() if r["status"] == "cell"]
     # simulate a pre-marker crash followed by a re-run: the same batch's
     # cell rows appear twice in the sidecar
@@ -283,7 +295,7 @@ def test_torn_ledger_line_is_ignored(spark, seqs, tmp_path):
     unacknowledged record must read as absent, not crash the reader."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
     pipe = TierPipeline(spark, wh, CFG, job_id="t")
-    pipe.run(seqs, n_batches=2, pack=False)
+    pipe.run(seqs, n_batches=2)
     with open(wh._meta(pipe._ledger_table()), "a") as f:
         f.write('{"batch_id": 9, "status": "do')  # torn write
     assert pipe.completed_batches() == {0, 1}

@@ -123,7 +123,6 @@ def test_ordered_export_salted_spreads_hot_key_and_stays_sorted(spark):
     out = ordered_export_salted(
         df, key_cols=["cell_id"], order_cols=["doc_id", "pos"],
         fine_col="pos", buckets=8, hot_keys=[{"cell_id": 0}],
-        num_partitions=64,
     )
     tagged = out.withColumn("__pid", F.spark_partition_id()).cache()
     # multiset preserved

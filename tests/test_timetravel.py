@@ -63,16 +63,17 @@ def test_lineage_metrics_still_ride_snapshots(spark, tmp_path):
     assert recs[-1]["snapshot_id"] == 0 and recs[-1]["files"]
 
 
-def test_batch_writes_are_snapshots(spark, tmp_path):
-    """write_batch_partition commits a file manifest like write/append
+def test_batch_writes_are_snapshots(spark, tmp_path, write_batch):
+    """A batch commit (``overwrite_partitions`` of its ``batch_id=<b>/``
+    slice) records a file manifest like write/append
     (VERDICT r2 missing #3): the batch-built hourly tier time-travels —
     reading AS OF batch 0's commit excludes batch 1's rows."""
     wh = Warehouse(spark, str(tmp_path))
     t = "tiers_hourly"
     b0 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, cell string")
-    wh.write_batch_partition(b0, t, 0, partition_by=["cell"])
+    write_batch(wh, b0, t, 0, ["cell"])
     b1 = spark.createDataFrame([(3, "a")], "k long, cell string")
-    wh.write_batch_partition(b1, t, 1, partition_by=["cell"])
+    write_batch(wh, b1, t, 1, ["cell"])
 
     ids = wh.snapshot_ids(t)
     assert ids == [0, 1]
@@ -87,7 +88,7 @@ def test_batch_writes_are_snapshots(spark, tmp_path):
     assert {"batch_id", "cell"} <= set(snap.columns)
     # an idempotent batch re-write (crash between data + ledger commits)
     # overwrites its own partition and the new snapshot stays coherent
-    wh.write_batch_partition(b1, t, 1, partition_by=["cell"])
+    write_batch(wh, b1, t, 1, ["cell"])
     assert ks(wh.read(t)) == [1, 2, 3]
     assert ks(wh.read(t, snapshot_id=wh.snapshot_ids(t)[-1])) == [1, 2, 3]
 
@@ -101,7 +102,7 @@ def test_tier_pipeline_hourly_time_travels(spark, tmp_path):
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
     pipe = TierPipeline(spark, wh, EngineConfig(n_cells=8), job_id="t")
-    pipe.run(synth_sequences(spark, 60), n_batches=2, pack=False)
+    pipe.run(synth_sequences(spark, 60), n_batches=2)
     t = pipe.hourly_table()
     ids = wh.snapshot_ids(t)
     assert len(ids) == 2  # one manifest per batch commit
@@ -111,7 +112,7 @@ def test_tier_pipeline_hourly_time_travels(spark, tmp_path):
     assert early.select("batch_id").distinct().count() == 1
 
 
-def test_batch_manifests_are_deltas(spark, tmp_path):
+def test_batch_manifests_are_deltas(spark, tmp_path, write_batch):
     """Each batch commit records only its OWN files — a full-table
     manifest per batch would make the sidecar quadratic in n_batches at
     design scale (256 batches x millions of files)."""
@@ -121,8 +122,10 @@ def test_batch_manifests_are_deltas(spark, tmp_path):
         df = spark.createDataFrame(
             [(b * 10 + i, "a") for i in range(5)], "k long, cell string"
         )
-        wh.write_batch_partition(df, t, b, partition_by=["cell"])
-    recs = [s for s in wh.snapshots(t) if s.get("mode") == "batch"]
+        write_batch(wh, df, t, b, ["cell"])
+    recs = [
+        s for s in wh.snapshots(t) if s.get("mode") == "overwrite_partitions"
+    ]
     assert len(recs) == 3
     for r in recs:
         assert "files" not in r
@@ -136,7 +139,7 @@ def test_batch_manifests_are_deltas(spark, tmp_path):
     assert full.count() == 15
 
 
-def test_expire_snapshots_checkpoints_deltas(spark, tmp_path):
+def test_expire_snapshots_checkpoints_deltas(spark, tmp_path, write_batch):
     """Expiring old snapshots collapses their delta manifests into one
     checkpoint: the current state and every kept snapshot still read
     exactly, older ids stop being travel targets, lineage rows survive."""
@@ -146,7 +149,7 @@ def test_expire_snapshots_checkpoints_deltas(spark, tmp_path):
         df = spark.createDataFrame(
             [(b * 10 + i, "a") for i in range(3)], "k long, cell string"
         )
-        wh.write_batch_partition(df, t, b, partition_by=["cell"])
+        write_batch(wh, df, t, b, ["cell"])
     wh._commit(t, "metrics", {"n_rows": 12, "tier": "hourly"})
     assert wh.snapshot_ids(t) == [0, 1, 2, 3]
 
@@ -168,9 +171,9 @@ def test_expire_snapshots_checkpoints_deltas(spark, tmp_path):
     assert any(s.get("tier") == "hourly" for s in wh.snapshots(t))
 
     # new batch writes continue on top of the checkpointed sidecar
-    wh.write_batch_partition(
-        spark.createDataFrame([(99, "a")], "k long, cell string"),
-        t, 4, partition_by=["cell"],
+    write_batch(
+        wh, spark.createDataFrame([(99, "a")], "k long, cell string"),
+        t, 4, ["cell"],
     )
     assert wh.snapshot_ids(t) == [2, 3, 4]
     assert len(ks(wh.read(t, snapshot_id=4))) == 13
@@ -235,6 +238,16 @@ def test_partition_overwrite_manifests_are_deltas(spark, tmp_path):
     assert vs(wh.read(t, snapshot_id=wh.snapshot_ids(t)[-1])) == (
         [0, 1, 5, 111, 222, 333]
     )
+
+    # a touched row missing a chain key raises before the write: every
+    # file of the table stays as it was
+    files = wh.live_files(t)
+    with pytest.raises(KeyError):
+        wh.overwrite_partitions(
+            spark.createDataFrame([(2, 7)], "cell_id int, v long"),
+            t, ["cell_id"], touched_partitions=[{"cell": 2}],
+        )
+    assert wh.live_files(t) == files
 
 
 def test_incremental_finalize_commits_partition_delta(spark, tmp_path):
