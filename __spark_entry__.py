@@ -2620,7 +2620,7 @@ def q_doc_edit_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     so verification is EXACT — and the entry runs the banded-DP scale
     kernel: max_dist="auto" derives the cap ceil((1−min_sim)·max_len)
     from one projected scan, so banding is output-identical BY
-    CONSTRUCTION (3.9× at sf0.1, BENCH_EDIT_r05.json; pytest pins
+    CONSTRUCTION (3.9× at sf0.1, artifacts/BENCH_EDIT_r05.json; pytest pins
     full == capped == auto)."""
     from repurpose_spark.operators.dedup import edit_distance_pairs
 

@@ -7,11 +7,12 @@ parallelism.  ``dt_seconds`` defines the derived per-token timestamp axis
 ``ts = epoch + pos * dt`` (SURVEY.md §7.0).
 
 Only what several operators must agree on lives here.  Knobs with one
-user are that user's arguments: salting is ``TierPipeline``'s
-``salt_buckets`` (its hot-cell share is ``plans.pipeline``'s
-``HOT_CELL_THRESHOLD`` constant), the collocation window is
-``collocate``'s ``tolerance_seconds``, storage is the ``Warehouse`` root
-and the session's parquet codec.
+user are that user's arguments or constants: the hot-cell share
+``TierPipeline`` reports is ``plans.pipeline``'s ``HOT_CELL_THRESHOLD``
+(tier files are range-partitioned on ``(cell_id, doc_id)``, so a hot cell
+needs no salting), the collocation window is ``collocate``'s
+``tolerance_seconds``, storage is the ``Warehouse`` root and the
+session's parquet codec.
 """
 
 from __future__ import annotations

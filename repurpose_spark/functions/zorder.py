@@ -31,6 +31,32 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def metadata_bounds(md, cols: list) -> dict:
+    """Per-column (lo, hi) over one parquet file's row groups, from its
+    footer metadata (``pyarrow.parquet.FileMetaData``); None for a
+    column the file lacks or whose statistics are missing or
+    non-numeric.  A file with no row group maps every column to None."""
+    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+    out = {}
+    for c in cols:
+        b = None
+        for rg in range(md.num_row_groups if c in idx else 0):
+            st = md.row_group(rg).column(idx[c]).statistics
+            try:
+                # missing statistics, or non-numeric ones (string/bytes/
+                # decimal objects) that aren't float-convertible: the
+                # column gets no bounds, so a caller's aggregate scan
+                # takes over instead of raising out of compact_table
+                # (ADVICE r4 low)
+                lo, hi = float(st.min), float(st.max)
+            except (AttributeError, TypeError, ValueError):
+                b = None
+                break
+            b = (lo, hi) if b is None else (min(b[0], lo), max(b[1], hi))
+        out[c] = b
+    return out
+
+
 def parquet_footer_bounds(path: str, cols: list) -> dict:
     """Per-column (lo, hi) from parquet row-group statistics — footer
     metadata only, no Spark job and no data-page read.  Walks hive
@@ -38,41 +64,21 @@ def parquet_footer_bounds(path: str, cols: list) -> dict:
     None (caller falls back to the aggregate scan)."""
     import pyarrow.parquet as pq
 
-    bounds = {c: None for c in cols}
+    bounds = dict.fromkeys(cols)
     complete = dict.fromkeys(cols, True)
     for root, _dirs, names in os.walk(path):
         for n in names:
             if not n.endswith(".parquet"):
                 continue
-            md = pq.ParquetFile(os.path.join(root, n)).metadata
-            idx = {
-                md.schema.column(i).name: i for i in range(md.num_columns)
-            }
-            for c in cols:
-                if c not in idx or not complete[c]:
-                    complete[c] = c in idx and complete[c]
-                    continue
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx[c]).statistics
-                    if st is None or not st.has_min_max:
-                        complete[c] = False
-                        break
-                    try:
-                        # non-numeric stats (string/bytes/decimal objects)
-                        # aren't float-convertible — mark the column
-                        # incomplete so the caller's 1-row aggregate scan
-                        # (cast-to-double, null→rank 0) takes over instead
-                        # of raising out of compact_table (ADVICE r4 low)
-                        lo, hi = float(st.min), float(st.max)
-                    except (TypeError, ValueError):
-                        complete[c] = False
-                        break
-                    cur = bounds[c]
-                    bounds[c] = (
-                        (lo, hi)
-                        if cur is None
-                        else (min(cur[0], lo), max(cur[1], hi))
-                    )
+            md = pq.read_metadata(os.path.join(root, n))
+            if not md.num_row_groups:
+                continue
+            for c, b in metadata_bounds(md, cols).items():
+                cur = bounds[c]
+                complete[c] = complete[c] and b is not None
+                if complete[c]:
+                    bounds[c] = b if cur is None else (
+                        min(cur[0], b[0]), max(cur[1], b[1]))
     return {c: (bounds[c] if complete[c] else None) for c in cols}
 
 

@@ -732,7 +732,7 @@ def edit_distance_pairs(
       max_len)`` from one projected min/max scan of the corpus (no
       shuffle; any pair's budget is ≤ that cap, so the banded kernel
       is output-identical BY CONSTRUCTION — measured 3.9× at sf0.1,
-      BENCH_EDIT_r05.json); pytest additionally pins that any explicit
+      artifacts/BENCH_EDIT_r05.json); pytest additionally pins that any explicit
       cap ≥ the similarity budget matches the full kernel.
 
     Similarity is relative: ``edit_sim = 1 - dist / greatest(len_a,

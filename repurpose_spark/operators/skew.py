@@ -102,7 +102,7 @@ def ordered_export_salted(
     hot_keys: list | None = None,
 ) -> DataFrame:
     """Per-key clustered export with hot keys fanned out — the shape
-    where salting measurably wins (BENCH_SKEW.json: 1.35× at a 21% hot
+    where salting measurably wins (artifacts/BENCH_SKEW.json: 1.35× at a 21% hot
     cell; rollups DON'T need it, map-side combine absorbs them).
 
     ``repartition(key)`` + sort-within-partition puts a hot key's

@@ -1,24 +1,23 @@
-"""Small-file compaction: rewrite a table so each partition holds few,
-right-sized files.
+"""Small-file compaction: rewrite a table into few, right-sized files.
 
-The tier pipeline appends one file set per batch per cell — correct and
-idempotent, but after many batches a cell directory holds
-O(batches · shuffle_partitions) small parquet files, and at 10^12
-sequences the scan's file-listing and per-file open costs dominate.
-Compaction is the standard maintenance job (Iceberg: rewrite_data_files;
-Delta: OPTIMIZE): rewrite the same rows into ~target-sized files,
-preserving the partition layout, committed as a snapshot.
+The tier pipeline appends a file set per batch — correct and idempotent,
+but after many batches the table holds O(batches) small parquet files,
+and at 10^12 sequences the scan's file-listing and per-file open costs
+dominate.  Compaction is the standard maintenance job (Iceberg:
+rewrite_data_files; Delta: OPTIMIZE): rewrite the same rows into
+~target-sized files, preserving the partition layout, committed as a
+snapshot.
 
 Parquet twin mechanics: ``Warehouse.rewrite`` — the one whole-table
-rewrite retention also uses (staged files, crash-safe rename swap, one
-full manifest).  A partitioned table is rewritten through
-``repartition(write_partitions, *partition_chain)``: the hash on the
-chain sends each partition value to one task, so every partition comes
-out as exactly ONE file, whatever its size — ``TARGET_FILE_BYTES`` sizes
-only unpartitioned tables (n = live bytes / target, from
-``Warehouse.live_files``, the twin's analog of Iceberg's file-size
-metadata).  Range-split files per partition would make the target real
-for partitioned tables too (ROADMAP).
+rewrite retention also uses (appended files, one full manifest, then the
+old files deleted).  A range-laid-out table (a tier: ``cell_id`` is a
+data column) is rewritten as ``range_sorted`` files that AQE's coalescing
+sizes by bytes.  A table hive-partitioned on other columns is rewritten
+through ``repartition(write_partitions, *partition_chain)``: the hash on
+the chain sends each partition value to one task, so every partition
+comes out as exactly ONE file.  ``TARGET_FILE_BYTES`` sizes an
+unpartitioned table without ``cell_id`` (n = live bytes / target, from
+the manifest's file entries).
 """
 
 from __future__ import annotations
@@ -26,7 +25,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from repurpose_spark.plans.parallelism import write_partitions
-from repurpose_spark.sources.tables import Warehouse
+from repurpose_spark.sources.tables import (
+    Warehouse,
+    is_range_layout,
+    range_sorted,
+)
 
 # output file size of an unpartitioned compaction, and the Iceberg
 # rewrite_data_files target
@@ -40,9 +43,10 @@ def compact_table(
     transform=None,
     zorder_by: list | None = None,
 ) -> dict:
-    """Rewrite ``table`` into one file per partition (partitioned
-    tables) or ~``TARGET_FILE_BYTES`` files (unpartitioned); returns
-    before/after file counts.  Iceberg branch: delegates to the engine's
+    """Rewrite ``table`` into range-sorted byte-sized files (the range
+    layout), one file per partition (other partitioned tables) or
+    ~``TARGET_FILE_BYTES`` files (unpartitioned); returns before/after
+    file counts.  Iceberg branch: delegates to the engine's
     rewrite_data_files procedure (cluster-only).
 
     ``sort_by``: cluster rows within each output file by these columns
@@ -70,7 +74,7 @@ def compact_table(
         wh._commit(table, "compact", {"op": "compact"})
         return {"op": "compact"}
 
-    before = wh.live_files(table)
+    before = wh.files(table)
     chain = wh.partition_chain(table)
     df = wh.read(table)
     if transform is not None:
@@ -87,14 +91,18 @@ def compact_table(
         sort_by = list(sort_by or []) + [
             zorder_sort_key(df, zorder_by, bounds=bounds)
         ]
-    # hive layout: one shuffle keyed on the partition chain, one file
-    # per partition value on every core; unpartitioned: bytes-sized files
-    n_out = write_partitions(wh.spark) if chain else max(
-        1, -(-sum(before.values()) // TARGET_FILE_BYTES)
-    )
-    df = df.repartition(n_out, *[F.col(c) for c in chain])
-    if sort_by:
-        df = df.sortWithinPartitions(*sort_by)
+    if is_range_layout(df, chain):
+        df = range_sorted(df, *(sort_by or []))
+    else:
+        # hive layout: one shuffle keyed on the partition chain, one
+        # file per partition value on every core; unpartitioned:
+        # bytes-sized files
+        n_out = write_partitions(wh.spark) if chain else max(1, -(-sum(
+            (e or {}).get("bytes", 0) for e in before.values()
+        ) // TARGET_FILE_BYTES))
+        df = df.repartition(n_out, *[F.col(c) for c in chain])
+        if sort_by:
+            df = df.sortWithinPartitions(*sort_by)
     # the commit carries the post-compact manifest: pre-compact snapshots
     # expire (their files are gone — Iceberg keeps them until expiry),
     # but the POST-compact state is time-travelable
@@ -102,5 +110,5 @@ def compact_table(
         "op": "compact",
         "files_before": len(before),
         "files_after": len(files),
-        "bytes": sum(files.values()),
+        "bytes": sum(e["bytes"] for e in files.values()),
     })

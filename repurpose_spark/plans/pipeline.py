@@ -6,9 +6,10 @@ netCDF files (img2ts.py:652, :801, mode='a' :470); a killed job can be
 rerun over the remaining date range by hand.  Here the unit is a **batch**
 (a deterministic hash-slice of doc_ids) and resume is automatic:
 
-* every batch writes its hourly tier into its own ``batch_id`` partition
-  with dynamic-partition overwrite, so re-running an incomplete batch is
-  **idempotent** (the half-written partition is replaced, never doubled);
+* every batch writes its hourly tier into its own ``batch_id=<b>/``
+  directory as a few range-sorted files, committed by replacing that
+  directory's files in the manifest, so re-running an incomplete batch is
+  **idempotent** (the half-written slice is replaced, never doubled);
 * a per-``(batch_id, cell_id)`` ledger row — series count + point count —
   is committed only after the batch's data commit.  The ledger is both the
   checkpoint (resume skips batches whose cells are all ledgered) and the
@@ -21,7 +22,9 @@ rerun over the remaining date range by hand.  Here the unit is a **batch**
   points are exploded and shuffled exactly once per batch — and only for
   the cells of batches no finalize has covered yet, so a run with nothing
   new never re-derives a cell from the hours retention has left (see
-  ``TierPipeline.finalize``).
+  ``TierPipeline.finalize``).  Daily and packed are unpartitioned range
+  files; a refresh copies on write only the files whose ``cell_id`` range
+  meets the refreshed cells (``Warehouse.replace_cells``).
 
 At cluster scale a batch bounds the working set exactly like imgbuffer
 bounds memory ("chosen so that the memory of your machine is utilized",
@@ -42,12 +45,15 @@ from repurpose_spark.operators.rollup import (
     rollup_points,
     with_avg,
 )
-from repurpose_spark.plans.parallelism import write_partitions
-from repurpose_spark.sources.tables import Warehouse, schema_reader
+from repurpose_spark.sources.tables import (
+    Warehouse,
+    range_sorted,
+    schema_reader,
+)
 
 LEDGER = "_ledger"
-# a cell holding more than this share of a refresh's points is hot:
-# finalize fans its tier writes over ``salt_buckets`` slices
+# a cell holding more than this share of a refresh's points is hot (a
+# ledger report: ranging on doc_id already splits it across files)
 HOT_CELL_THRESHOLD = 0.2
 
 
@@ -83,7 +89,6 @@ class TierPipeline:
         postprocess: list | None = None,
         sketch_distinct: bool = False,
         sketch_quantiles: bool = False,
-        salt_buckets: int = 16,
     ):
         """``postprocess``: F2 hooks — fn(DataFrame) -> DataFrame applied
         to each derived tier before it is written (the reference applies
@@ -101,15 +106,7 @@ class TierPipeline:
         aggregates — daily p50/p99 without raw re-reads; rank-error
         bounded, functions/qsketch.py).  Downstream maintenance
         (incremental refresh, compaction, expiry) treats it as any
-        other mergeable partial column.
-
-        ``salt_buckets``: finalize's clustered tier writes fan any cell
-        holding more than ``HOT_CELL_THRESHOLD`` of the refresh scope's
-        points over ``salt_buckets`` write slices
-        (operators.skew.ordered_export_salted) — without this a 30 %-hot
-        cell funnels through ONE task's sort (BENCH_SKEW.json measured
-        1.35× at 21 % skew, growing with hot share; VERDICT r4 #1).
-        ``salt_buckets=0`` disables salting."""
+        other mergeable partial column."""
         self.spark = spark
         self.wh = warehouse
         self.cfg = cfg
@@ -117,7 +114,6 @@ class TierPipeline:
         self.postprocess = postprocess or []
         self.sketch_distinct = sketch_distinct
         self.sketch_quantiles = sketch_quantiles
-        self.salt_buckets = salt_buckets
 
     # -- ledger --------------------------------------------------------------
     def _ledger_table(self) -> str:
@@ -465,17 +461,15 @@ class TierPipeline:
             # routed through the Warehouse so the Iceberg backend gets
             # the same contract via overwritePartitions (ADVICE r1:
             # never bypass the abstraction).  The commit records a DELTA
-            # manifest of ``batch_id=<b>/`` only — a full-table manifest
-            # per batch would be an O(table files) walk + sidecar line
-            # count QUADRATIC in n_batches (256 batches × millions of
-            # files at design scale); readers replay the deltas
-            # (Iceberg's incremental-manifest move)
+            # manifest of ``batch_id=<b>/``'s files only — a full-table
+            # manifest per batch would be a sidecar QUADRATIC in
+            # n_batches (256 batches × millions of files at design
+            # scale); readers replay the deltas (Iceberg's
+            # incremental-manifest move)
             self.wh.overwrite_partitions(
-                hourly.withColumn("batch_id", F.lit(batch_id)).repartition(
-                    write_partitions(self.spark), "cell_id"
-                ),
+                range_sorted(hourly.withColumn("batch_id", F.lit(batch_id))),
                 self.hourly_table(),
-                ["batch_id", "cell_id"],
+                ["batch_id"],
                 metrics={"batch_id": batch_id},
                 touched_partitions=[{"batch_id": batch_id}],
             )
@@ -494,14 +488,13 @@ class TierPipeline:
 
     def compact(self, sort_by: list | None = None) -> dict:
         """Maintenance pass on the hourly tier: collapse COMPLETED
-        batch partitions into one ``batch_id=-1`` partition per cell —
-        after many batch appends the tier holds
-        O(n_batches · n_cells) files and this rewrites it to
-        O(n_cells) while keeping the two-level hive layout (no
-        mixed-depth directories, so later batches append cleanly).
-        Safe post-completion: the ledger's done markers keep resume
-        from re-running collapsed batches.  Optional ``sort_by``
-        clusters rows within files for parquet min/max pruning."""
+        batch partitions into one ``batch_id=-1`` partition of
+        range-sorted files — after many batch appends the tier holds
+        files per batch, and this rewrites them to a few byte-sized ones
+        while keeping the ``batch_id=`` hive layout (later batches
+        append cleanly).  Safe post-completion: the ledger's done markers
+        keep resume from re-running collapsed batches.  Optional
+        ``sort_by`` is appended to the range layout's row order."""
         from repurpose_spark.plans.compaction import compact_table
 
         table = self.hourly_table()
@@ -595,7 +588,8 @@ class TierPipeline:
         by construction; no Spark job needed either.
 
         The refresh scans only those cells' hourly partials and replaces
-        exactly their partitions of both tiers.  Then one 'finalize'
+        exactly their rows in both tiers (copy-on-write of the files whose
+        cell range meets them).  Then one 'finalize'
         ledger row records the batches the tiers now cover (previous
         coverage + the pending batches); it commits after the tier
         writes, so a crash mid-finalize leaves the batches pending for
@@ -623,60 +617,27 @@ class TierPipeline:
         })
 
     def _refresh(self, cells: list) -> dict:
-        """Recompute the daily and packed partitions of ``cells`` from
-        their hourly partials and overwrite exactly those partitions."""
+        """Recompute the daily and packed rows of ``cells`` from their
+        hourly partials and replace exactly those cells' rows: a
+        copy-on-write of the files whose recorded cell range meets
+        them."""
         from concurrent.futures import ThreadPoolExecutor
 
-        from pyspark.sql import Observation
         from pyspark.util import inheritable_thread_target
 
         from repurpose_spark.operators.hooks import apply_batch_hooks
-        from repurpose_spark.operators.skew import ordered_export_salted
 
         hourly = (
             self.wh.read(self.hourly_table())
             .drop("batch_id")
             .where(F.col("cell_id").isin(cells))
         )
-        hot = self._hot_cells(cells) if self.salt_buckets else []
 
-        def _write(name, df, table, order_cols):
-            # metrics ride the write job itself (Observation) — never
-            # re-read a tier just for its lineage row (the packed
-            # re-count would scan every encoded blob again)
-            obs = Observation()
-            # cluster rows by their output partition BEFORE the
-            # partitionBy write — without this every task holds an open
-            # writer per cell it sees: O(tasks × cells) files and
-            # writer-memory pressure, and the write stage scales
-            # NEGATIVELY with parallelism (same defect, same fix as the
-            # r3 ANN index build; measured r4: finalize was the durable
-            # pipeline's weakest stage at 0.60 eff before this).
-            # When the ledger says a cell is HOT (> threshold of the
-            # scope's points), a plain repartition('cell_id') makes that
-            # cell ONE task's sort+write; ordered_export_salted fans it
-            # over ≤salt_buckets slices, each still internally sorted —
-            # identical rows, ≤buckets files for the hot cell, no
-            # straggler (VERDICT r4 #1).  Every other cell (all of them
-            # when ``hot`` is empty) keeps salt 0: one slice, one file
-            clustered = ordered_export_salted(
-                df.observe(obs, F.count(F.lit(1)).alias("n")),
-                key_cols=["cell_id"],
-                order_cols=order_cols,
-                fine_col="doc_id",
-                buckets=self.salt_buckets,
-                hot_keys=hot,
-            )
-            # the refresh knows its cell scope, so the commit records a
-            # partition-scoped delta manifest (O(refreshed cells' files))
-            # instead of walking the whole tier — at design scale a long
-            # run of small refreshes against a large tier must not pay
-            # O(table files) driver time per commit
-            self.wh.overwrite_partitions(
-                clustered, table, ["cell_id"],
-                touched_partitions=[{"cell_id": c} for c in cells],
-            )
-            n = obs.get["n"]
+        def _write(name, df, table):
+            # the row count rides the write job itself — never re-read a
+            # tier just for its lineage row (the packed re-count would
+            # scan every encoded blob again)
+            n = self.wh.replace_cells(df, table, cells)
             self.wh._commit(table, "metrics", {"n_rows": n, "tier": name})
             return n
 
@@ -702,12 +663,10 @@ class TierPipeline:
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             f_daily = pool.submit(
-                inherit(_write), "daily", daily, self.daily_table(),
-                ["doc_id", "tick"],
+                inherit(_write), "daily", daily, self.daily_table()
             )
             f_packed = pool.submit(
-                inherit(_write), "packed", packed, self.packed_table(),
-                ["doc_id"],
+                inherit(_write), "packed", packed, self.packed_table()
             )
             return {"n_daily": f_daily.result(),
                     "n_packed": f_packed.result()}

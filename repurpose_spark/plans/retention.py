@@ -8,8 +8,9 @@ policy promised to keep.
 
 With Iceberg this is a metadata-only ``DELETE WHERE tick < horizon`` on a
 day-partitioned table (partition drop + snapshot expiry); the Parquet twin
-rewrites the table filtered through ``Warehouse.rewrite`` — same
-semantics, and the lineage sidecar records rows kept/dropped either way.
+rewrites the table filtered through ``Warehouse.rewrite`` (a tier as
+range-sorted files) — same semantics, and the lineage sidecar records
+rows kept/dropped either way.
 """
 
 from __future__ import annotations
@@ -17,7 +18,11 @@ from __future__ import annotations
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
-from repurpose_spark.sources.tables import Warehouse
+from repurpose_spark.sources.tables import (
+    Warehouse,
+    is_range_layout,
+    range_sorted,
+)
 
 
 def expire_tier(
@@ -45,7 +50,9 @@ def expire_tier(
         return metrics
     # Parquet has no in-place delete: rewrite the kept rows.  Both counts
     # ride the rewrite's own write job (Observation), so the tier is
-    # scanned once
+    # scanned once; a range-laid-out tier is re-sorted into its range
+    # files, counted above that shuffle (its bounds-sampling job runs the
+    # plan below it a second time)
     obs = Observation()
 
     def metrics(_files):
@@ -55,5 +62,8 @@ def expire_tier(
             "n_kept": n["k"], "n_dropped": n["t"] - n["k"],
         }
 
-    keep = wh.read(table).observe(obs, *counts).where(kept)
+    df = wh.read(table)
+    if is_range_layout(df, wh.partition_chain(table)):
+        df = range_sorted(df)
+    keep = df.observe(obs, *counts).where(kept)
     return wh.rewrite(keep, table, "expire", metrics)

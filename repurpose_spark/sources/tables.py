@@ -1,21 +1,30 @@
 """Warehouse abstraction: Iceberg when the runtime jar is present, a
-cell-partitioned Parquet directory otherwise (SURVEY.md §7.1 step 1).
+manifest-tracked Parquet directory otherwise (SURVEY.md §7.1 step 1).
 
 The reference appends per-cell netCDF files with busy-retry loops
 (img2ts.py:466-501, :574-640); here a sink is an atomic Spark write —
-Iceberg gives optimistic-commit append snapshots, the Parquet twin gives
-``partitionBy('cell_id')`` dynamic-partition appends.  All engine code
-talks to this class only, so swapping the backend is a config change.
+Iceberg gives optimistic-commit snapshots, the Parquet twin gives
+append-then-commit.  All engine code talks to this class only, so
+swapping the backend is a config change.
 
-The Parquet twin's file-level decisions live here: every data commit
-records the table's partition chain, its read schema and a file manifest
-(full, or a partition-scoped delta), and every whole-table rewrite
-(compaction, retention) goes through ``Warehouse.rewrite`` and its rename
-swap.
+The Parquet twin's manifest is the table.  Every data commit goes through
+``Warehouse._commit_files``: it appends its new files (Spark's unique part
+names) into the data dir, commits ONE manifest line naming the files it
+removed and added, and only then deletes the removed files.  Each line
+records the table's partition chain and read schema, and each added file
+its row count, bytes and ``cell_id`` [min, max], read from the new files'
+parquet footers.  A current-state read plans exactly the replayed file
+list: a file that a crashed write left behind is never read, and
+``expire_snapshots`` deletes every parquet file no kept manifest names.
+
+Tables that carry ``cell_id`` as a data column use the range layout
+(``range_sorted``): a few byte-sized files sorted by ``(cell_id, doc_id,
+tick)`` instead of one directory per cell.  A cell-scoped rewrite
+(``replace_cells``) copies on write only the files whose recorded range
+meets the cells.
 
 A current-state read of the Parquet twin is pinned to the table's last
-commit, as a catalog caches a table relation until ``REFRESH TABLE``:
-files changed behind the Warehouse API are not seen until the next commit.
+commit, as a catalog caches a table relation until ``REFRESH TABLE``.
 """
 
 from __future__ import annotations
@@ -24,11 +33,35 @@ import json
 import os
 import shutil
 import time
+from bisect import bisect_left
 from functools import reduce
 from operator import and_, or_
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+
+# the range layout's key: every manifest entry records its file's range
+RANGE_COL = "cell_id"
+# range layout: files range-partitioned on the first two of these, rows
+# sorted by every one a table has
+CLUSTER_COLS = (RANGE_COL, "doc_id", "tick")
+
+
+def range_sorted(df: DataFrame, *extra) -> DataFrame:
+    """``df`` range-partitioned on ``(cell_id, doc_id)`` and sorted by
+    ``(cell_id, doc_id, tick)`` (those it has), then by ``extra``, within
+    each partition.  No partition count: AQE's coalescing sizes the
+    files by bytes, and ranging on ``doc_id`` splits a hot cell across
+    files and tasks once it outgrows one."""
+    keys = [c for c in CLUSTER_COLS if c in df.columns]
+    return df.repartitionByRange(*keys[:2]).sortWithinPartitions(*keys, *extra)
+
+
+def is_range_layout(df: DataFrame, chain: list) -> bool:
+    """True when ``df``'s table uses the range layout: ``cell_id`` is a
+    data column, not a hive partition column."""
+    return RANGE_COL in df.columns and RANGE_COL not in chain
 
 
 def schema_reader(spark: SparkSession, schema: dict | None):
@@ -36,6 +69,12 @@ def schema_reader(spark: SparkSession, schema: dict | None):
     scan plans without reading a footer; plain inference when None."""
     r = spark.read
     return r if schema is None else r.schema(StructType.fromJson(schema))
+
+
+def _replace_all(state: dict, _added: dict) -> list:
+    """``Warehouse._commit_files``' ``replaces`` of a whole-table
+    replacement."""
+    return list(state)
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -114,8 +153,6 @@ class Warehouse:
             # sidecar, metrics ride in snapshot summary properties
             wt = df.writeTo(self._ident(table))
             if partition_by:
-                from pyspark.sql import functions as F
-
                 wt = wt.partitionedBy(*[F.col(c) for c in partition_by])
             for k, v in (metrics or {}).items():
                 wt = wt.option(f"snapshot-property.{k}", str(v))
@@ -125,13 +162,9 @@ class Warehouse:
                 wt.createOrReplace()
             self._commit(table, mode, metrics or {})
             return
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(table))
-        self._commit(
-            table, mode,
-            {**(metrics or {}), **self._manifest(table, df, partition_by)},
+        self._commit_files(
+            df, table, partition_by, mode, metrics,
+            _replace_all if mode == "overwrite" else None,
         )
 
     def append(self, df: DataFrame, table: str, partition_by: list | None = None,
@@ -147,33 +180,27 @@ class Warehouse:
         metrics: dict | None = None,
         touched_partitions: list | None = None,
     ) -> None:
-        """Replace exactly the hive partitions the incoming rows touch
-        (dynamic partition overwrite) — the continuous-aggregate refresh
-        primitive: an incremental finalize rewrites only affected cells'
-        tier partitions, never the whole tier.  Iceberg branch: native
+        """Replace exactly the hive partitions the incoming rows touch —
+        the partition-level replace (a pipeline batch's ``batch_id=<b>/``
+        slice, a merge's touched partitions).  Iceberg branch: native
         ``overwritePartitions()`` (cluster-only).
 
         ``touched_partitions``: the partition-value rows the caller KNOWS
-        it rewrote (e.g. ``[{"cell_id": 3}]`` from an incremental
-        refresh's cell list).  When given, the commit records a
-        partition-scoped DELTA manifest — listing only the touched
-        directories, O(touched files) — instead of walking the whole
-        table (O(table files) on the driver: fine for a full overwrite
-        that replaced everything anyway, QUADRATIC for a long run of
-        small refreshes against a large tier at design scale).  A row
-        may name a leading run of ``partition_by`` — ``{"batch_id": 3}``
-        on ``["batch_id", "cell_id"]`` is the whole ``batch_id=3/``
-        directory, one pipeline batch's slice.  Values must be the
-        simple scalars used in the hive directory names.  Listing a
-        claimed-touched partition the write never actually replaced is
-        harmless: the walk sees its still-live files and the replay
-        re-adds them unchanged."""
+        it rewrote (e.g. ``[{"batch_id": 3}]``): every file under those
+        directories is replaced, including a partition the incoming rows
+        left empty.  A row may name a leading run of ``partition_by`` —
+        ``{"batch_id": 3}`` on ``["batch_id", "cell_id"]`` is the whole
+        ``batch_id=3/`` directory.  Values must be the simple scalars
+        used in the hive directory names.  Without it, the directories
+        the incoming rows landed in are replaced.  Either way the commit
+        is a delta manifest of the removed and added files: O(touched
+        files), never a walk of the whole table."""
         # before the write: a row missing a chain key raises with every
         # file still in place
-        prefixes = None if touched_partitions is None else [
-            "/".join(f"{k}={row[k]}" for k in partition_by[:len(row)])
+        prefixes = None if touched_partitions is None else tuple(
+            "/".join(f"{k}={row[k]}" for k in partition_by[:len(row)]) + "/"
             for row in touched_partitions
-        ]
+        )
         if self.use_iceberg:
             try:
                 df.writeTo(self._ident(table)).overwritePartitions()
@@ -182,87 +209,223 @@ class Warehouse:
                 # rewritten partitions, so replacing an EXISTING table
                 # with it would drop every untouched cell or batch
                 self._require_missing(table, exc)
-                from pyspark.sql import functions as F
-
                 wt = df.writeTo(self._ident(table))
                 wt = wt.partitionedBy(*[F.col(c) for c in partition_by])
                 wt.createOrReplace()
             self._commit(table, "overwrite_partitions", metrics or {})
             return
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_by)
-            .parquet(self.path(table))
+
+        def replaces(state, added):
+            if prefixes is not None:
+                return [f for f in state if f.startswith(prefixes)]
+            dirs = {os.path.dirname(f) for f in added}
+            return [f for f in state if os.path.dirname(f) in dirs]
+
+        self._commit_files(
+            df, table, partition_by, "overwrite_partitions", metrics, replaces
         )
-        self._commit(
-            table,
-            "overwrite_partitions",
-            {**(metrics or {}),
-             **self._manifest(table, df, partition_by, prefixes)},
-        )
+
+    def replace_cells(self, df: DataFrame, table: str, cells: list) -> int:
+        """Replace every row of ``cells`` with ``df`` (rows of those cells
+        only) — the continuous-aggregate refresh of a range-laid-out
+        table.  Copy-on-write: the files whose recorded ``cell_id`` range
+        meets ``cells`` are rewritten with their other cells' rows carried
+        over, and every other file stays as it is (same name).  Returns
+        the number of rows written for ``cells``.  Iceberg branch: an
+        ``overwrite`` by the ``cell_id`` predicate (cluster-only)."""
+        from pyspark.sql import Observation
+
+        touched = F.col(RANGE_COL).isin(list(cells))
+        obs = Observation()
+        n = F.count(F.when(touched, 1)).alias("n")
+        if self.use_iceberg:
+            ident = self._ident(table)
+            try:
+                df.observe(obs, n).writeTo(ident).overwrite(touched)
+            except Exception as exc:  # noqa: BLE001 — gated below
+                self._require_missing(table, exc)
+                obs = Observation()
+                df.observe(obs, n).writeTo(ident).createOrReplace()
+            self._commit(table, "replace_cells", {})
+            return obs.get["n"]
+        want = sorted(set(cells))
+
+        def meets(entry):
+            if not entry or RANGE_COL not in entry:
+                return True  # no recorded range: may hold any cell
+            lo, hi = entry[RANGE_COL]
+            i = bisect_left(want, lo)
+            return i < len(want) and want[i] <= hi
+
+        recs = self.snapshots(table)
+        hit = [f for f, e in (self._replay(recs) or {}).items() if meets(e)]
+        # the range shuffle's bounds-sampling job runs the plan below it
+        # a second time: keep ``df`` (a packed tier's encode UDFs) to one
+        # evaluation, and count above the shuffle
+        fresh = out = df.persist()
+        try:
+            if hit:
+                carried = self._scan(table, hit, self._latest(recs, "schema"))
+                out = fresh.unionByName(carried.where(~touched))
+            self._commit_files(
+                range_sorted(out).observe(obs, n), table, [], "replace_cells",
+                replaces=lambda _state, _added: hit,
+            )
+        finally:
+            fresh.unpersist()
+        return obs.get["n"]
 
     def rewrite(
         self, df: DataFrame, table: str, mode: str, metrics=None
     ) -> dict:
         """Replace every row of ``table`` with ``df`` — the one
-        whole-table rewrite (compaction, retention).  Parquet twin only:
-        the Iceberg branches call the engine's own procedures.
+        whole-table rewrite (compaction, retention), written in the
+        table's recorded partition chain and committed as ONE full
+        manifest.  Parquet twin only: the Iceberg branches call the
+        engine's own procedures.  A rewrite that keeps no row leaves no
+        file, and ``read`` still plans the table's columns from the
+        recorded schema.
 
-        ``df`` is written in the table's recorded partition chain to
-        ``data__staged`` beside the live ``data`` dir, then swapped in by
-        rename: live → ``data__old``, staged → live, delete old.  A crash
-        leaves the old or the new files in place, never neither.  ONE
-        full manifest is committed, carrying the chain and the read
-        schema: a rewrite that keeps no row writes no file, and ``read``
-        still plans the table's columns from that schema.
-
-        ``metrics``: fn(new live files {path: bytes}) -> the commit's
+        ``metrics``: fn(added files {path: entry}) -> the commit's
         lineage fields, called after the write (so it may read the write
         job's Observation); its result is returned."""
         if self.use_iceberg:
             raise NotImplementedError("Iceberg tables rewrite natively")
-        chain = self.partition_chain(table)
-        live = self.path(table)
-        staged, old = live + "__staged", live + "__old"
-        shutil.rmtree(staged, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        w = df.write.mode("overwrite")
+        return self._commit_files(
+            df, table, self.partition_chain(table), mode, metrics,
+            _replace_all,
+        )
+
+    def _commit_files(
+        self,
+        df: DataFrame,
+        table: str,
+        partition_by: list | None,
+        mode: str,
+        metrics=None,
+        replaces=None,
+    ) -> dict:
+        """The Parquet twin's one data commit.
+
+        1. Append ``df``'s files into the data dir under ``partition_by``
+           (Spark's part names are unique, so nothing live is touched).
+        2. Commit ONE manifest line: the files ``replaces(state, added)``
+           names are removed, the new files added (each with its row
+           count, bytes and ``cell_id`` range from its parquet footer; a
+           file with no row is dropped).  A whole-table replacement
+           (``_replace_all``) records the full file list, any other
+           commit a delta of removed and added files.
+        3. Delete the removed files.
+
+        A crash before step 2 leaves orphan files no manifest names:
+        reads never see them and ``expire_snapshots`` deletes them.  A
+        crash between 2 and 3 leaves removed files that reads no longer
+        plan.  A partial commit must keep the table's recorded partition
+        chain; a table written in another layout (e.g. a tier's older
+        ``cell_id=`` directories) is refused, not mixed.
+
+        ``metrics``: lineage fields, or fn(added entries) -> them.
+        Returns the lineage fields."""
+        chain = list(partition_by or [])
+        recs = self.snapshots(table)
+        state = self._replay(recs) or {}
+        have = self._latest(recs, "partition_by")
+        if state and replaces is not _replace_all and have != chain:
+            raise ValueError(
+                f"{table!r} is partitioned by {have}, this commit by "
+                f"{chain}: a table written in an older layout (such as "
+                "a tier's cell_id= directories) is not converted; drop "
+                "it and rebuild it"
+            )
+        base = self.path(table)
+        before = set(self.live_files(table))
+        w = df.write.mode("append")
         if chain:
             w = w.partitionBy(*chain)
-        w.parquet(staged)
-        os.rename(live, old)
-        os.rename(staged, live)
-        shutil.rmtree(old)
-        files = self.live_files(table)
-        m = metrics(files) if metrics else {}
-        self._commit(
-            table, mode, {**m, **self._manifest(table, df, chain, files=files)}
-        )
+        w.parquet(base)
+        added, empty = {}, []
+        for f, size in self.live_files(table).items():
+            if f not in before:
+                e = self._entry(base, f, size)
+                if e is None:
+                    empty.append(f)
+                else:
+                    added[f] = e
+        removed = sorted(set(replaces(state, added)) if replaces else ())
+        m = metrics(added) if callable(metrics) else dict(metrics or {})
+        # the read schema is what a scan of the table plans: ``df``'s
+        # data columns, then the chain, all nullable
+        types = {f.name: f.dataType for f in df.schema}
+        schema = StructType([
+            StructField(f.name, f.dataType, True, f.metadata)
+            for f in df.schema if f.name not in chain
+        ] + [StructField(c, types[c], True) for c in chain])
+        rec = {
+            "snapshot_id": self._next_snapshot_id(table),
+            "partition_by": chain,
+            "schema": schema.jsonValue(),
+        }
+        if replaces is _replace_all:
+            rec["files"] = added
+        else:
+            rec["removed"], rec["added"] = removed, added
+        self._commit(table, mode, {**m, **rec})
+        self._delete(table, removed + empty)
         return m
+
+    @staticmethod
+    def _entry(base: str, rel: str, size: int) -> dict | None:
+        """A new file's manifest entry from its parquet footer: row count,
+        bytes and ``cell_id`` [min, max] when it has that column; None for
+        a file with no row."""
+        import pyarrow.parquet as pq
+
+        from repurpose_spark.functions.zorder import metadata_bounds
+
+        md = pq.read_metadata(os.path.join(base, rel))
+        if not md.num_rows:
+            return None
+        e = {"rows": md.num_rows, "bytes": size}
+        b = metadata_bounds(md, [RANGE_COL])[RANGE_COL]
+        if b is not None:
+            e[RANGE_COL] = list(b)
+        return e
+
+    def _delete(self, table: str, files) -> None:
+        """Delete data files (and the checksum files beside them), then
+        any partition directory they leave empty."""
+        base = self.path(table)
+        for rel in files:
+            d, name = os.path.split(os.path.join(base, rel))
+            for f in (name, f".{name}.crc"):
+                try:
+                    os.remove(os.path.join(d, f))
+                except FileNotFoundError:
+                    pass
+            while d != base and os.path.isdir(d) and not os.listdir(d):
+                os.rmdir(d)
+                d = os.path.dirname(d)
 
     def read(self, table: str, snapshot_id: int | None = None) -> DataFrame:
         """Current table state, or — with ``snapshot_id`` — the table AS
         OF that committed snapshot (time travel).
 
-        Parquet twin: every commit records the data-file list that was
-        live at commit time (the sidecar is the manifest), so a snapshot
-        read scans exactly those files; ``basePath`` keeps hive
-        partition columns.  Iceberg: native ``snapshot-id`` read
-        (cluster-only; no runtime jar in this sandbox).
+        Parquet twin: the replayed manifest is the table, so a read
+        scans exactly the files it names (as of ``snapshot_id`` for time
+        travel); ``basePath`` keeps hive partition columns.  Iceberg:
+        native ``snapshot-id`` read (cluster-only; no runtime jar in this
+        sandbox).
 
-        Parquet twin, current state: the planned DataFrame (file listing
-        and schema) is pinned to the table's last commit, keyed on the
-        sidecar's inode, size and mtime, and reused until the next commit
-        changes it — a stream of per-cell reads plans the table once.
-        Files changed behind the Warehouse API are not seen until the
-        next commit; a table without a sidecar is re-planned every read.
+        Parquet twin, current state: the planned DataFrame is pinned to
+        the table's last commit, keyed on the sidecar's inode, size and
+        mtime, and reused until the next commit changes it — a stream of
+        per-cell reads plans the table once.  A file written into the
+        data dir behind the Warehouse API is never read; a table without
+        a sidecar is listed and re-planned every read.
 
-        Every read passes the schema its manifests recorded (as of
-        ``snapshot_id`` for time travel), so planning reads no parquet
-        footer — no schema-inference job, and a table whose rewrite kept
-        no row still reads with its columns.  Tables committed without a
-        recorded schema fall back to inference."""
+        Every read passes the schema its manifests recorded, so planning
+        reads no parquet footer — no schema-inference job, and a table
+        whose rewrite kept no row still reads with its columns."""
         if self.use_iceberg:
             r = self.spark.read
             if snapshot_id is not None:
@@ -277,7 +440,10 @@ class Warehouse:
             key = (st.st_ino, st.st_size, st.st_mtime_ns)
             hit = self._pinned.get(table)
             if hit is None or hit[0] != key:
-                hit = (key, self._plan(table))
+                recs = self.snapshots(table)
+                hit = (key, self._scan(
+                    table, self._replay(recs), self._latest(recs, "schema")
+                ))
                 self._pinned[table] = hit
             return hit[1]
         recs = self.snapshots(table)
@@ -286,11 +452,10 @@ class Warehouse:
             raise ValueError(
                 f"no file-tracked snapshot {snapshot_id} for {table!r}"
             )
-        base = self.path(table)
-        files = [os.path.join(base, f) for f in sorted(state)]
-        if not files:
+        if not state:
             raise ValueError(f"snapshot {snapshot_id} of {table!r} is empty")
-        gone = [f for f in files if not os.path.exists(f)]
+        base = self.path(table)
+        gone = [f for f in state if not os.path.exists(os.path.join(base, f))]
         if gone:
             # the parquet twin deletes files on overwrite (Iceberg keeps
             # them until snapshot expiry): appends time-travel freely,
@@ -301,21 +466,27 @@ class Warehouse:
                 "twin retains history across appends only; Iceberg "
                 "retains it until explicit expiry)"
             )
-        schema = self._latest(
+        return self._scan(table, state, self._latest(
             [s for s in recs if s.get("snapshot_id", -1) <= snapshot_id],
             "schema",
-        )
-        return schema_reader(self.spark, schema).option(
-            "basePath", base
-        ).parquet(*files)
+        ))
 
-    def _plan(self, table: str) -> DataFrame:
-        """The current state as a listed parquet scan of the newest
-        recorded schema.  The directory is listed, not the manifest's
-        file list: the listing is what the pin holds until the next
-        commit."""
-        schema = self._latest(self.snapshots(table), "schema")
-        return schema_reader(self.spark, schema).parquet(self.path(table))
+    def _scan(self, table: str, files, schema: dict | None) -> DataFrame:
+        """A parquet scan of exactly ``files`` (paths relative to the data
+        dir) with the recorded ``schema``; no file plans an empty frame
+        of that schema, and no file manifest at all lists the data dir."""
+        if files is None:
+            return schema_reader(self.spark, schema).parquet(self.path(table))
+        if not files:
+            return self.spark.createDataFrame([], StructType.fromJson(schema))
+        base = self.path(table)
+        reader = schema_reader(self.spark, schema).option("basePath", base)
+        return reader.parquet(*[os.path.join(base, f) for f in sorted(files)])
+
+    def files(self, table: str) -> dict:
+        """{path relative to the data dir: manifest entry} of the current
+        state — the replayed manifest, no listing."""
+        return self._replay(self.snapshots(table)) or {}
 
     def snapshot_ids(self, table: str) -> list:
         """Committed snapshot ids, oldest first (parquet twin)."""
@@ -340,31 +511,39 @@ class Warehouse:
         return next((s[key] for s in reversed(recs) if key in s), None)
 
     @staticmethod
-    def _apply_manifest(state: list | None, s: dict) -> list | None:
-        """Replay ONE committed manifest line onto a file state.
+    def _apply_manifest(state: dict | None, s: dict) -> dict | None:
+        """Replay ONE committed manifest line onto a file state
+        {path: entry}.
 
         Two manifest kinds (the parquet-twin analog of Iceberg's manifest
-        list): ``files`` — a full snapshot, resets the state
-        (write/append/rewrite/expire-checkpoint);
-        ``partitions``+``partition_files`` — a partition-scoped delta
-        (an ``overwrite_partitions`` with ``touched_partitions``: a
-        batch's ``batch_id=<b>`` dir, a refresh's cells), replaces
-        exactly the listed hive directories.  Non-manifest lineage rows
-        pass through."""
+        list): ``files`` — a full snapshot, resets the state (overwrite,
+        rewrite, expire-checkpoint); ``removed`` + ``added`` — a delta
+        (append, partition or cell replace).  Lines written before the
+        delta kind still replay: a ``files`` list carries no entries, and
+        a ``partitions`` + ``partition_files`` delta replaces exactly the
+        listed hive directories.  Non-manifest lineage rows pass
+        through."""
         if "files" in s:
-            return list(s["files"])
+            f = s["files"]
+            return dict(f) if isinstance(f, dict) else dict.fromkeys(f)
+        if "added" in s:
+            gone = set(s["removed"])
+            out = {f: e for f, e in (state or {}).items() if f not in gone}
+            out.update(s["added"])
+            return out
         if "partition_files" in s:
             prefixes = tuple(p + "/" for p in s["partitions"])
-            return [
-                f for f in (state or []) if not f.startswith(prefixes)
-            ] + list(s["partition_files"])
+            out = {f: e for f, e in (state or {}).items()
+                   if not f.startswith(prefixes)}
+            out.update(dict.fromkeys(s["partition_files"]))
+            return out
         return state
 
     @classmethod
-    def _replay(cls, recs: list, upto: int | None = None) -> list | None:
+    def _replay(cls, recs: list, upto: int | None = None) -> dict | None:
         """File state AS OF snapshot ``upto`` (the newest when None): the
         manifests among ``recs`` replayed in commit order — full ones
-        reset the state, deltas replace their own directories.  None when
+        reset the state, deltas remove and add their files.  None when
         ``upto`` was never committed or no manifest tracks files."""
         state, found = None, upto is None
         for s in sorted(
@@ -377,58 +556,19 @@ class Warehouse:
             found = found or s["snapshot_id"] == upto
         return state if found else None
 
-    def live_files(self, table: str, subdir: str = "") -> dict:
-        """{path relative to the data dir: bytes} of the parquet files
-        under ``subdir`` — O(that dir), not O(table).  The one walk
-        behind every manifest and compaction's file counts: the
-        parquet-twin analog of an Iceberg manifest write, driver-side;
-        the Iceberg branch gets this natively from the commit itself."""
+    def live_files(self, table: str) -> dict:
+        """{path relative to the data dir: bytes} of the parquet files on
+        disk — what a commit adds is what this walk finds after its write
+        and not before.  A file no manifest names is an orphan (see
+        ``expire_snapshots``)."""
         base = self.path(table)
         out = {}
-        for root, _dirs, names in os.walk(os.path.join(base, subdir)):
+        for root, _dirs, names in os.walk(base):
             for n in names:
                 if n.endswith(".parquet"):
                     f = os.path.join(root, n)
                     out[os.path.relpath(f, base)] = os.path.getsize(f)
         return out
-
-    def _manifest(
-        self,
-        table: str,
-        df: DataFrame,
-        partition_by: list | None,
-        prefixes: list | None = None,
-        files: dict | None = None,
-    ) -> dict:
-        """The manifest fields of a data commit of ``df``: the next
-        snapshot id, the partition chain, the read schema and the live
-        files — all of them (a full manifest; ``files`` when the caller
-        already walked them) or, given ``prefixes``, only those under
-        these hive directories (a partition-scoped delta).
-
-        The read schema is what a scan of the table plans: ``df``'s data
-        columns, then the chain, all nullable."""
-        chain = list(partition_by or [])
-        have = {f.name: f.dataType for f in df.schema}
-        schema = StructType([
-            StructField(f.name, f.dataType, True, f.metadata)
-            for f in df.schema if f.name not in chain
-        ] + [StructField(c, have[c], True) for c in chain])
-        rec = {
-            "snapshot_id": self._next_snapshot_id(table),
-            "partition_by": chain,
-            "schema": schema.jsonValue(),
-        }
-        if prefixes is None:
-            rec["files"] = sorted(
-                self.live_files(table) if files is None else files
-            )
-        else:
-            rec["partitions"] = sorted(prefixes)
-            rec["partition_files"] = sorted(
-                f for p in prefixes for f in self.live_files(table, p)
-            )
-        return rec
 
     def _next_snapshot_id(self, table: str) -> int:
         """Monotonic, not count-based — expire_snapshots drops old
@@ -446,26 +586,42 @@ class Warehouse:
         the checkpoint, so the current state is unaffected; snapshots
         before the cutoff stop being travel targets.  Lineage/metrics
         rows (no snapshot_id) are kept forever.  The rewrite is atomic
-        (tmp + rename)."""
+        (tmp + rename).
+
+        Then every parquet file under the data dir that no kept snapshot
+        names is deleted: the orphans of writes that crashed before
+        their commit, files left by a crash between a commit and its
+        delete, and files written behind the API.  Do not run it while a
+        commit to the same table is in flight: that commit's new files
+        are not named yet."""
         recs = self.snapshots(table)
         ids = sorted(s["snapshot_id"] for s in recs if "snapshot_id" in s)
+        if not ids:
+            return {"expired": 0, "kept": 0}
+        cutoff = ids[-min(keep_last, len(ids))]
+        head = [s for s in recs if s.get("snapshot_id", cutoff + 1) <= cutoff]
+        tail = [s for s in recs if s.get("snapshot_id", cutoff) > cutoff]
+        state = self._replay(head)
+        if state is not None:
+            named = set(state).union(*(
+                s.get("files") or s.get("added") or s.get("partition_files")
+                or () for s in tail
+            ))
+            self._delete(table, sorted(set(self.live_files(table)) - named))
         if len(ids) <= keep_last:
             return {"expired": 0, "kept": len(ids)}
-        cutoff = ids[-keep_last]
-        head = [s for s in recs if s.get("snapshot_id", cutoff + 1) <= cutoff]
         checkpoint = {
             "ts": time.time(),
             "table": table,
             "mode": "expire-checkpoint",
             "snapshot_id": cutoff,
-            "files": sorted(self._replay(head) or []),
+            "files": state or {},
         }
         for k in ("partition_by", "schema"):
             v = self._latest(head, k)
             if v is not None:
                 checkpoint[k] = v
         others = [s for s in recs if "snapshot_id" not in s]
-        tail = [s for s in recs if s.get("snapshot_id", cutoff) > cutoff]
         tmp = self._meta(table) + ".tmp"
         with open(tmp, "w") as f:
             for rec in others + [checkpoint] + tail:
@@ -485,18 +641,18 @@ class Warehouse:
         REPLACE the target rows sharing their ``key_cols`` and INSERT
         where no match exists — the late-correction primitive a
         retention pipeline needs when a source re-delivers fixed data
-        (the row-level sibling of finalize's partition-level
+        (the row-level sibling of finalize's cell-level
         continuous-aggregate refresh).
 
-        Parquet-twin plan, cell-pruned like an incremental finalize:
-        the touched partition values come from ``updates`` (a bounded
-        ``.collect()`` — one row per touched partition), ONLY those
-        partitions are read back (partition-pruned scan), survivors =
-        current ⟂ updates (LEFT ANTI on the merge key, broadcast when
-        updates are small) union the updates, and the rewrite is a
-        dynamic partition overwrite committing a partition-scoped DELTA
-        manifest — untouched partitions' files are never read, written,
-        or listed.  Iceberg branch: native ``MERGE INTO`` SQL
+        Parquet-twin plan, partition-pruned: the touched partition values
+        come from ``updates`` (a bounded ``.collect()`` — one row per
+        touched partition), ONLY those partitions are read back
+        (partition-pruned scan), survivors = current ⟂ updates (LEFT ANTI
+        on the merge key, broadcast when updates are small) union the
+        updates, and the rewrite is an ``overwrite_partitions`` of the
+        touched partitions — untouched partitions' files are never read,
+        written, or listed, and a touched partition the merge empties
+        loses its files.  Iceberg branch: native ``MERGE INTO`` SQL
         (cluster-only, same paper-verified status as the other
         branches).
 
@@ -524,8 +680,6 @@ class Warehouse:
             )
             self._commit(table, "merge_into", {})
             return {}
-        from pyspark.sql import functions as F
-
         touched = [
             r.asDict() for r in updates.select(*partition_by).distinct().collect()
         ]
@@ -549,11 +703,8 @@ class Warehouse:
         # scope the rewrite to the touched partitions (ADVICE r5 medium):
         # every row carrying a merge key lives in one of them (by the
         # stable-key contract, or because the semi-join above found it),
-        # so the dynamic overwrite stays partition-scoped and the delta
-        # manifest accurate — unscoped, the overwrite rewrote EVERY
-        # partition while the manifest listed only the touched ones, and
-        # replaying the merge's own snapshot read deleted files
-        # ("snapshot expired" immediately after).
+        # so the partition replace stays scoped and its delta manifest
+        # accurate
         cur = cur.where(reduce(or_, (
             reduce(and_, (F.col(k) == F.lit(row[k]) for k in partition_by))
             for row in touched
@@ -575,36 +726,10 @@ class Warehouse:
         n_surv = survivors.count()
         n_upd = n_before - n_surv
         n_ins = n_updates - n_upd
-        merged = survivors.select(*updates.columns).unionByName(updates)
-        # dynamic partition overwrite rewrites ONLY partitions present in
-        # the output — a touched partition whose last row was merged AWAY
-        # (a key move under keys_partition_stable=False) would keep its
-        # stale files.  Delete emptied touched partitions up front; the
-        # delta manifest then lists them as (correctly) file-less.
-        present = {
-            tuple(r[k] for k in partition_by)
-            for r in merged.select(*partition_by).distinct().collect()
-        }
-        emptied = [
-            row
-            for row in touched
-            if tuple(row[k] for k in partition_by) not in present
-        ]
-        if emptied:
-            # merged is a LAZY plan over the table's current files — sever
-            # the lineage before deleting directories it reads from, or
-            # the overwrite job re-scans a path that no longer exists
-            merged = merged.localCheckpoint(eager=True)
-            for row in emptied:
-                shutil.rmtree(
-                    os.path.join(
-                        self.path(table),
-                        *[f"{k}={row[k]}" for k in partition_by],
-                    ),
-                    ignore_errors=True,
-                )
+        # the replaced files are deleted only after the commit, so the
+        # write's lazy read of them needs no checkpoint
         self.overwrite_partitions(
-            merged,
+            survivors.select(*updates.columns).unionByName(updates),
             table,
             partition_by,
             metrics={

@@ -25,7 +25,7 @@ finishes sub-second and would measure JVM constants, not scaling).
 Efficiency(N→4N) = throughput(4N) / (4 * throughput(N)).
 
 Usage: python scripts/bench_scaling.py [--docs 500000] [--levels 2,8]
-       [--pipeline-trials 2] [--out BENCH_SCALING.json]
+       [--pipeline-trials 2] [--out artifacts/BENCH_SCALING.json]
 Each Spark level runs in a subprocess (fresh JVM per master).  The 2,8
 axis is the hardware-valid N-vs-4N evidence on this host (the probe
 shows 32 advertised vCPUs deliver only ~2x the throughput of 8).
@@ -237,7 +237,7 @@ def main() -> None:
                          "(VERDICT r3 next #6)")
     ap.add_argument("--only-queries", action="store_true",
                     help="run ONLY the per-query scaling levels")
-    ap.add_argument("--out", default=os.path.join(REPO, "BENCH_SCALING.json"))
+    ap.add_argument("--out", default=os.path.join(REPO, "artifacts", "BENCH_SCALING.json"))
     args = ap.parse_args()
 
     levels = [int(x) for x in args.levels.split(",")]

@@ -62,10 +62,6 @@ def main() -> None:
                     help="input split count; FIXED across parallelism "
                          "levels so task granularity (and skew wave "
                          "balance) is identical")
-    ap.add_argument("--salt-buckets", type=int, default=16,
-                    help="finalize hot-cell salting fan-out (0 disables); "
-                         "exposed so the scaling bench can bisect the "
-                         "salted vs unsalted clustered-write path")
     ap.add_argument("--json", action="store_true")
     args = ap.parse_args()
 
@@ -79,9 +75,7 @@ def main() -> None:
     cleanup = args.warehouse is None
     cfg = EngineConfig(n_cells=args.cells)
     wh = Warehouse(spark, wh_root)
-    pipe = TierPipeline(
-        spark, wh, cfg, job_id="tiers", salt_buckets=args.salt_buckets
-    )
+    pipe = TierPipeline(spark, wh, cfg, job_id="tiers")
 
     if args.input:
         seqs = spark.read.parquet(args.input)

@@ -122,8 +122,8 @@ def test_compact_writes_one_file_per_cell_on_many_tasks(
 
 def test_pipeline_compact_collapses_batches(spark, tmp_path, write_batch):
     """TierPipeline.compact() collapses completed batch partitions into
-    batch_id=-1 (n_batches x n_cells files -> n_cells), keeping the
-    two-level hive layout so later batches append cleanly; tier data
+    batch_id=-1 (files per batch -> a few range files), keeping the
+    batch_id= hive layout so later batches append cleanly; tier data
     (minus the synthetic batch label) reads identically."""
     import os
 
@@ -155,7 +155,7 @@ def test_pipeline_compact_collapses_batches(spark, tmp_path, write_batch):
     write_batch(
         wh,
         wh.read(t).where("cell_id = 0").withColumn("batch_id", F.lit(9)).drop("batch_id"),
-        t, 9, ["cell_id"],
+        t, 9, [],
     )
     assert wh.read(t).where("batch_id = 9").count() > 0
 

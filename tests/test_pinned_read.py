@@ -122,11 +122,13 @@ def test_every_commit_replans(spark, tmp_path, write_batch):
     assert _ks(wh, t) == [6, 8]
     expire_tier(wh, t, 7, tick_col="k")
     assert _ks(wh, t) == [8]
-    # a file added behind the API stays unseen until the next commit
+    # a file added behind the API is never read: no manifest names it,
+    # and expire_snapshots deletes it
     _frame(spark, [9], "z").write.parquet(f"{wh.path(t)}/cell=z")
     assert _ks(wh, t) == [8]
     assert wh.expire_snapshots(t, keep_last=2)["expired"] > 0
-    assert _ks(wh, t) == [8, 9]
+    assert _ks(wh, t) == [8]
+    assert not [f for f in wh.live_files(t) if f.startswith("cell=z/")]
     wh.drop(t)
     wh.write(_frame(spark, [10]), t, partition_by=["cell"])
     assert _ks(wh, t) == [10]

@@ -188,8 +188,8 @@ def test_retention_commits_its_manifest(spark, seqs, tmp_path):
 
 def test_retention_preserves_partition_layout_and_appends(spark, seqs, tmp_path):
     """expire_tier must rewrite with the live table's hive layout
-    (batch_id=/cell_id=), so later batch appends land in a consistent
-    directory tree Spark can still read (ADVICE r1)."""
+    (batch_id=), so later batch appends land in a consistent directory
+    tree Spark can still read (ADVICE r1)."""
     import os
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
@@ -508,12 +508,35 @@ def test_incremental_requires_prior_plan(spark, tmp_path):
         pipe.run_incremental(str(tmp_path / "nope"))
 
 
-def test_incremental_finalize_refreshes_only_affected_cells(spark, tmp_path):
+@pytest.fixture()
+def small_files(spark):
+    """AQE coalesces shuffle partitions to a few KB, so a small tier
+    spans several range files (at most the session's 8 shuffle
+    partitions)."""
+    keys = {
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4k",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1k",
+    }
+    for k, v in keys.items():
+        spark.conf.set(k, v)
+    yield
+    for k in keys:
+        spark.conf.unset(k)
+
+
+def _meets(entry, cells):
+    lo, hi = entry["cell_id"]
+    return any(lo <= c <= hi for c in cells)
+
+
+def test_incremental_finalize_refreshes_only_affected_cells(
+    spark, tmp_path, small_files
+):
     """Continuous-aggregate refresh: an increment recomputes daily/packed
-    partitions ONLY for cells its new docs touch; every other cell's
-    tier files are byte-identical (not rewritten), and the result equals
-    a full recompute."""
-    import glob
+    rows ONLY for cells its new docs touch, as a copy-on-write of the
+    files whose recorded cell range meets them; every other file keeps
+    its name and mtime (not rewritten), and the result equals a full
+    recompute."""
     import os
 
     cfg = EngineConfig(n_cells=64)
@@ -522,40 +545,32 @@ def test_incremental_finalize_refreshes_only_affected_cells(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
     pipe = TierPipeline(spark, wh, cfg, job_id="t")
     pipe.run(input_path=path, n_batches=2)
+    tiers = (pipe.daily_table(), pipe.packed_table())
 
     def snap(table):
         base = wh.path(table)
-        return {
-            os.path.relpath(f, base): os.path.getmtime(f)
-            for f in glob.glob(base + "/**/*.parquet", recursive=True)
-        }
+        return {f: (e, os.path.getmtime(os.path.join(base, f)))
+                for f, e in wh.files(table).items()}
 
-    daily_before = snap(pipe.daily_table())
+    before = {t: snap(t) for t in tiers}
+    assert all(len(before[t]) >= 2 for t in tiers)
     # 3 new docs → at most 3 affected cells (cell = hash of doc_id)
     extra = synth_sequences(spark, 153).where(F.col("doc_id") >= "doc00000150")
     extra.repartition(1).write.mode("append").parquet(path)
     out = pipe.run_incremental(path)
     assert 0 < out["n_refreshed_cells"] <= 3
-    daily_after = snap(pipe.daily_table())
-    changed_cells = {
-        f.split("/")[0]
-        for f in (
-            set(daily_before) ^ set(daily_after)
-            | {
-                f
-                for f in set(daily_before) & set(daily_after)
-                if daily_before[f] != daily_after[f]
-            }
-        )
+    cells = {
+        r["cell_id"] for r in wh.read(pipe.hourly_table())
+        .where(F.col("doc_id") >= "doc00000150").select("cell_id").collect()
     }
-    assert 0 < len(changed_cells) <= 3
-    # untouched cells: identical file names AND mtimes
-    untouched = {
-        f for f in daily_before if f.split("/")[0] not in changed_cells
-    }
-    assert untouched
-    for f in untouched:
-        assert daily_after[f] == daily_before[f]
+    for t in tiers:
+        after = snap(t)
+        hit = {f for f, (e, _) in before[t].items() if _meets(e, cells)}
+        assert hit and not hit & set(after), t  # rewritten
+        untouched = set(before[t]) - hit
+        assert untouched, t
+        for f in untouched:  # identical file names AND mtimes
+            assert after[f] == before[t][f]
 
     # equality with a full recompute over the combined input
     wh2 = Warehouse(spark, str(tmp_path / "wh2"))
@@ -696,44 +711,52 @@ def test_assign_files_mixed_schemes_falls_back_round_robin(spark, tmp_path):
     assert sorted(f for fs in plan.values() for f in fs) == sorted(files)
 
 
-def test_finalize_auto_salts_hot_cells(spark, tmp_path):
-    """VERDICT r4 #1: finalize's clustered tier writes consult the
-    ledger's per-cell point counts and fan hot cells over salt buckets —
-    identical tier contents to the unsalted write, hot cell written as
-    2..buckets files instead of one task's straggler sort."""
-    import glob
+def test_hot_cell_spreads_over_range_files(spark, tmp_path, small_files):
+    """Tier files are range-partitioned on (cell_id, doc_id) and sorted
+    by (cell_id, doc_id, tick): a hot cell's rows spread over more than
+    one file of each tier, with no salting, and every file's rows come
+    in key order."""
+    import pyarrow.parquet as pq
 
     skewed = synth_sequences(spark, 200, skew=True)
-    wh_a = Warehouse(spark, str(tmp_path / "a"))
-    pipe_a = TierPipeline(spark, wh_a, CFG, job_id="t", salt_buckets=4)
-    pipe_a.run(skewed, n_batches=2)
-    hot = pipe_a._hot_cells()
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    pipe = TierPipeline(spark, wh, CFG, job_id="t")
+    pipe.run(skewed, n_batches=2)
+    hot = pipe._hot_cells()
     assert hot, "skewed fixture must trip the ledger-based detector"
     # lineage-share check: the detector's shares come from the ledger,
     # which sums to the hourly tier's points
     total = sum(
-        r["n_points"] for r in pipe_a.ledger_rows() if r["status"] == "cell"
+        r["n_points"] for r in pipe.ledger_rows() if r["status"] == "cell"
     )
-    assert total == wh_a.read("t_hourly").agg(F.sum("n_points")).collect()[0][0]
+    assert total == wh.read("t_hourly").agg(F.sum("n_points")).collect()[0][0]
+    for table, keys in (("t_hourly", ["cell_id", "doc_id", "tick"]),
+                        ("t_daily", ["cell_id", "doc_id", "tick"]),
+                        ("t_packed", ["cell_id", "doc_id"])):
+        files = wh.files(table)
+        assert len(
+            [f for f, e in files.items() if _meets(e, [hot[0]["cell_id"]])]
+        ) >= 2, table
+        for f in files:
+            rows = pq.read_table(f"{wh.path(table)}/{f}", columns=keys)
+            got = list(zip(*(rows[k].to_pylist() for k in keys)))
+            assert got == sorted(got), (table, f)
 
-    wh_b = Warehouse(spark, str(tmp_path / "b"))
-    pipe_b = TierPipeline(spark, wh_b, CFG, job_id="t", salt_buckets=0)
-    pipe_b.run(skewed, n_batches=2)
-    assert _sorted(wh_a.read("t_daily"), TIER_COLS) == _sorted(
-        wh_b.read("t_daily"), TIER_COLS
+
+def test_refuses_a_tier_written_with_cell_directories(
+    spark, tmp_path, write_batch
+):
+    """A hourly tier written with one directory per cell (partition chain
+    batch_id/cell_id) is refused with a clear error, not mixed with the
+    range layout."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    old = synth_sequences(spark, 10).select(
+        F.lit(1).alias("cell_id"), "doc_id"
     )
-    pk = ["cell_id", "doc_id", "n_points"]
-    assert _sorted(wh_a.read("t_packed"), pk) == _sorted(
-        wh_b.read("t_packed"), pk
-    )
-    # the hot cell fans over >1 but ≤buckets files per tier; the unsalted
-    # twin writes exactly one
-    for table in ("t_daily", "t_packed"):
-        cell_dir = f"{wh_a.root}/{table}/data/cell_id={hot[0]['cell_id']}"
-        n_files = len(glob.glob(f"{cell_dir}/*.parquet"))
-        assert 2 <= n_files <= 4, (table, n_files)
-        cell_dir_b = f"{wh_b.root}/{table}/data/cell_id={hot[0]['cell_id']}"
-        assert len(glob.glob(f"{cell_dir_b}/*.parquet")) == 1
+    write_batch(wh, old, "t_hourly", 0, ["cell_id"])
+    pipe = TierPipeline(spark, wh, CFG, job_id="t")
+    with pytest.raises(ValueError, match="older layout"):
+        pipe.run(synth_sequences(spark, 20), n_batches=1)
 
 
 def test_pipeline_sketch_distinct_tier(spark, seqs, tmp_path):

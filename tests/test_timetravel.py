@@ -129,10 +129,9 @@ def test_batch_manifests_are_deltas(spark, tmp_path, write_batch):
     assert len(recs) == 3
     for r in recs:
         assert "files" not in r
-        assert r["partitions"] == [f"batch_id={r['batch_id']}"]
-        assert r["partition_files"] and all(
-            f.startswith(f"batch_id={r['batch_id']}/")
-            for f in r["partition_files"]
+        assert r["removed"] == []
+        assert r["added"] and all(
+            f.startswith(f"batch_id={r['batch_id']}/") for f in r["added"]
         )
     # replayed state at the last snapshot covers all three batches
     full = wh.read(t, snapshot_id=wh.snapshot_ids(t)[-1])
@@ -202,11 +201,10 @@ def test_partition_overwrite_manifests_are_deltas(spark, tmp_path):
     rec = [s for s in wh.snapshots(t)
            if s.get("mode") == "overwrite_partitions"][-1]
     assert "files" not in rec
-    assert rec["partitions"] == ["cell_id=1", "cell_id=3"]
-    assert rec["partition_files"] and all(
-        f.startswith(("cell_id=1/", "cell_id=3/"))
-        for f in rec["partition_files"]
-    )
+    for kind in ("removed", "added"):
+        assert rec[kind] and all(
+            f.startswith(("cell_id=1/", "cell_id=3/")) for f in rec[kind]
+        )
 
     def vs(df):
         return sorted(r["v"] for r in df.collect())
@@ -227,16 +225,16 @@ def test_partition_overwrite_manifests_are_deltas(spark, tmp_path):
         want + [5]
     )
 
-    # a claimed-touched partition the write didn't actually replace is
-    # harmless: its live files are re-listed unchanged
+    # a touched partition is replaced whole: one the incoming rows leave
+    # empty loses its files
     wh.overwrite_partitions(
         spark.createDataFrame([(2, 222)], "cell_id int, v long"),
         t, ["cell_id"],
         touched_partitions=[{"cell_id": 0}, {"cell_id": 2}],
     )
-    assert vs(wh.read(t)) == [0, 1, 5, 111, 222, 333]
+    assert vs(wh.read(t)) == [111, 222, 333]
     assert vs(wh.read(t, snapshot_id=wh.snapshot_ids(t)[-1])) == (
-        [0, 1, 5, 111, 222, 333]
+        [111, 222, 333]
     )
 
     # a touched row missing a chain key raises before the write: every
@@ -251,9 +249,9 @@ def test_partition_overwrite_manifests_are_deltas(spark, tmp_path):
 
 
 def test_incremental_finalize_commits_partition_delta(spark, tmp_path):
-    """TierPipeline.run_incremental's tier refresh rides the
-    partition-scoped manifest: the daily commit lists only the refreshed
-    cells' directories."""
+    """TierPipeline.run_incremental's tier refresh rides a delta
+    manifest: the daily commit lists the files it removed and added, not
+    the whole tier."""
     from repurpose_spark.config import EngineConfig
     from repurpose_spark.plans.pipeline import TierPipeline
     from repurpose_spark.sources.synthetic import synth_sequences
@@ -271,8 +269,62 @@ def test_incremental_finalize_commits_partition_delta(spark, tmp_path):
     assert out["n_refreshed_cells"] > 0
 
     recs = [s for s in wh.snapshots("inc_daily")
-            if s.get("mode") == "overwrite_partitions"]
-    assert recs, "incremental refresh must commit the daily tier"
-    assert all("partition_files" in r and "files" not in r for r in recs)
+            if s.get("mode") == "replace_cells"]
+    assert len(recs) == 2, "incremental refresh must commit the daily tier"
+    assert all("added" in r and "files" not in r for r in recs)
+    assert recs[-1]["removed"] and set(recs[-1]["removed"]) <= set(
+        recs[0]["added"]
+    )
     tiers = wh.read("inc_daily")
     assert tiers.count() > 0
+
+
+def test_crash_before_commit_leaves_unread_orphans(spark, tmp_path, monkeypatch):
+    """A write whose manifest never commits leaves files no manifest
+    names: reads do not see them, and expire_snapshots deletes them."""
+    wh = Warehouse(spark, str(tmp_path))
+    t = "tt"
+    wh.write(spark.createDataFrame([(1, 0)], "k long, cell_id int"), t)
+    named = set(wh.files(t))
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crash before the manifest commit")
+
+    monkeypatch.setattr(wh, "_commit", crash)
+    with pytest.raises(RuntimeError, match="before the manifest"):
+        wh.append(spark.createDataFrame([(2, 1)], "k long, cell_id int"), t)
+    monkeypatch.undo()
+    assert set(wh.live_files(t)) > named  # the orphan is on disk
+    assert [r["k"] for r in wh.read(t).collect()] == [1]
+    wh.expire_snapshots(t, keep_last=2)
+    assert set(wh.live_files(t)) == named
+    assert [r["k"] for r in wh.read(t).collect()] == [1]
+
+
+def test_crash_after_commit_reads_the_committed_state(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between a commit and the delete of the files it replaced:
+    reads equal the committed state, and expire_snapshots deletes the
+    replaced files."""
+    wh = Warehouse(spark, str(tmp_path))
+    t = "tt"
+    wh.write(spark.createDataFrame([(1, 0)], "k long, cell_id int"), t)
+    old = set(wh.files(t))
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crash before the delete")
+
+    monkeypatch.setattr(wh, "_delete", crash)
+    with pytest.raises(RuntimeError, match="before the delete"):
+        wh.write(spark.createDataFrame([(2, 1)], "k long, cell_id int"), t)
+    monkeypatch.undo()
+    assert old <= set(wh.live_files(t))  # the replaced file is still there
+    assert [r["k"] for r in wh.read(t).collect()] == [2]
+    snap = wh.read(t, snapshot_id=wh.snapshot_ids(t)[-1])
+    assert [r["k"] for r in snap.collect()] == [2]
+    # snapshot 0 names the replaced file: it goes when 0 stops being kept
+    wh.expire_snapshots(t, keep_last=1)
+    assert set(wh.live_files(t)) == set(wh.files(t))
+    assert not old & set(wh.files(t))
+    assert [r["k"] for r in wh.read(t).collect()] == [2]
