@@ -31,7 +31,11 @@ from repurpose_spark.operators.dedup import (
 from repurpose_spark.operators.encode import decode_series, encode_series
 from repurpose_spark.operators.gapfill import gap_fill
 from repurpose_spark.operators.reorient import points_to_sequences, sequences_to_points
-from repurpose_spark.operators.rollup import rollup, rollup_from_partials
+from repurpose_spark.operators.rollup import (
+    raw_partials,
+    rollup,
+    rollup_from_partials,
+)
 from repurpose_spark.operators.similarity import (
     brute_force_topk,
     cosine_scores,
@@ -359,18 +363,27 @@ def q_knn_resample_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # events: time-series operator surface on driver data
 # --------------------------------------------------------------------------
 
+def _ev_with_dec(ev):
+    """Events with ``value_dec``: the value as decimal(18,2), whose sum is
+    exact (the value column holds cents and no null)."""
+    return ev.withColumn("value_dec", F.col("value").cast("decimal(18,2)"))
+
+
+def _ev_tier(ev):
+    """Per (event_type, hour) tier of ``ev`` by rollup.py's PARTIALS
+    rule: count and sum over ``value_dec``, min and max over the double
+    ``value``."""
+    return _ev_with_dec(ev).groupBy(
+        "event_type", F.date_trunc("hour", "ts").alias("tick")
+    ).agg(
+        *raw_partials("value_dec", ("n_points", "sum_v")),
+        *raw_partials("value", ("min_v", "max_v")),
+    )
+
+
 def _ev_hourly(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            "event_type", F.date_trunc("hour", "ts").alias("tick")
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_v"),
-            F.min("value").alias("min_v"),
-            F.max("value").alias("max_v"),
-        )
+    return _ev_tier(_t(spark, sf_dir, "events")).withColumnRenamed(
+        "n_points", "n_events"
     )
 
 
@@ -382,15 +395,14 @@ def q_ev_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ev_daily_from_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """partial+final: daily re-aggregated from hourly partials (A4)."""
-    h = _ev_hourly(spark, sf_dir)
-    return (
-        h.groupBy("event_type", F.date_trunc("day", "tick").alias("tick"))
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_v").cast("decimal(18,2)").cast("double").alias("sum_v"),
-            F.min("min_v").alias("min_v"),
-            F.max("max_v").alias("max_v"),
-        )
+    h = _ev_tier(_t(spark, sf_dir, "events"))
+    return rollup_from_partials(h, "day", key_cols=["event_type"]).select(
+        "event_type",
+        "tick",
+        F.col("n_points").alias("n_events"),
+        F.col("sum_v").cast("decimal(18,2)").cast("double").alias("sum_v"),
+        "min_v",
+        "max_v",
     )
 
 
@@ -400,7 +412,7 @@ def _ev_routed(spark, sf_dir, bucket_seconds, tiers_wanted):
     serving tier, and assert the route it chose."""
     from repurpose_spark.plans.router import routed_rollup
 
-    h = _ev_hourly(spark, sf_dir).withColumnRenamed("n_events", "n_points")
+    h = _ev_tier(_t(spark, sf_dir, "events"))
     tiers = {"hourly": (h, 3600)}
     if "daily" in tiers_wanted:
         d = rollup_from_partials(h, "day", key_cols=["event_type"])
@@ -453,19 +465,8 @@ def q_ev_rollup_realtime_6h(spark: SparkSession, sf_dir: str) -> DataFrame:
     from repurpose_spark.plans.router import realtime_rollup
 
     wm = datetime(2024, 1, 10, 7, 31, 9)
-    ev = _t(spark, sf_dir, "events").withColumn(
-        "value_dec", F.col("value").cast("decimal(18,2)")
-    )
-    h = (
-        ev.where(F.col("ts") < F.lit(wm))
-        .groupBy("event_type", F.date_trunc("hour", "ts").alias("tick"))
-        .agg(
-            F.count("*").alias("n_points"),
-            F.sum("value_dec").alias("sum_v"),
-            F.min("value").alias("min_v"),
-            F.max("value").alias("max_v"),
-        )
-    )
+    ev = _ev_with_dec(_t(spark, sf_dir, "events"))
+    h = _ev_tier(ev.where(F.col("ts") < F.lit(wm)))
     out, source = realtime_rollup(
         21600,
         {"hourly": (h, 3600)},

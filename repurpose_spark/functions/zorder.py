@@ -1,16 +1,16 @@
 """Z-order (Morton) clustering key for multi-dimensional data skipping.
 
-The tier layout already handles the PRIMARY access path (cell partition
-+ tick range: hive pruning + ``compact(sort_by=['tick'])`` row-group
-stats).  A SECONDARY predicate — e.g. ``doc_id`` range within a cell, or
-(user, hour) point lookups on the events table — sees full-span min/max
-on every row group once rows are sorted by the first column alone.
-Z-ordering interleaves the bits of several normalized columns so rows
-close in the Morton curve are close in EVERY dimension: each parquet row
-group then covers a small hyper-rectangle and min/max stats prune range
-predicates on ANY of the clustered columns (the lakehouse
-``OPTIMIZE ... ZORDER BY`` maintenance move, same public technique —
-Morton 1966).
+The tier layout already handles the PRIMARY access path (cell + tick
+range: every tier file is sorted by ``(cell_id, doc_id, tick)``, so
+row-group stats prune both).  A SECONDARY predicate — e.g. ``doc_id``
+range within a cell, or (user, hour) point lookups on the events table —
+sees full-span min/max on every row group once rows are sorted by the
+first column alone.  Z-ordering interleaves the bits of several
+normalized columns so rows close in the Morton curve are close in EVERY
+dimension: each parquet row group then covers a small hyper-rectangle
+and min/max stats prune range predicates on ANY of the clustered columns
+(the lakehouse ``OPTIMIZE ... ZORDER BY`` maintenance move, same public
+technique — Morton 1966).
 
 Pure JVM expressions (bit arithmetic only, no UDF); bounds come from the
 parquet FOOTERS when the table is on storage (``parquet_footer_bounds``

@@ -27,8 +27,9 @@ from pyspark.sql import functions as F
 from repurpose_spark.plans.parallelism import write_partitions
 from repurpose_spark.sources.tables import (
     Warehouse,
+    cluster_sorted,
     is_range_layout,
-    range_sorted,
+    range_partitioned,
 )
 
 # output file size of an unpartitioned compaction, and the Iceberg
@@ -56,8 +57,10 @@ def compact_table(
 
     ``transform``: fn(df) -> df applied before the rewrite — e.g.
     remapping a partition column's values to merge partitions (the tier
-    pipeline collapses completed ``batch_id`` partitions this way) while
-    keeping the hive layout depth identical.
+    pipeline collapses its ``batch_id`` slices this way) while keeping
+    the hive layout depth identical.  A range-laid-out table applies it
+    between the range shuffle and the sort, so a merge keyed on
+    ``(cell_id, doc_id, ...)`` shuffles nothing more.
 
     ``zorder_by``: cluster rows by a Morton key over these columns, with
     bounds read from the LIVE files' parquet footers (metadata only) —
@@ -77,7 +80,8 @@ def compact_table(
     before = wh.files(table)
     chain = wh.partition_chain(table)
     df = wh.read(table)
-    if transform is not None:
+    ranged = is_range_layout(df, chain)
+    if transform is not None and not ranged:
         df = transform(df)
     if zorder_by:
         from repurpose_spark.functions.zorder import (
@@ -91,8 +95,11 @@ def compact_table(
         sort_by = list(sort_by or []) + [
             zorder_sort_key(df, zorder_by, bounds=bounds)
         ]
-    if is_range_layout(df, chain):
-        df = range_sorted(df, *(sort_by or []))
+    if ranged:
+        df = range_partitioned(df)
+        if transform is not None:
+            df = transform(df)
+        df = cluster_sorted(df, *(sort_by or []))
     else:
         # hive layout: one shuffle keyed on the partition chain, one
         # file per partition value on every core; unpartitioned:

@@ -6,25 +6,28 @@ netCDF files (img2ts.py:652, :801, mode='a' :470); a killed job can be
 rerun over the remaining date range by hand.  Here the unit is a **batch**
 (a deterministic hash-slice of doc_ids) and resume is automatic:
 
-* every batch writes its hourly tier into its own ``batch_id=<b>/``
-  directory as a few range-sorted files, committed by replacing that
-  directory's files in the manifest, so re-running an incomplete batch is
-  **idempotent** (the half-written slice is replaced, never doubled);
+* every batch writes its own ``batch_id=<b>/`` slice of each tier —
+  hourly, daily and packed — as a few range-sorted files, each committed
+  by replacing that directory's files in the manifest, so re-running an
+  incomplete batch is **idempotent** (the half-written slice is
+  replaced, never doubled);
 * a per-``(batch_id, cell_id)`` ledger row — series count + point count —
-  is committed only after the batch's data commit.  The ledger is both the
-  checkpoint (resume skips batches whose cells are all ledgered) and the
-  lineage/metrics record mandated by BASELINE.json ("per-cell checkpoints
-  with lineage and row-count metrics written alongside each snapshot");
-  with an Iceberg backend the same rows ride in snapshot summary
-  properties.
-* coarser tiers (daily, packed) are derived from the hourly partials only
-  after all batches are complete — the partial+final architecture, so raw
-  points are exploded and shuffled exactly once per batch — and only for
-  the cells of batches no finalize has covered yet, so a run with nothing
-  new never re-derives a cell from the hours retention has left (see
-  ``TierPipeline.finalize``).  Daily and packed are unpartitioned range
-  files; a refresh copies on write only the files whose ``cell_id`` range
-  meets the refreshed cells (``Warehouse.replace_cells``).
+  is committed only after the batch's three tier commits.  The ledger is
+  both the checkpoint (resume skips batches whose done marker is
+  ledgered) and the lineage/metrics record mandated by BASELINE.json
+  ("per-cell checkpoints with lineage and row-count metrics written
+  alongside each snapshot"); with an Iceberg backend the same rows ride
+  in snapshot summary properties.
+* the coarser tiers are derived from the batch's own hourly partials —
+  the partial+final architecture, so raw points are exploded and
+  shuffled exactly once per batch.  A doc lands in exactly one batch, so
+  a batch's daily and packed rows depend only on that batch: they are
+  sealed when the batch commits and never rebuilt from finer data (the
+  closed blocks of Gorilla, the sealed key × time chunks of Waterwheel).
+  Hourly retention therefore never reaches them.  Daily is a partial
+  tier like hourly: a doc_id delivered again in a later batch has one
+  row per batch until ``TierPipeline.compact`` merges them; packed holds
+  one Gorilla block per series and batch.
 
 At cluster scale a batch bounds the working set exactly like imgbuffer
 bounds memory ("chosen so that the memory of your machine is utilized",
@@ -47,12 +50,14 @@ from repurpose_spark.operators.rollup import (
 )
 from repurpose_spark.sources.tables import (
     Warehouse,
+    cluster_sorted,
+    range_partitioned,
     range_sorted,
     schema_reader,
 )
 
 LEDGER = "_ledger"
-# a cell holding more than this share of a refresh's points is hot (a
+# a cell holding more than this share of a scope's points is hot (a
 # ledger report: ranging on doc_id already splits it across files)
 HOT_CELL_THRESHOLD = 0.2
 
@@ -105,7 +110,7 @@ class TierPipeline:
         token column through the tiers (percentile continuous
         aggregates — daily p50/p99 without raw re-reads; rank-error
         bounded, functions/qsketch.py).  Downstream maintenance
-        (incremental refresh, compaction, expiry) treats it as any
+        (incremental ingest, compaction, expiry) treats it as any
         other mergeable partial column."""
         self.spark = spark
         self.wh = warehouse
@@ -210,28 +215,6 @@ class TierPipeline:
         )
         return plan
 
-    def _finalized_batches(self) -> set:
-        """Batches whose cells a finalize has provably folded into the
-        daily and packed tiers — the last 'finalize' ledger row's batch
-        set.  Each finalize extends the previous coverage with the
-        batches it refreshed.  The row commits AFTER the tier writes, so
-        a crash mid-finalize leaves its batches uncovered and the next
-        finalize refreshes them again (idempotent)."""
-        rows = [
-            r
-            for r in self.wh.snapshots(self._ledger_table())
-            if r.get("status") == "finalize"
-        ]
-        if not rows:
-            return set()
-        # a row from when the tiers kept separate sets also carries a
-        # ``packed`` set: it covers only the batches both sets hold, so a
-        # packed tier that lagged daily still gets built
-        last = rows[-1]
-        return set(last["batches"]).intersection(
-            last.get("packed", last["batches"])
-        )
-
     def _ledgered_plan(self) -> dict:
         """Last plan row per batch_id (original run + any increments)."""
         last_plan = {}
@@ -261,13 +244,12 @@ class TierPipeline:
         re-run over the new date range and appends to the same cells,
         img2ts.py:798-802).  New files become NEW batches (ids continue
         past the originals), committed to the ledger plan before any
-        processing; then the normal resumable :meth:`run` processes them
-        and its finalize refreshes the daily/packed partitions of the
-        cells they touched.  Already-planned batches are untouched: their
-        ledger 'done' markers skip them, so an increment never re-reads
-        old data.  With no new file it is a plain resume: unfinished
-        batches complete, and a finalize with nothing pending writes
-        nothing.
+        processing; then the normal resumable :meth:`run` processes them,
+        each writing its own slice of every tier.  Already-planned
+        batches are untouched: their ledger 'done' markers skip them, so
+        an increment never re-reads or rewrites old data.  With no new
+        file it is a plain resume: unfinished batches complete, and with
+        none pending it writes nothing.
 
         ``files_per_batch`` sizes the new batches (default: the original
         run's files-per-batch average, so increments inherit the same
@@ -387,7 +369,7 @@ class TierPipeline:
         fail_after_batch: int | None = None,
         input_path: str | None = None,
     ) -> dict:
-        """Process all batches (skipping ledgered ones), then finalize.
+        """Process every batch the ledger has not marked done.
 
         ``input_path`` (the scale path): slice batches by whole input
         FILES via :meth:`plan_batches` — each batch's scan reads only
@@ -401,10 +383,10 @@ class TierPipeline:
         ``fail_after_batch`` aborts after N batch commits — test hook for
         the crash/resume contract.
 
-        Returns :meth:`finalize`'s counts, which cover only the cells
-        this call refreshed: ``n_daily``/``n_packed`` rows written and
-        ``n_refreshed_cells``.  Re-running a finished job refreshes
-        nothing and returns 0 for each.
+        Returns counts over the batches this call ran: ``n_daily`` and
+        ``n_packed`` rows written and ``n_refreshed_cells``, the cells
+        those batches touched.  Re-running a finished job runs no batch
+        and returns 0 for each.
         """
         if (seqs is None) == (input_path is None):
             raise ValueError("pass exactly one of seqs= or input_path=")
@@ -418,7 +400,8 @@ class TierPipeline:
         # extend past n_batches when run_incremental appended new files
         batch_ids = sorted(plan) if plan is not None else range(n_batches)
         done = self.completed_batches()
-        n_run = 0
+        n_run = n_daily = 0
+        lineage = []
         for b in batch_ids:
             if b in done:
                 continue
@@ -434,17 +417,34 @@ class TierPipeline:
                 # ledgered with no cells, so resume still converges
                 files = plan.get(b, [])
                 batch = reader.parquet(*files) if files else None
-            per_cell = [] if batch is None else self._write_hourly(batch, b)
+            per_cell, n = (
+                ([], 0) if batch is None else self._write_tiers(batch, b)
+            )
             self._commit_batch(b, per_cell)
+            lineage += per_cell
+            n_daily += n
             n_run += 1
             if fail_after_batch is not None and n_run >= fail_after_batch:
                 raise RuntimeError(f"injected crash after batch {b}")
-        return self.finalize()
+        return {
+            "n_daily": n_daily,
+            # one packed row per series of each batch
+            "n_packed": sum(r["n_series"] for r in lineage),
+            "n_refreshed_cells": len({r["cell_id"] for r in lineage}),
+        }
 
-    def _write_hourly(self, batch: DataFrame, batch_id: int) -> list:
-        """Explode one batch to points, roll them up to the hourly tier
-        and write its ``batch_id`` partition; returns the per-cell
-        lineage rows."""
+    def _write_tiers(self, batch: DataFrame, batch_id: int) -> tuple:
+        """Explode one batch to points, roll them up to the hourly tier,
+        derive its daily and packed rows from those partials and commit
+        each tier's ``batch_id=<b>/`` slice; returns the per-cell lineage
+        rows and the number of daily rows written."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark.sql import Observation
+        from pyspark.util import inheritable_thread_target
+
+        from repurpose_spark.operators.hooks import apply_batch_hooks
+
         pts = sequences_to_points(batch, self.cfg, with_ts=False)
         hourly = rollup_points(
             pts,
@@ -455,60 +455,108 @@ class TierPipeline:
             sketch_distinct=self.sketch_distinct,
             sketch_quantiles=self.sketch_quantiles,
         ).cache()
-        try:
-            # idempotent commit: the batch owns its own ``batch_id=<b>``
-            # partition and a re-run replaces it, never doubles it;
-            # routed through the Warehouse so the Iceberg backend gets
-            # the same contract via overwritePartitions (ADVICE r1:
-            # never bypass the abstraction).  The commit records a DELTA
-            # manifest of ``batch_id=<b>/``'s files only — a full-table
-            # manifest per batch would be a sidecar QUADRATIC in
-            # n_batches (256 batches × millions of files at design
-            # scale); readers replay the deltas (Iceberg's
-            # incremental-manifest move)
+        obs = Observation()
+        # each derived tier aggregates on (cell_id, doc_id, ...) above the
+        # range shuffle of the cached hourly rows: one exchange per plan,
+        # its bounds sampled from the cache, and the encode UDFs run once
+        # in AQE-coalesced tasks
+        daily = apply_batch_hooks(
+            rollup_from_partials(range_partitioned(hourly), "day"),
+            self.postprocess,
+        )
+        packed = encode_series(
+            with_avg(range_partitioned(hourly)),
+            int_cols=["sum_v", "n_points"],
+            float_cols=["avg_v"],
+        )
+        tiers = {
+            self.hourly_table(): range_sorted(hourly),
+            self.daily_table(): cluster_sorted(daily).observe(
+                obs, F.count(F.lit(1)).alias("n")
+            ),
+            self.packed_table(): cluster_sorted(packed),
+        }
+
+        def commit(df, table):
+            # idempotent commit: the batch owns its ``batch_id=<b>/``
+            # slice and a re-run replaces it, never doubles it; routed
+            # through the Warehouse so the Iceberg backend gets the same
+            # contract via overwritePartitions (ADVICE r1: never bypass
+            # the abstraction).  The commit records a DELTA manifest of
+            # that slice's files only — a full-table manifest per batch
+            # would be a sidecar QUADRATIC in n_batches
             self.wh.overwrite_partitions(
-                range_sorted(hourly.withColumn("batch_id", F.lit(batch_id))),
-                self.hourly_table(),
+                df.withColumn("batch_id", F.lit(batch_id)),
+                table,
                 ["batch_id"],
                 metrics={"batch_id": batch_id},
                 touched_partitions=[{"batch_id": batch_id}],
             )
-            # per-cell lineage from the cached tier (tiny: ~1/unit_dt of
-            # raw), not a parquet re-read — one extra small job per batch
-            return (
-                hourly.groupBy("cell_id")
-                .agg(
-                    F.count_distinct("doc_id").alias("n_series"),
-                    F.sum("n_points").alias("n_points"),
+
+        try:
+            # the three writes go to distinct tables: overlap them so one
+            # tier's scan back-fills another's write tail.  Each thread
+            # runs under the caller's job group, description and tags;
+            # wrap each job separately, since one wrap hands its threads
+            # ONE shared copy of the local properties, and a query ending
+            # on one thread would clear another's SQL execution id
+            with ThreadPoolExecutor(max_workers=len(tiers)) as pool:
+                writes = [
+                    pool.submit(inheritable_thread_target(self.spark)(commit),
+                                df, table)
+                    for table, df in tiers.items()
+                ]
+                # per-cell lineage from the cached tier (tiny: ~1/unit_dt
+                # of raw), not a parquet re-read
+                per_cell = (
+                    hourly.groupBy("cell_id")
+                    .agg(
+                        F.count_distinct("doc_id").alias("n_series"),
+                        F.sum("n_points").alias("n_points"),
+                    )
+                    .collect()
                 )
-                .collect()
-            )
+                for w in writes:
+                    w.result()
+            return per_cell, obs.get["n"]
         finally:
             hourly.unpersist()
 
-    def compact(self, sort_by: list | None = None) -> dict:
-        """Maintenance pass on the hourly tier: collapse COMPLETED
-        batch partitions into one ``batch_id=-1`` partition of
-        range-sorted files — after many batch appends the tier holds
-        files per batch, and this rewrites them to a few byte-sized ones
-        while keeping the ``batch_id=`` hive layout (later batches
-        append cleanly).  Safe post-completion: the ledger's done markers
-        keep resume from re-running collapsed batches.  Optional
-        ``sort_by`` is appended to the range layout's row order."""
+    def compact(self) -> dict:
+        """Maintenance pass on every tier: collapse the batch slices into
+        one ``batch_id=-1`` slice of range-sorted files — after many
+        batches a tier holds files per batch, and this rewrites them to a
+        few byte-sized ones while keeping the ``batch_id=`` hive layout
+        (later batches append cleanly).  The partial tiers merge their
+        rows by their partials, so a doc_id delivered in several batches
+        comes out as a single shot writes it (daily re-applies the
+        postprocess hooks to the merged rows); packed keeps one Gorilla
+        block per series and batch.  The ledger's done markers keep
+        resume from re-running collapsed batches; the slices of a batch
+        with no done marker (a crash before its ledger commit) are
+        dropped, not collapsed, since its resume writes them again."""
+        from repurpose_spark.operators.hooks import apply_batch_hooks
         from repurpose_spark.plans.compaction import compact_table
 
-        table = self.hourly_table()
-        if not self.wh.exists(table):
-            return {}
+        b = F.col("batch_id")
+        kept = b.isin(sorted(self.completed_batches())) | (b == -1)
+        merges = {
+            self.hourly_table(): lambda df: rollup_from_partials(df, "hour"),
+            self.daily_table(): lambda df: apply_batch_hooks(
+                rollup_from_partials(df, "day"), self.postprocess
+            ),
+            self.packed_table(): lambda df: df,
+        }
         return {
             table: compact_table(
                 self.wh,
                 table,
-                sort_by=sort_by,
-                transform=lambda df: df.withColumn(
-                    "batch_id", F.lit(-1)
-                ),
+                transform=lambda df, merge=merge: merge(
+                    df.where(kept)
+                ).withColumn("batch_id", F.lit(-1)),
             )
+            for table, merge in merges.items()
+            if self.wh.exists(table)
         }
 
     def expire_snapshots(self, keep_last: int = 2) -> dict:
@@ -546,12 +594,12 @@ class TierPipeline:
         return out
 
     def _hot_cells(self, cells: list | None = None) -> list:
-        """Cells holding > ``HOT_CELL_THRESHOLD`` of the refresh scope's
-        points — from the LEDGER's per-cell lineage rows, so detection
-        costs zero Spark jobs (detect_hot_keys' count sketch would re-scan
-        the hourly tier; the ledger already IS that aggregate, and unlike
+        """Cells holding > ``HOT_CELL_THRESHOLD`` of the scope's points —
+        from the LEDGER's per-cell lineage rows, so detection costs zero
+        Spark jobs (detect_hot_keys' count sketch would re-scan the
+        hourly tier; the ledger already IS that aggregate, and unlike
         hourly batch_id partitions it survives compaction).  ``cells``
-        scopes the shares to a refresh's cell set."""
+        scopes the shares to a cell set, such as an increment's."""
         per: dict = {}
         want = set(cells) if cells is not None else None
         for r in self.ledger_rows():
@@ -569,104 +617,3 @@ class TierPipeline:
             for c in sorted(per)
             if per[c] > HOT_CELL_THRESHOLD * total
         ]
-
-    def finalize(self) -> dict:
-        """Daily and packed tiers from the hourly partials, by one
-        continuous-aggregate refresh rule: recompute exactly the cells of
-        the completed batches no finalize has covered yet.  A first run
-        covers every cell, an increment the cells its new batches touched
-        (one day's data must not rebuild years of dailies), and a run
-        with nothing pending writes nothing — so a re-run never derives a
-        cell again from hourly partials that retention has since thinned.
-
-        The cell set comes from the LEDGER's per-cell lineage rows, not a
-        batch_id filter on the hourly tier: compact() remaps completed
-        batches' partitions to batch_id=-1, so a compaction landing
-        before a finalize would make pending batches match no hourly rows
-        — their cells silently dropped while the coverage row still
-        claimed them (ADVICE r4 medium).  Ledger rows survive compaction
-        by construction; no Spark job needed either.
-
-        The refresh scans only those cells' hourly partials and replaces
-        exactly their rows in both tiers (copy-on-write of the files whose
-        cell range meets them).  Then one 'finalize'
-        ledger row records the batches the tiers now cover (previous
-        coverage + the pending batches); it commits after the tier
-        writes, so a crash mid-finalize leaves the batches pending for
-        the next run (the writes are idempotent).  Counts cover the
-        refreshed cells only.
-        """
-        covered = self._finalized_batches()
-        pending = self.completed_batches() - covered
-        cells = self._cells_of(pending)
-        out = self._refresh(cells) if cells else {"n_daily": 0, "n_packed": 0}
-        if pending:
-            self.wh._commit(
-                self._ledger_table(),
-                "finalize",
-                {"status": "finalize", "batches": sorted(covered | pending)},
-            )
-        return {**out, "n_refreshed_cells": len(cells)}
-
-    def _cells_of(self, batches: set) -> list:
-        """The cells the ledger's lineage rows record for ``batches``."""
-        return sorted({
-            r["cell_id"]
-            for r in self.ledger_rows()
-            if r.get("status") == "cell" and r["batch_id"] in batches
-        })
-
-    def _refresh(self, cells: list) -> dict:
-        """Recompute the daily and packed rows of ``cells`` from their
-        hourly partials and replace exactly those cells' rows: a
-        copy-on-write of the files whose recorded cell range meets
-        them."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark.util import inheritable_thread_target
-
-        from repurpose_spark.operators.hooks import apply_batch_hooks
-
-        hourly = (
-            self.wh.read(self.hourly_table())
-            .drop("batch_id")
-            .where(F.col("cell_id").isin(cells))
-        )
-
-        def _write(name, df, table):
-            # the row count rides the write job itself — never re-read a
-            # tier just for its lineage row (the packed re-count would
-            # scan every encoded blob again)
-            n = self.wh.replace_cells(df, table, cells)
-            self.wh._commit(table, "metrics", {"n_rows": n, "tier": name})
-            return n
-
-        daily = apply_batch_hooks(
-            rollup_from_partials(hourly, "day"), self.postprocess
-        )
-        packed = encode_series(
-            with_avg(hourly),
-            int_cols=["sum_v", "n_points"],
-            float_cols=["avg_v"],
-        )
-        # the two derived tiers are independent reads of the hourly
-        # partials writing DISTINCT tables (separate manifest dirs):
-        # overlap them so the second tier's scan back-fills the first's
-        # write tail (guide §2.6 — two jobs in flight is enough to fill
-        # stragglers without fighting for cores) (each thread runs under
-        # the caller's job group, description and tags, as the caller's
-        # own jobs do).  Wrap each job separately: one wrap hands its
-        # threads ONE shared copy of the local properties, so a query
-        # ending on one thread would clear the other's SQL execution id
-        def inherit(job):
-            return inheritable_thread_target(self.spark)(job)
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_daily = pool.submit(
-                inherit(_write), "daily", daily, self.daily_table()
-            )
-            f_packed = pool.submit(
-                inherit(_write), "packed", packed, self.packed_table()
-            )
-            return {"n_daily": f_daily.result(),
-                    "n_packed": f_packed.result()}

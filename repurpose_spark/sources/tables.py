@@ -19,9 +19,7 @@ list: a file that a crashed write left behind is never read, and
 
 Tables that carry ``cell_id`` as a data column use the range layout
 (``range_sorted``): a few byte-sized files sorted by ``(cell_id, doc_id,
-tick)`` instead of one directory per cell.  A cell-scoped rewrite
-(``replace_cells``) copies on write only the files whose recorded range
-meets the cells.
+tick)`` instead of one directory per cell.
 
 A current-state read of the Parquet twin is pinned to the table's last
 commit, as a catalog caches a table relation until ``REFRESH TABLE``.
@@ -33,7 +31,6 @@ import json
 import os
 import shutil
 import time
-from bisect import bisect_left
 from functools import reduce
 from operator import and_, or_
 
@@ -54,8 +51,25 @@ def range_sorted(df: DataFrame, *extra) -> DataFrame:
     each partition.  No partition count: AQE's coalescing sizes the
     files by bytes, and ranging on ``doc_id`` splits a hot cell across
     files and tasks once it outgrows one."""
+    return cluster_sorted(range_partitioned(df), *extra)
+
+
+def range_partitioned(df: DataFrame) -> DataFrame:
+    """The shuffle half of :func:`range_sorted`.  An aggregate grouped on
+    ``(cell_id, doc_id, ...)`` above it plans no exchange of its own (the
+    range partitioning already clusters its keys), and the shuffle's
+    bounds sampling reads ``df``, not the aggregate's output; finish with
+    :func:`cluster_sorted`."""
     keys = [c for c in CLUSTER_COLS if c in df.columns]
-    return df.repartitionByRange(*keys[:2]).sortWithinPartitions(*keys, *extra)
+    return df.repartitionByRange(*keys[:2])
+
+
+def cluster_sorted(df: DataFrame, *extra) -> DataFrame:
+    """The sort half of :func:`range_sorted`: ``df`` sorted by ``(cell_id,
+    doc_id, tick)`` (those it has), then by ``extra``, within each
+    partition."""
+    keys = [c for c in CLUSTER_COLS if c in df.columns]
+    return df.sortWithinPartitions(*keys, *extra)
 
 
 def is_range_layout(df: DataFrame, chain: list) -> bool:
@@ -225,56 +239,6 @@ class Warehouse:
             df, table, partition_by, "overwrite_partitions", metrics, replaces
         )
 
-    def replace_cells(self, df: DataFrame, table: str, cells: list) -> int:
-        """Replace every row of ``cells`` with ``df`` (rows of those cells
-        only) — the continuous-aggregate refresh of a range-laid-out
-        table.  Copy-on-write: the files whose recorded ``cell_id`` range
-        meets ``cells`` are rewritten with their other cells' rows carried
-        over, and every other file stays as it is (same name).  Returns
-        the number of rows written for ``cells``.  Iceberg branch: an
-        ``overwrite`` by the ``cell_id`` predicate (cluster-only)."""
-        from pyspark.sql import Observation
-
-        touched = F.col(RANGE_COL).isin(list(cells))
-        obs = Observation()
-        n = F.count(F.when(touched, 1)).alias("n")
-        if self.use_iceberg:
-            ident = self._ident(table)
-            try:
-                df.observe(obs, n).writeTo(ident).overwrite(touched)
-            except Exception as exc:  # noqa: BLE001 — gated below
-                self._require_missing(table, exc)
-                obs = Observation()
-                df.observe(obs, n).writeTo(ident).createOrReplace()
-            self._commit(table, "replace_cells", {})
-            return obs.get["n"]
-        want = sorted(set(cells))
-
-        def meets(entry):
-            if not entry or RANGE_COL not in entry:
-                return True  # no recorded range: may hold any cell
-            lo, hi = entry[RANGE_COL]
-            i = bisect_left(want, lo)
-            return i < len(want) and want[i] <= hi
-
-        recs = self.snapshots(table)
-        hit = [f for f, e in (self._replay(recs) or {}).items() if meets(e)]
-        # the range shuffle's bounds-sampling job runs the plan below it
-        # a second time: keep ``df`` (a packed tier's encode UDFs) to one
-        # evaluation, and count above the shuffle
-        fresh = out = df.persist()
-        try:
-            if hit:
-                carried = self._scan(table, hit, self._latest(recs, "schema"))
-                out = fresh.unionByName(carried.where(~touched))
-            self._commit_files(
-                range_sorted(out).observe(obs, n), table, [], "replace_cells",
-                replaces=lambda _state, _added: hit,
-            )
-        finally:
-            fresh.unpersist()
-        return obs.get["n"]
-
     def rewrite(
         self, df: DataFrame, table: str, mode: str, metrics=None
     ) -> dict:
@@ -322,7 +286,8 @@ class Warehouse:
         crash between 2 and 3 leaves removed files that reads no longer
         plan.  A partial commit must keep the table's recorded partition
         chain; a table written in another layout (e.g. a tier's older
-        ``cell_id=`` directories) is refused, not mixed.
+        ``cell_id=`` directories, or an unpartitioned daily tier) is
+        refused, not mixed.
 
         ``metrics``: lineage fields, or fn(added entries) -> them.
         Returns the lineage fields."""
@@ -334,8 +299,9 @@ class Warehouse:
             raise ValueError(
                 f"{table!r} is partitioned by {have}, this commit by "
                 f"{chain}: a table written in an older layout (such as "
-                "a tier's cell_id= directories) is not converted; drop "
-                "it and rebuild it"
+                "a tier's cell_id= directories, or a daily or packed tier "
+                "without batch_id= slices) is not converted; drop it and "
+                "rebuild it"
             )
         base = self.path(table)
         before = set(self.live_files(table))
@@ -641,8 +607,8 @@ class Warehouse:
         REPLACE the target rows sharing their ``key_cols`` and INSERT
         where no match exists — the late-correction primitive a
         retention pipeline needs when a source re-delivers fixed data
-        (the row-level sibling of finalize's cell-level
-        continuous-aggregate refresh).
+        (the tier pipeline itself never rewrites a row: each batch adds
+        its own ``batch_id=<b>/`` slice to every tier).
 
         Parquet-twin plan, partition-pruned: the touched partition values
         come from ``updates`` (a bounded ``.collect()`` — one row per

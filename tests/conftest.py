@@ -24,7 +24,7 @@ def spark():
 def write_batch():
     """fn(wh, df, table, batch_id, partition_by) commits ``df`` as batch
     ``batch_id``'s ``batch_id=<b>/`` slice of ``table`` — the hourly
-    tier's batch commit (``TierPipeline._write_hourly``)."""
+    tier's batch commit (``TierPipeline._write_tiers``)."""
     from pyspark.sql import functions as F
 
     def write(wh, df, table, batch_id, partition_by):

@@ -140,7 +140,7 @@ def test_pipeline_compact_collapses_batches(spark, tmp_path, write_batch):
     before = table_file_stats(wh, t)
     expect = _rows(wh.read(t).drop("batch_id"))
 
-    m = pipe.compact(sort_by=["tick"])
+    m = pipe.compact()
     after = table_file_stats(wh, t)
     assert m[t]["files_after"] == after["n_files"] < before["n_files"]
     got = wh.read(t)

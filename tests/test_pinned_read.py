@@ -235,22 +235,20 @@ def test_plan_rows_without_schema_still_resume(spark, tmp_path):
         assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-def test_finalize_jobs_carry_the_callers_group(spark, tmp_path):
-    """finalize overlaps its daily and packed writes on two threads; both
-    run their jobs under the job group set around the call."""
+def test_tier_writes_carry_the_callers_group(spark, tmp_path):
+    """run overlaps each batch's hourly, daily and packed writes on pool
+    threads; every job runs under the job group set around the call."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
     pipe = TierPipeline(spark, wh, EngineConfig(n_cells=8), job_id="t")
-    with pytest.raises(RuntimeError, match="injected crash"):
-        pipe.run(synth_sequences(spark, 60), n_batches=1, fail_after_batch=1)
     sc = spark.sparkContext
 
-    def grouped_finalize():
-        sc.setJobGroup("finalize-under-test", "finalize")
-        return pipe.finalize()
+    def grouped_run():
+        sc.setJobGroup("run-under-test", "run")
+        return pipe.run(synth_sequences(spark, 60), n_batches=1)
 
-    out, jobs = _job_log(spark, grouped_finalize)
+    out, jobs = _job_log(spark, grouped_run)
     assert out["n_packed"] == 60
-    assert jobs and {j["group"] for j in jobs} == {"finalize-under-test"}
+    assert jobs and {j["group"] for j in jobs} == {"run-under-test"}
 
 
 def test_expire_tier_runs_only_its_write(spark, tmp_path):

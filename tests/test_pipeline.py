@@ -136,35 +136,143 @@ def test_refresh_after_retention_keeps_daily_history(spark, seqs, tmp_path):
     assert out["n_new_files"] == 0 and out["n_refreshed_cells"] == 0
 
 
-def test_finalize_builds_the_packed_tier_a_split_coverage_row_left(
-    spark, seqs, tmp_path
+def test_increment_after_retention_keeps_daily_and_packed_history(
+    spark, tmp_path
 ):
-    """A finalize row from when the tiers kept separate coverage sets
-    covers only the batches both sets hold: after a row recording daily
-    over batches 0-1 and packed over none, finalize builds the whole
-    packed tier, equal to a single-shot run's, and rewrites daily with
-    the same rows."""
+    """The coarser tiers keep what hourly retention drops, also when an
+    increment then touches every cell: each batch seals its own daily
+    and packed rows, so after retention at 02:00 and 20 held-back docs
+    the tiers equal a single shot over all the input (a rebuild of the
+    touched cells from the hours retention left read 10,926 daily points
+    here, against 32,959)."""
+    seqs = synth_sequences(spark, N_DOCS + 20)
+    path = str(tmp_path / "input")
+    held_back = F.col("doc_id") >= f"doc{N_DOCS:08d}"
+    seqs.where(~held_back).repartition(4).write.parquet(path)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    pipe = TierPipeline(spark, wh, CFG, job_id="t")
+    pipe.run(input_path=path, n_batches=2)
+    pipe.apply_retention({"hourly": "2020-01-01 02:00:00"})
+    seqs.where(held_back).repartition(1).write.mode("append").parquet(path)
+    out = pipe.run_incremental(path)
+    assert out["n_new_files"] == 1 and out["n_refreshed_cells"] == 8
+
+    wh2 = Warehouse(spark, str(tmp_path / "wh2"))
+    TierPipeline(spark, wh2, CFG, job_id="t").run(input_path=path, n_batches=3)
+    cols = ["cell_id", "doc_id", "n_points"]
+    assert _sorted(wh.read("t_daily"), cols) == _sorted(
+        wh2.read("t_daily"), cols
+    )
+    total = wh.read("t_daily").agg(F.sum("n_points")).collect()[0][0]
+    assert total == 32_959
+    packed = [c for c in wh2.read("t_packed").columns if c != "batch_id"]
+    assert _sorted(wh.read("t_packed"), packed) == _sorted(
+        wh2.read("t_packed"), packed
+    )
+    assert wh.read("t_packed").count() == N_DOCS + 20
+
+
+def test_crash_between_hourly_and_daily_commits_resumes(
+    spark, seqs, tmp_path, monkeypatch
+):
+    """A batch whose hourly slice committed but whose daily commit
+    crashed has no done marker: the resume re-runs it, replacing each
+    tier's slice, and every tier equals a single shot's."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    pipe = TierPipeline(spark, wh, CFG, job_id="t")
+    commit = wh.overwrite_partitions
+
+    def crash(df, table, *args, **kwargs):
+        if table == pipe.daily_table():
+            raise RuntimeError("crash before the daily commit")
+        return commit(df, table, *args, **kwargs)
+
+    monkeypatch.setattr(wh, "overwrite_partitions", crash)
+    with pytest.raises(RuntimeError, match="before the daily commit"):
+        pipe.run(seqs, n_batches=2)
+    monkeypatch.undo()
+    assert pipe.completed_batches() == set()
+    assert wh.files(pipe.hourly_table()) and not wh.files(pipe.daily_table())
+    pipe.run(seqs, n_batches=2)
+    assert pipe.completed_batches() == {0, 1}
+
+    wh2 = Warehouse(spark, str(tmp_path / "wh2"))
+    TierPipeline(spark, wh2, CFG, job_id="t").run(seqs, n_batches=2)
+    for table in ("t_hourly", "t_daily", "t_packed"):
+        cols = sorted(wh2.read(table).columns)
+        assert _sorted(wh.read(table), cols) == _sorted(
+            wh2.read(table), cols
+        ), table
+
+
+def test_doc_delivered_in_two_batches_merges_on_compaction(spark, tmp_path):
+    """Daily is a partial tier: a doc_id delivered again in a later batch
+    has one daily row per batch, whose merge equals a single shot's, and
+    compact() merges them into that one row.  Packed keeps one Gorilla
+    block per series and batch."""
+    from repurpose_spark.operators.rollup import rollup_from_partials
+
+    seqs = synth_sequences(spark, 30)
+    again = F.col("doc_id") == "doc00000003"
+    path = str(tmp_path / "input")
+    seqs.repartition(1).write.parquet(path)
+    seqs.where(again).repartition(1).write.mode("append").parquet(path)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    pipe = TierPipeline(spark, wh, CFG, job_id="t")
+    pipe.run(input_path=path, n_batches=2)
+    wh1 = Warehouse(spark, str(tmp_path / "one"))
+    TierPipeline(spark, wh1, CFG, job_id="t").run(input_path=path, n_batches=1)
+    want = {t: _sorted(wh1.read(t), TIER_COLS) for t in ("t_hourly", "t_daily")}
+
+    daily = wh.read("t_daily")
+    n_days = wh1.read("t_daily").where(again).count()
+    assert n_days and daily.where(again).count() == 2 * n_days
+    assert daily.where(again).select("batch_id").distinct().count() == 2
+    merged = rollup_from_partials(daily.drop("batch_id"), "day")
+    assert _sorted(merged, TIER_COLS) == want["t_daily"]
+
+    pipe.compact()
+    for table in ("t_hourly", "t_daily"):
+        assert _sorted(wh.read(table), TIER_COLS) == want[table], table
+    assert wh.read("t_packed").where(again).count() == 2
+
+
+def test_refuses_an_unpartitioned_daily_tier(spark, tmp_path):
+    """A daily tier written before each batch wrote its own slice
+    (unpartitioned range files) is refused with a clear error, not mixed
+    with batch slices; the batch stays undone."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    old = synth_sequences(spark, 10).select(
+        F.lit(1).alias("cell_id"), "doc_id"
+    )
+    wh.write(old, "t_daily")
+    pipe = TierPipeline(spark, wh, CFG, job_id="t")
+    with pytest.raises(ValueError, match="older layout"):
+        pipe.run(synth_sequences(spark, 20), n_batches=1)
+    assert pipe.completed_batches() == set()
+
+
+def test_a_legacy_finalize_row_is_ignored(spark, seqs, tmp_path):
+    """A 'finalize' coverage row, as ledgers kept when a separate pass
+    derived the daily and packed tiers, changes nothing: each batch still
+    writes its own daily and packed slices, equal to a single-shot
+    run's."""
     wh_a = Warehouse(spark, str(tmp_path / "a"))
     TierPipeline(spark, wh_a, CFG, job_id="t").run(seqs, n_batches=2)
 
     wh = Warehouse(spark, str(tmp_path / "b"))
     pipe = TierPipeline(spark, wh, CFG, job_id="t")
-    pipe.run(seqs, n_batches=2)
-    cols = sorted(wh.read(pipe.daily_table()).columns)
-    daily = _sorted(wh.read(pipe.daily_table()), cols)
     wh._commit(
         pipe._ledger_table(), "finalize",
         {"status": "finalize", "batches": [0, 1], "packed": []},
     )
-    assert pipe._finalized_batches() == set()
-    out = pipe.finalize()
+    out = pipe.run(seqs, n_batches=2)
     assert out["n_packed"] == N_DOCS
-    assert _sorted(wh.read(pipe.daily_table()), cols) == daily
-    cols = sorted(wh_a.read(pipe.packed_table()).columns)
-    assert _sorted(wh.read(pipe.packed_table()), cols) == _sorted(
-        wh_a.read(pipe.packed_table()), cols
-    )
-    assert pipe._finalized_batches() == {0, 1}
+    for table in (pipe.daily_table(), pipe.packed_table()):
+        cols = sorted(wh_a.read(table).columns)
+        assert _sorted(wh.read(table), cols) == _sorted(
+            wh_a.read(table), cols
+        ), table
 
 
 def test_retention_commits_its_manifest(spark, seqs, tmp_path):
@@ -532,11 +640,10 @@ def _meets(entry, cells):
 def test_incremental_finalize_refreshes_only_affected_cells(
     spark, tmp_path, small_files
 ):
-    """Continuous-aggregate refresh: an increment recomputes daily/packed
-    rows ONLY for cells its new docs touch, as a copy-on-write of the
-    files whose recorded cell range meets them; every other file keeps
-    its name and mtime (not rewritten), and the result equals a full
-    recompute."""
+    """An increment writes only its own batch slice of the daily and
+    packed tiers: it removes no file of the earlier batches (every one
+    keeps its name, entry and mtime), every file it adds lies under its
+    new ``batch_id=``, and the result equals a full recompute."""
     import os
 
     cfg = EngineConfig(n_cells=64)
@@ -559,18 +666,13 @@ def test_incremental_finalize_refreshes_only_affected_cells(
     extra.repartition(1).write.mode("append").parquet(path)
     out = pipe.run_incremental(path)
     assert 0 < out["n_refreshed_cells"] <= 3
-    cells = {
-        r["cell_id"] for r in wh.read(pipe.hourly_table())
-        .where(F.col("doc_id") >= "doc00000150").select("cell_id").collect()
-    }
+    assert pipe.completed_batches() == {0, 1, 2}
     for t in tiers:
         after = snap(t)
-        hit = {f for f, (e, _) in before[t].items() if _meets(e, cells)}
-        assert hit and not hit & set(after), t  # rewritten
-        untouched = set(before[t]) - hit
-        assert untouched, t
-        for f in untouched:  # identical file names AND mtimes
+        for f in before[t]:  # identical file names, entries AND mtimes
             assert after[f] == before[t][f]
+        added = set(after) - set(before[t])
+        assert added and all(f.startswith("batch_id=2/") for f in added), t
 
     # equality with a full recompute over the combined input
     wh2 = Warehouse(spark, str(tmp_path / "wh2"))
@@ -632,18 +734,16 @@ def test_lpt_assign_heap_matches_naive_argmin():
 
 
 def test_incremental_heals_crash_before_finalize(spark, seqs, tmp_path):
-    """ADVICE r3 medium #1: the original run crashes BEFORE its finalize
+    """ADVICE r3 medium #1: the original run crashes before its end
     (some batches done, some not), then new files arrive.  The increment
-    must fold EVERY batch the daily tier has never seen — done-but-
-    unfinalized and resumed alike — into the refresh, matching a full
-    recompute."""
+    completes the unfinished batch as well as its new one, and the daily
+    and packed tiers match a full recompute."""
     path = _write_input(spark, seqs, tmp_path, n_files=4)
     wh = Warehouse(spark, str(tmp_path / "wh"))
     pipe = TierPipeline(spark, wh, CFG, job_id="t")
     with pytest.raises(RuntimeError, match="injected crash"):
         pipe.run(input_path=path, n_batches=2, fail_after_batch=1)
     assert pipe.completed_batches() == {0}
-    assert pipe._finalized_batches() == set()  # finalize never ran
 
     extra = synth_sequences(spark, N_DOCS + 50).where(
         F.col("doc_id") >= f"doc{N_DOCS:08d}"
@@ -651,7 +751,6 @@ def test_incremental_heals_crash_before_finalize(spark, seqs, tmp_path):
     extra.repartition(2).write.mode("append").parquet(path)
     pipe.run_incremental(path)
     assert pipe.completed_batches() == {0, 1, 2}
-    assert pipe._finalized_batches() == {0, 1, 2}
 
     wh2 = Warehouse(spark, str(tmp_path / "wh2"))
     TierPipeline(spark, wh2, CFG, job_id="t").run(input_path=path, n_batches=3)
@@ -666,19 +765,16 @@ def test_incremental_heals_crash_before_finalize(spark, seqs, tmp_path):
 
 
 def test_incremental_heals_despite_compaction(spark, seqs, tmp_path):
-    """ADVICE r4 medium: compact() remaps completed batches' hourly
-    partitions to batch_id=-1; if it runs inside the crash-before-
-    finalize window, a batch_id-based refresh would match no hourly rows
-    and silently drop the stale batches' cells from the daily/packed
-    refresh while still marking them covered.  The affected-cell set now
-    comes from ledger lineage rows, which compaction never rewrites."""
+    """ADVICE r4 medium: compact() remaps the batches' slices of every
+    tier to batch_id=-1.  A compaction between a crashed run and the
+    increment that resumes it must not drop or double any batch's daily
+    and packed rows: the result matches a full recompute."""
     path = _write_input(spark, seqs, tmp_path, n_files=4)
     wh = Warehouse(spark, str(tmp_path / "wh"))
     pipe = TierPipeline(spark, wh, CFG, job_id="t")
     with pytest.raises(RuntimeError, match="injected crash"):
         pipe.run(input_path=path, n_batches=2, fail_after_batch=2)
     assert pipe.completed_batches() == {0, 1}
-    assert pipe._finalized_batches() == set()  # crash before finalize
     pipe.compact()  # maintenance lands in the crash window
     hourly = wh.read(pipe.hourly_table())
     assert hourly.select("batch_id").distinct().collect()[0][0] == -1
@@ -688,7 +784,6 @@ def test_incremental_heals_despite_compaction(spark, seqs, tmp_path):
     )
     extra.repartition(2).write.mode("append").parquet(path)
     pipe.run_incremental(path)
-    assert pipe._finalized_batches() == {0, 1, 2}
 
     wh2 = Warehouse(spark, str(tmp_path / "wh2"))
     TierPipeline(spark, wh2, CFG, job_id="t").run(input_path=path, n_batches=3)
@@ -700,6 +795,37 @@ def test_incremental_heals_despite_compaction(spark, seqs, tmp_path):
         == wh2.read("t_packed").count()
         == N_DOCS + 50
     )
+
+
+def test_compaction_drops_an_unfinished_batch(spark, seqs, tmp_path):
+    """A batch that committed its tier slices but crashed before its
+    ledger rows has no done marker: a compaction in that window drops its
+    slices instead of collapsing them into batch_id=-1, so the resume
+    that writes them again doubles no row."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    pipe = TierPipeline(spark, wh, CFG, job_id="t")
+    commit = pipe._commit_batch
+
+    def crash(batch_id, per_cell):
+        if batch_id == 1:
+            raise RuntimeError("crash before the ledger commit")
+        return commit(batch_id, per_cell)
+
+    pipe._commit_batch = crash
+    with pytest.raises(RuntimeError, match="before the ledger commit"):
+        pipe.run(seqs, n_batches=2)
+    pipe._commit_batch = commit
+    assert pipe.completed_batches() == {0}
+    pipe.compact()
+    pipe.run(seqs, n_batches=2)
+
+    wh2 = Warehouse(spark, str(tmp_path / "wh2"))
+    TierPipeline(spark, wh2, CFG, job_id="t").run(seqs, n_batches=2)
+    for table in ("t_hourly", "t_daily"):
+        assert _sorted(wh.read(table), TIER_COLS) == _sorted(
+            wh2.read(table), TIER_COLS
+        ), table
+    assert wh.read("t_packed").count() == N_DOCS
 
 
 def test_assign_files_mixed_schemes_falls_back_round_robin(spark, tmp_path):

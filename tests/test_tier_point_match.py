@@ -1,5 +1,5 @@
 """Exact tier-wise point-match of the FULL durable pipeline output
-(warehouse tables, after checkpointed batches + finalize) against the
+(warehouse tables, after checkpointed batches) against the
 single-process numpy oracle — the BASELINE.json correctness criterion
 ("every rolled-up point must match the reference implementation's
 output at each tier"), plus decode(pack) == hourly bit-exactness."""

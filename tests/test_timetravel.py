@@ -249,9 +249,10 @@ def test_partition_overwrite_manifests_are_deltas(spark, tmp_path):
 
 
 def test_incremental_finalize_commits_partition_delta(spark, tmp_path):
-    """TierPipeline.run_incremental's tier refresh rides a delta
-    manifest: the daily commit lists the files it removed and added, not
-    the whole tier."""
+    """TierPipeline.run_incremental's daily write rides a delta
+    manifest: each batch's commit lists the files it removed and added
+    under its own ``batch_id=`` slice, not the whole tier, and an
+    increment removes no file of an earlier batch."""
     from repurpose_spark.config import EngineConfig
     from repurpose_spark.plans.pipeline import TierPipeline
     from repurpose_spark.sources.synthetic import synth_sequences
@@ -269,11 +270,13 @@ def test_incremental_finalize_commits_partition_delta(spark, tmp_path):
     assert out["n_refreshed_cells"] > 0
 
     recs = [s for s in wh.snapshots("inc_daily")
-            if s.get("mode") == "replace_cells"]
-    assert len(recs) == 2, "incremental refresh must commit the daily tier"
+            if s.get("mode") == "overwrite_partitions"]
+    assert len(recs) == 2, "incremental run must commit the daily tier"
     assert all("added" in r and "files" not in r for r in recs)
-    assert recs[-1]["removed"] and set(recs[-1]["removed"]) <= set(
-        recs[0]["added"]
+    assert [r["batch_id"] for r in recs] == [0, 1]
+    assert not recs[-1]["removed"]
+    assert recs[-1]["added"] and all(
+        f.startswith("batch_id=1/") for f in recs[-1]["added"]
     )
     tiers = wh.read("inc_daily")
     assert tiers.count() > 0
